@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Prints the ANN tuning frontier as a markdown table: mean recall@5 vs
@@ -15,16 +14,8 @@ import org.apache.spark.sql.functions._
   */
 object AnnFrontier {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = args.headOption.getOrElse(Harness.sfDir)
+    val spark = Harness.session(Harness.cpus)
 
     val embRaw = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
     val emb = embRaw.select(col("vec_id"),

@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import graft.Harness.jsonString
 
 /** Benchmark main. Prints the full JSON record on one line:
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...,
@@ -22,28 +23,11 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def jsonStr(s: String): String =
-      "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c    => c.toString
-      } + "\""
+    // optional args = local-iteration subset (none = the whole registry)
+    val names = Harness.select(args.toSeq)
+    val sfDir = Harness.sfDir
+    val cpus = Harness.cpus
+    val spark = Harness.session(cpus)
 
     // Fixed-cost probe: a hash-mix sum over spark.range(10M), in DOUBLE
     // space so the fold cannot overflow under ANSI mode (the long-space
@@ -52,38 +36,13 @@ object Bench {
     // code path under test; its time is a pure function of box weather.
     // Isolated exactly like a query: a probe failure is REPORTED in the
     // calibration object, never allowed to zero the artifact.
-    def calibrateOnce(): Either[String, Double] = {
-      val t0 = System.nanoTime()
-      try {
+    def calibrateOnce(): Either[String, Double] =
+      Harness.time {
         spark.range(10000000L)
           .selectExpr("sum(cast(id as double) * 2654435761.0) as s", "count(*) as n")
           .collect()
-        Right((System.nanoTime() - t0) / 1e9)
-      } catch {
-        case t: Throwable =>
-          Left(s"${t.getClass.getSimpleName}: ${Option(t.getMessage).getOrElse("").take(200)}")
-      }
-    }
+      }.map(_._1)
     def round3(d: Double): Double = math.rint(d * 1000) / 1000
-
-    // steady-state timing: two runs per query, report the min — the first
-    // absorbs janino codegen/JIT/parquet-footer warmup, and min-of-2 is
-    // robust to transient GC pauses from accumulated broadcast state
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[String, Double] = {
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).count()
-        Right((System.nanoTime() - t0) / 1e9)
-      } catch {
-        case t: Throwable =>
-          Left(s"${t.getClass.getSimpleName}: ${Option(t.getMessage).getOrElse("").take(200)}")
-      } finally
-        // release GlobalOrder's pinned projections between queries:
-        // holding them across 300+ queries would leak cache blocks the
-        // box never reclaims. BLOCKING, so the async block removal of
-        // run 1 cannot overlap — and add noise to — run 2's timed span
-        graft.operators.GlobalOrder.release(blocking = true)
-    }
 
     // five samples per calibration point (was min-of-2): the probe feeds
     // total_normalized, and a min over two loaded samples swung the r13
@@ -96,10 +55,8 @@ object Bench {
     // resolution are discarded (a zero/near-zero reading would turn the
     // normalization into Infinity/garbage instead of null).
     def calibrate(): (List[Double], Option[String]) = {
-      val runs = List.fill(5)(calibrateOnce())
-      val ok = runs.collect { case Right(d) => d }.filter(_ > 1e-3)
-      val err = runs.collectFirst { case Left(m) => m }
-      (ok, err)
+      val (errs, runs) = List.fill(5)(calibrateOnce()).partitionMap(identity)
+      (runs.filter(_ > 1e-3), errs.headOption)
     }
     def median(xs: List[Double]): Option[Double] = {
       if (xs.isEmpty) None
@@ -114,37 +71,27 @@ object Bench {
     calibrateOnce()
     val (calibBeforeRuns, calibBeforeErr) = calibrate()
 
-    case class QResult(runs: List[Double], err: Option[String])
-    // optional args = local-iteration subset (the driver passes none)
-    val wanted: String => Boolean =
-      if (args.isEmpty) _ => true else args.toSet
-    val results: Seq[(String, QResult)] = SparkEntry.queries.toSeq
-      .filter(kv => wanted(kv._1)).map { case (name, fn) =>
-      val a = timeOnce(fn)
-      val b = a match {
-        case Right(_) => timeOnce(fn)
-        case Left(_)  => a // don't re-run a broken query
-      }
-      val runs = List(a, b).collect { case Right(d) => round3(d) }
-      val err = List(a, b).collectFirst { case Left(m) => m }
-      name -> QResult(runs, err)
+    // steady state: min-of-2 over the count sink; (name, ok runs, failure)
+    val results: Seq[(String, List[Double], Option[String])] = names.map { name =>
+      val (errs, runs) = Harness.runTwice(spark, name, sfDir, Harness.Sink.Count).partitionMap(identity)
+      (name, runs.map(r => round3(r.seconds)), errs.headOption)
     }
 
     val (calibAfterRuns, calibAfterErr) = calibrate()
     val calibBefore = median(calibBeforeRuns)
     val calibAfter = median(calibAfterRuns)
 
-    val ok = results.collect { case (n, QResult(runs, None)) => n -> runs.min }
+    val ok = results.collect { case (n, runs, None) => n -> runs.min }
     val total = round3(ok.map(_._2).sum)
-    val qs = ok.map { case (k, v) => jsonStr(k) + ":" + v }.mkString("{", ",", "}")
-    val runsJson = results
-      .map { case (k, r) => jsonStr(k) + ":" + r.runs.mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
+    def jsonObject(kvs: Seq[(String, Any)]): String =
+      kvs.map { case (k, v) => jsonString(k) + ":" + v }.mkString("{", ",", "}")
+    val qs = jsonObject(ok)
+    val runsJson = jsonObject(results.map { case (k, runs, _) => k -> runs.mkString("[", ",", "]") })
     val errsJson = results
-      .collect { case (n, QResult(_, Some(m))) => s"""{"query":${jsonStr(n)},"error":${jsonStr(m)}}""" }
+      .collect { case (n, _, Some(m)) => s"""{"query":${jsonString(n)},"error":${jsonString(m)}}""" }
       .mkString("[", ",", "]")
     def calibVal(v: Option[Double]): String = v.map(d => round3(d).toString).getOrElse("null")
-    val calibErrs = (calibBeforeErr.toList ++ calibAfterErr.toList).map(jsonStr)
+    val calibErrs = (calibBeforeErr.toList ++ calibAfterErr.toList).map(jsonString)
     // cross-round normalization: ambient box load swung the r12 driver
     // total 1.4× vs the same-commit uncontended rerun. The probe is a
     // pure function of box weather, so total × (PROBE_REF / probe) re-
@@ -186,7 +133,7 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,""" +
       s""""total_normalized":$totalNormJson,""" +
       s""""total_normalized_median":$totalNormJson,"total_normalized_min":$totalNormMinJson,""" +
-      s""""queries":$qs,"sf":${jsonStr(sfDir)},""" +
+      s""""queries":$qs,"sf":${jsonString(sfDir)},""" +
       s""""ok_count":${ok.size},"error_count":${results.size - ok.size},""" +
       s""""errors":$errsJson,"runs":$runsJson,"calibration":$calibJson}"""
     println(fullLine)
@@ -201,21 +148,18 @@ object Bench {
     try {
       val payload = (fullLine + "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      java.nio.file.Files.write(java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_latest.json")),
-        payload)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"bench_latest_c$cpus.json"), payload)
+      val out = java.nio.file.Paths.get(Harness.benchOut)
+      java.nio.file.Files.write(out, payload)
+      java.nio.file.Files.write(out.resolveSibling(s"bench_latest_c$cpus.json"), payload)
     } catch { case _: Throwable => () } // never let the file write kill the bench
     // compact tail-survivor: everything a grader needs if the full line
     // is truncated again (worst-5 = the slowest five, where any perf
     // regression worth chasing will appear)
-    val worst5 = ok.sortBy(-_._2).take(5)
-      .map { case (k, v) => jsonStr(k) + ":" + v }.mkString("{", ",", "}")
+    val worst5 = jsonObject(ok.sortBy(-_._2).take(5))
     println(
       s"""{"metric":"total_compact","value":$total,"unit":"sec","cpus":$cpus,""" +
       s""""total_normalized":$totalNormJson,"total_normalized_min":$totalNormMinJson,""" +
-      s""""sf":${jsonStr(sfDir)},""" +
+      s""""sf":${jsonString(sfDir)},""" +
       s""""ok_count":${ok.size},"error_count":${results.size - ok.size},""" +
       s""""worst5":$worst5,"calibration":$calibJson}""")
     spark.stop()

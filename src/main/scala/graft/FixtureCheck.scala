@@ -61,29 +61,32 @@ object FixtureCheck {
     )
   }
 
+  /** `table`'s schema as read from `dir`, or why it is unreadable. */
+  private def readSchema(spark: SparkSession, dir: String, table: String): Either[String, StructType] =
+    try Right(spark.read.parquet(s"$dir/$table.parquet").schema)
+    catch { case e: Exception => Left(e.getMessage.linesIterator.next()) }
+
   /** Returns drift messages (empty = clean) for one SF dir. */
   def check(spark: SparkSession, dir: String): Seq[String] =
     expected.flatMap { case (table, cols) =>
-      try {
-        val actual = spark.read.parquet(s"$dir/$table.parquet").schema
-        val actualByName = actual.fields.map(f => f.name -> f.dataType).toMap
-        val missing = cols.collect {
-          case (name, _) if !actualByName.contains(name) =>
-            s"$dir/$table: expected column `$name` is missing"
-        }
-        val mismatched = cols.collect {
-          case (name, ok) if actualByName.get(name).exists(t => !ok(t)) =>
-            s"$dir/$table.$name: read type ${actualByName(name).simpleString}" +
-              s" not in {${ok.map(_.simpleString).mkString(", ")}}"
-        }
-        val extra = actual.fieldNames.toSeq.diff(cols.map(_._1)).map { name =>
-          s"$dir/$table: unexpected new column `$name`" +
-            s" (${actualByName(name).simpleString})"
-        }
-        missing ++ mismatched ++ extra
-      } catch {
-        case e: Exception =>
-          Seq(s"$dir/$table: unreadable — ${e.getMessage.linesIterator.next()}")
+      readSchema(spark, dir, table) match {
+        case Left(err) => Seq(s"$dir/$table: unreadable — $err")
+        case Right(actual) =>
+          val actualByName = actual.fields.map(f => f.name -> f.dataType).toMap
+          val missing = cols.collect {
+            case (name, _) if !actualByName.contains(name) =>
+              s"$dir/$table: expected column `$name` is missing"
+          }
+          val mismatched = cols.collect {
+            case (name, ok) if actualByName.get(name).exists(t => !ok(t)) =>
+              s"$dir/$table.$name: read type ${actualByName(name).simpleString}" +
+                s" not in {${ok.map(_.simpleString).mkString(", ")}}"
+          }
+          val extra = actual.fieldNames.toSeq.diff(cols.map(_._1)).map { name =>
+            s"$dir/$table: unexpected new column `$name`" +
+              s" (${actualByName(name).simpleString})"
+          }
+          missing ++ mismatched ++ extra
       }
     }
 
@@ -111,25 +114,14 @@ object FixtureCheck {
   def main(args: Array[String]): Unit = {
     val dirs =
       if (args.nonEmpty) args.toSeq
-      else Seq("sf0.001", "sf0.01", "sf0.1").map("/root/testdata/" + _)
+      else Seq("sf0.001", "sf0.01", "sf0.1").map(s"${Harness.FixtureRoot}/" + _)
         .filter(d => new java.io.File(d).exists())
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     dirs.foreach { d =>
       println(s"== $d ==")
       expected.foreach { case (table, _) =>
-        try {
-          val s = spark.read.parquet(s"$d/$table.parquet").schema
-          println(f"  $table%-12s ${s.simpleString}")
-        } catch {
-          case e: Exception => println(f"  $table%-12s UNREADABLE: ${e.getMessage}")
-        }
+        val schema = readSchema(spark, d, table).fold("UNREADABLE: " + _, _.simpleString)
+        println(f"  $table%-12s $schema")
       }
     }
     val drift = dirs.flatMap(d => check(spark, d) ++ checkEventsLoader(spark, d))

@@ -16,7 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `Release.partitionedEdgeCache` edge frames). The pins land on
   * GlobalOrder's default handle; the caller that materializes the
   * result MUST drain them afterwards via `GlobalOrder.release()` —
-  * Verify, Bench, ScaleProbe, and the spec harness all do, per query.
+  * [[graft.Harness.run]] does, per query, for every main and spec sweep.
   * A caller that skips the release leaks pinned blocks per invocation
   * (disk-backed blocks are never LRU-reclaimed until context shutdown).
   * Concurrent callers in one JVM wrap execution in

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Growth-under-scale probe: materializes a FACTOR× (default 10×, ≈sf1)
@@ -37,16 +37,8 @@ object ScaleProbe {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val subset = args.drop(3).toSet
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val subset = Harness.select(args.drop(3).toSeq).toSet
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setCheckpointDir(s"$dst/_checkpoints")
 
     def base(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
@@ -74,9 +66,7 @@ object ScaleProbe {
       if (!done(name))
         base(name).write.mode("overwrite").parquet(s"$dst/$name.parquet")
 
-    val alreadyScaled =
-      new java.io.File(s"$dst/embeddings.parquet/_SUCCESS").exists()
-    if (alreadyScaled) println(s"reusing scaled tables in $dst")
+    if (done("embeddings")) println(s"reusing scaled tables in $dst")
     else {
     println(s"scaling $src -> $dst at ${factor}x ...")
     copyAsIs("region"); copyAsIs("nation")
@@ -281,28 +271,15 @@ object ScaleProbe {
       "q_turning_points", "q_spectral_entropy", "q_wilcoxon",
       // round 15 (standing rule: join/window ⇒ probe)
       "q_dup_spans", "q_dup_span_cut", "q_contamination_spans")
-      .filter(SparkEntry.queries.contains)
-      .filter(q => subset.isEmpty || subset(q))
+      .filter(subset)
 
-    // returns (cold = run 1, min-of-2, rows). r16 (verdict item 5):
-    // pins are RELEASED between the two runs — run 2 recomputes from
-    // the parquet inputs for every query, matching Bench.timeOnce's
-    // contract, so the warm column means one thing for all queries.
-    // (Pre-r16 probe rows let run 2 replay run 1's pinned caches, so
-    // their warm/min columns for self-pinning queries measured a cache
-    // read — compare those rows on the COLD column only.)
-    def timeMin2(name: String, dir: String): (Double, Double, Long) = {
-      def once(): (Double, Long) = {
-        val t0 = System.nanoTime()
-        try {
-          val n = SparkEntry.queries(name)(spark, dir).count()
-          ((System.nanoTime() - t0) / 1e9, n)
-        } finally graft.operators.GlobalOrder.release(blocking = true)
-      }
-      val a = once(); val b = once()
-      (a._1, math.min(a._1, b._1), b._2)
-    }
-
+    // cold = run 1, min = min-of-2. r16 (verdict item 5): pins are
+    // RELEASED between the two runs (Harness.run always releases) — run 2
+    // recomputes from the parquet inputs for every query, matching
+    // Bench's contract, so the warm column means one thing for all
+    // queries. (Pre-r16 probe rows let run 2 replay run 1's pinned
+    // caches, so their warm/min columns for self-pinning queries measured
+    // a cache read — compare those rows on the COLD column only.)
     // Queries whose 100× rows showed ±30% run-to-run spread on IDENTICAL
     // code (q_hub_robustness: 48.3–78.7 s across r13/r14 same-day
     // samples — the after-CC star contraction is checkpoint-I/O-bound):
@@ -312,41 +289,29 @@ object ScaleProbe {
     // the [min–max] range — BENCH.md ledger rows for them must quote
     // the range, never a point.
     val HighVariance = Set("q_hub_robustness")
-    def timeHV(name: String, dir: String): (String, String, Long) = {
-      val samples = (1 to 3).map { _ =>
-        val r = timeMin2(name, dir)
-        graft.operators.GlobalOrder.release(blocking = true)
-        r
+    final case class Cell(cold: Double, min: Double, rows: Long)
+    def samples(q: String, dir: String): Either[String, List[Cell]] =
+      (1 to (if (HighVariance(q)) 3 else 1)).foldLeft[Either[String, List[Cell]]](Right(Nil)) {
+        (acc, _) => acc.flatMap { cs =>
+          val (errs, runs) = Harness.runTwice(spark, q, dir, Harness.Sink.Count).partitionMap(identity)
+          errs.headOption.toLeft(
+            cs :+ Cell(runs.head.seconds, runs.map(_.seconds).min, runs.last.rows.getOrElse(0L)))
+        }
       }
-      def med(xs: Seq[Double]): Double = xs.sorted.apply(1)
-      def cell(xs: Seq[Double]): String =
-        f"${med(xs)}%.2f [${xs.min}%.2f–${xs.max}%.2f]"
-      (cell(samples.map(_._2)), cell(samples.map(_._1)), samples.head._3)
-    }
+    def cell(xs: List[Double]): String =
+      if (xs.size == 1) f"${xs.head}%.2f"
+      else f"${xs.sorted.apply(1)}%.2f [${xs.min}%.2f–${xs.max}%.2f]"
 
+    println("probe_semantics=2 (pins released between runs, r16)")
     println(f"| query | t@1x (s) | cold@1x | rows@1x | t@${factor}x (s) | cold@${factor}x | rows@${factor}x | growth |")
     println("|---|---:|---:|---:|---:|---:|---:|---:|")
     for (q <- probeQueries) {
-      try {
-        if (HighVariance(q)) {
-          val (t1, c1, n1) = timeHV(q, src)
-          val (tN, cN, nN) = timeHV(q, dst)
-          println(s"| $q | $t1 | $c1 | $n1 | $tN | $cN | $nN | median-of-3 |")
-        } else {
-        val (c1, t1, n1) = timeMin2(q, src)
-        val (cN, tN, nN) = timeMin2(q, dst)
-        println(f"| $q | $t1%.2f | $c1%.2f | $n1 | $tN%.2f | $cN%.2f | $nN | ${tN / t1}%.1f× |")
-        }
-      } catch {
-        case t: Throwable =>
-          println(s"| $q | ERROR ${t.getClass.getSimpleName}: " +
-            s"${Option(t.getMessage).getOrElse("").take(120)} |")
-      } finally
-        // belt-and-braces release between queries (timeMin2 already
-        // releases after every run): without draining, a long probe
-        // list accumulates MEMORY_AND_DISK blocks the JVM never
-        // reclaims and the sweep eventually OOMs at 100×
-        graft.operators.GlobalOrder.release(blocking = true)
+      val row = for (a <- samples(q, src); b <- samples(q, dst)) yield {
+        val growth = if (HighVariance(q)) "median-of-3" else f"${b.head.min / a.head.min}%.1f×"
+        s"| $q | ${cell(a.map(_.min))} | ${cell(a.map(_.cold))} | ${a.head.rows} | " +
+          s"${cell(b.map(_.min))} | ${cell(b.map(_.cold))} | ${b.head.rows} | $growth |"
+      }
+      println(row.fold(m => s"| $q | ERROR $m |", identity))
     }
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only scratch main.
   *
   *  - `runMain graft.Scratch` — smoke: entry() row count + a plan print of
@@ -17,20 +15,13 @@ import org.apache.spark.sql.SparkSession
   */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    println(s"entry() rows = ${SparkEntry.entry(spark).count()}")
-    val names = if (args.nonEmpty) args.toSeq
+    val names = if (args.nonEmpty) Harness.select(args.toSeq)
       else Seq("q_pushdown_scan", "q_topk_groups", "q_dim_lookup", "q_upsert_latest")
+    val spark = Harness.session(Harness.cpus)
+    println(s"entry() rows = ${SparkEntry.entry(spark).count()}")
     for (n <- names) {
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").explain("formatted")
+      SparkEntry.queries(n)(spark, s"${Harness.FixtureRoot}/sf0.001").explain("formatted")
     }
     spark.stop()
   }

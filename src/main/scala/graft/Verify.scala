@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,50 +7,16 @@ object Verify {
     // driver calls with exactly (sfDir, outDir); any further args are a
     // local-iteration filter of query names to dump (subset re-verify)
     val Array(sfDir, outDir, only @ _*) = args
-    val unknown = only.toSet.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty,
-      s"unknown query name(s) in filter: ${unknown.toSeq.sorted.mkString(", ")}")
-    val wanted: String => Boolean =
-      if (only.isEmpty) _ => true else only.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // older events.parquet generations carried TIMESTAMP(NANOS) — the
-      // conf must be set at session build time; harmless for the current
-      // TIMESTAMP(MICROS) fixtures (Tables.events branches on read type)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = Harness.select(only)
+    val spark = Harness.session(Harness.cpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      finally
-        // drop the blocks GlobalOrder pinned for cross-job consistency —
-        // each query's output is now on disk, so a 300+-query session
-        // must not accumulate MEMORY_AND_DISK projections
-        graft.operators.GlobalOrder.release()
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Harness.run drains each query's pins once its parquet is on disk
+    for (name <- names)
+      Harness.run(spark, name, sfDir, Harness.Sink.Parquet(s"$outDir/$name"))
+        .left.foreach(m => System.err.println(s"[verify] $name failed: $m"))
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Harness.jsonString(k)}: ${Harness.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

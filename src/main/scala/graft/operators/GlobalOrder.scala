@@ -66,7 +66,7 @@ object GlobalOrder {
   }
 
   /** Pins from callers outside any [[scoped]] block land here — the
-    * sequential Verify/Bench/spec harnesses, which drain it per query
+    * sequential runs of [[graft.Harness.run]], which drain it per query
     * via the process-global [[release]]. */
   private val defaultHandle = new PinHandle
 
@@ -88,8 +88,8 @@ object GlobalOrder {
     *
     * RELEASE CONTRACT (documented on [[graft.QueryDef]] too): pins land
     * on the DEFAULT handle unless the caller runs inside [[scoped]].
-    * The sequential harnesses (Verify / Bench / ScaleProbe / specs)
-    * drain the default handle per query; any OTHER caller executing a
+    * [[graft.Harness.run]] (every main, the registry spec) drains the
+    * default handle per query; any OTHER caller executing a
     * pinning query must call [[release]] after materializing its output
     * or wrap the run in [[scoped]] and release that handle — otherwise
     * every invocation leaks MEMORY_AND_DISK blocks for the session
@@ -109,7 +109,7 @@ object GlobalOrder {
 
   /** Unpersists every ranked projection pinned OUTSIDE any [[scoped]]
     * block since the last call — the sequential-harness convenience
-    * (Verify and Bench call it per query). Re-executing a previously
+    * ([[graft.Harness.run]] calls it per query). Re-executing a previously
     * returned frame after release would recompute the projection and
     * lose the cross-job boundary consistency the persist exists for;
     * materialize once, release, re-derive if needed. Concurrent callers

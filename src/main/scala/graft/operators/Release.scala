@@ -140,7 +140,7 @@ object Release {
     *
     * The frame is pinned via [[GlobalOrder.pinPersisted]], so the
     * harness's per-query release drains the blocks after the consuming
-    * action — callers outside Verify/Bench/ScaleProbe must drain via
+    * action — callers outside [[graft.Harness.run]] must drain via
     * `GlobalOrder.release()` (or run inside `GlobalOrder.scoped`) or
     * the MEMORY_AND_DISK blocks leak for the session lifetime.
     *

@@ -17,14 +17,33 @@ class GroupTopKRewriteSpec extends SparkSpec {
       .withColumn("rn", row_number().over(w)).where(col("rn") <= k).drop("rn")
   }
 
-  test("the idiom rewrites to TopKPerGroup and returns identical rows") {
-    val baseline = windowTopK(5).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+  /** Runs `body` with graft's top-k hooks installed (`on`) or removed,
+    * then restores the session's own hooks. The shared session arrives
+    * with them installed (Harness.session calls GraftRuntime.ensure), so
+    * a baseline must remove them to run the plain window plan. */
+  private def withTopK[T](on: Boolean)(body: => T): T = {
     val (savedOpt, savedStrat) =
       (spark.experimental.extraOptimizations, spark.experimental.extraStrategies)
     try {
-      spark.experimental.extraOptimizations = savedOpt :+ GroupTopKRewrite
-      spark.experimental.extraStrategies = savedStrat :+ GroupTopKStrategy
+      val opt = savedOpt.filterNot(_ == GroupTopKRewrite)
+      val strat = savedStrat.filterNot(_ == GroupTopKStrategy)
+      spark.experimental.extraOptimizations = if (on) opt :+ GroupTopKRewrite else opt
+      spark.experimental.extraStrategies = if (on) strat :+ GroupTopKStrategy else strat
+      body
+    } finally {
+      spark.experimental.extraOptimizations = savedOpt
+      spark.experimental.extraStrategies = savedStrat
+    }
+  }
+
+  test("the idiom rewrites to TopKPerGroup and returns identical rows") {
+    val baseline = withTopK(on = false) {
+      val plan = windowTopK(5).queryExecution.executedPlan.toString
+      assert(!plan.contains("TopKPerGroup"), s"baseline must run the window:\n$plan")
+      windowTopK(5).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    }
+    withTopK(on = true) {
       val accel = windowTopK(5)
       val plan = accel.queryExecution.executedPlan.toString
       assert(plan.contains("TopKPerGroup"), s"rewrite did not fire:\n$plan")
@@ -32,9 +51,6 @@ class GroupTopKRewriteSpec extends SparkSpec {
       val got = accel.collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
       assert(got == baseline)
-    } finally {
-      spark.experimental.extraOptimizations = savedOpt
-      spark.experimental.extraStrategies = savedStrat
     }
   }
 
@@ -63,7 +79,10 @@ class GroupTopKRewriteSpec extends SparkSpec {
     }
     // sanity: the positive shape DOES rewrite at the pure-rule level, and
     // swallows the WindowGroupLimit Spark had inserted below
-    val positive = GroupTopKRewrite(windowTopK(3).queryExecution.optimizedPlan)
+    // (hooks removed, so the plan reaching the rule is not yet rewritten)
+    val positive = withTopK(on = false) {
+      GroupTopKRewrite(windowTopK(3).queryExecution.optimizedPlan)
+    }
     assert(positive.collect { case t: graft.plans.TopKPerGroup => t }.nonEmpty)
     assert(positive.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit => w
@@ -77,7 +96,9 @@ class GroupTopKRewriteSpec extends SparkSpec {
     def exactRank(n: Int): DataFrame = ev
       .withColumn("rn", row_number().over(w)).where(col("rn") === n).drop("rn")
 
-    val argmax = GroupTopKRewrite(exactRank(1).queryExecution.optimizedPlan)
+    val argmax = withTopK(on = false) {
+      GroupTopKRewrite(exactRank(1).queryExecution.optimizedPlan)
+    }
     assert(argmax.collect { case t: graft.plans.TopKPerGroup => t }.nonEmpty,
       s"rn = 1 should rewrite (it means top-1):\n$argmax")
     // rn = 2 selects the SECOND row per group, not the top two — a heap
@@ -87,21 +108,16 @@ class GroupTopKRewriteSpec extends SparkSpec {
       s"rn = 2 must not rewrite:\n$rank2")
 
     // end-to-end: rewritten argmax returns exactly the baseline rows
-    val baseline = exactRank(1).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    val (savedOpt, savedStrat) =
-      (spark.experimental.extraOptimizations, spark.experimental.extraStrategies)
-    try {
-      spark.experimental.extraOptimizations = savedOpt :+ GroupTopKRewrite
-      spark.experimental.extraStrategies = savedStrat :+ GroupTopKStrategy
+    val baseline = withTopK(on = false) {
+      exactRank(1).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    }
+    withTopK(on = true) {
       val accel = exactRank(1)
       assert(accel.queryExecution.executedPlan.toString.contains("TopKPerGroup"))
       val got = accel.collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
       assert(got == baseline)
-    } finally {
-      spark.experimental.extraOptimizations = savedOpt
-      spark.experimental.extraStrategies = savedStrat
     }
   }
 }
