@@ -13,7 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * CACHE-RELEASE CONTRACT: some query programs pin MEMORY_AND_DISK
   * frames for cross-job consistency or iterative reuse
   * ([[graft.operators.GlobalOrder.withGlobalRowNumber]] projections,
-  * `Release.partitionedEdgeCache` edge frames). The pins land on
+  * [[graft.operators.Loop]]'s `partitionedEdgeCache` / `pinnedPersist`
+  * loop-static frames). The pins land on
   * GlobalOrder's default handle; the caller that materializes the
   * result MUST drain them afterwards via `GlobalOrder.release()` —
   * [[graft.Harness.run]] does, per query, for every main and spec sweep.

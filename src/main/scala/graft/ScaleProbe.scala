@@ -30,14 +30,14 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.ScaleProbe [srcDir] [dstDir] [factor] [query...]
   * Writes only under dstDir (default /tmp/graft_sf1). If dstDir already
   * holds scaled tables, generation is skipped (delete it to regenerate);
-  * extra args restrict the probe to that query subset.
+  * extra args probe exactly those queries (listed below or not).
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val subset = Harness.select(args.drop(3).toSeq).toSet
+    val named = Harness.select(args.drop(3).toSeq)
     val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setCheckpointDir(s"$dst/_checkpoints")
 
@@ -124,7 +124,7 @@ object ScaleProbe {
     // q_kneser_ney's 63× curve hide until it was promoted to the heavy
     // list; joins and windows are exactly the shapes whose growth can
     // be super-linear, so they are probed at both factors by default.
-    val probeQueries = Seq(
+    val probeQueries = if (args.length > 3) named else Seq(
       "q_line_dedup", "q_dedup_exact", "q_dedup_latest", "q_dedup_corpus",
       "q_dedup_keep_best", "q_dup_stats_by_source",
       "q_dup_clusters_star", "q_lsh_candidates", "q_embed_dedup",
@@ -271,7 +271,6 @@ object ScaleProbe {
       "q_turning_points", "q_spectral_entropy", "q_wilcoxon",
       // round 15 (standing rule: join/window ⇒ probe)
       "q_dup_spans", "q_dup_span_cut", "q_contamination_spans")
-      .filter(subset)
 
     // cold = run 1, min = min-of-2. r16 (verdict item 5): pins are
     // RELEASED between the two runs (Harness.run always releases) — run 2

@@ -24,24 +24,25 @@ object Tables {
   private val memo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), DataFrame]()
 
-  /** Growth bound (r15 advice item 1): a JVM that churns sessions
-    * (spec suites) keeps inserting fresh keys whose values pin stopped
-    * sessions' plans. 10 tables × a session is tiny, but unbounded is
-    * unbounded: past this many entries the whole map drops —
-    * re-listing a fixture dir costs milliseconds, leaking plans for
-    * the JVM lifetime costs memory. */
-  private val MaxEntries = 1024
+  /** Growth bound: a JVM that churns sessions (spec suites) keeps
+    * inserting fresh keys whose values pin stopped sessions' plans. A
+    * load that misses first drops the entries of every session whose
+    * SparkContext has stopped, so live sessions keep their plans and
+    * concurrent misses only ever remove dead entries. */
+  private def memoized(key: (SparkSession, String, String),
+      read: => DataFrame): DataFrame =
+    Option(memo.get(key)).getOrElse {
+      memo.keySet.removeIf(_._1.sparkContext.isStopped)
+      memo.computeIfAbsent(key, _ => read)
+    }
 
   /** Drop every memoized plan — call after regenerating a fixture dir
     * in-place within one session (no harness path does; ScaleProbe
     * writes scaled tables before first reading them). */
   def clear(): Unit = memo.clear()
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (memo.size > MaxEntries) memo.clear()
-    memo.computeIfAbsent((spark, dir, name),
-      _ => spark.read.parquet(s"$dir/$name.parquet"))
-  }
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    memoized((spark, dir, name), spark.read.parquet(s"$dir/$name.parquet"))
 
   /** `events.ts` has shipped in two physical types across fixture
     * generations: parquet TIMESTAMP(NANOS) (which Spark's vectorized
@@ -52,8 +53,7 @@ object Tables {
     * the oracle side sees via `CAST(ts AS TIMESTAMP)`.
     */
   private def loadEvents(spark: SparkSession, dir: String): DataFrame =
-    memo.computeIfAbsent((spark, dir, "events#normalized"),
-      _ => loadEventsUncached(spark, dir))
+    memoized((spark, dir, "events#normalized"), loadEventsUncached(spark, dir))
 
   private def loadEventsUncached(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

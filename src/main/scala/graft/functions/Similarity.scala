@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.{QueryDef, Tables}
+import graft.operators.Loop
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -443,7 +444,7 @@ object Similarity {
           transform(col("mean"), x => x / col("norm")).as("ce_new"))
       cents = cents.join(means, Seq("cent_id"), "left")
         .select(col("cent_id"), coalesce(col("ce_new"), col("ce")).as("ce"))
-        .localCheckpoint(true) // truncate the per-iteration lineage
+        .transform(Loop.cutLineage(_)) // truncate the per-iteration lineage
     }
     cents
   }
@@ -486,7 +487,7 @@ object Similarity {
       cents = cents.join(means, Seq("s", "cent_id"), "left")
         .select(col("s"), col("cent_id"),
           coalesce(col("cs_new"), col("cs")).as("cs"))
-        .localCheckpoint(true)
+        .transform(Loop.cutLineage(_))
     }
     cents
   }
@@ -2756,12 +2757,11 @@ object Similarity {
         // with a center-distance join) — persist it once instead of
         // re-exploding the embedding table per action (pinned for the
         // harness's per-query release)
-        val x = graft.operators.GlobalOrder.pinPersisted(
+        val x = Loop.pinnedPersist(
           Tables.embeddings(s, d)
             .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "e")))
             .select(col("vec_id"), col("i"),
-              round(col("e").cast("double") * 1e6).cast("long").as("xq"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+              round(col("e").cast("double") * 1e6).cast("long").as("xq")))
         def distTo(id: Long) = x
           .join(x.where(col("vec_id") === id)
             .select(col("i"), col("xq").as("cq")), "i")
@@ -2776,11 +2776,8 @@ object Similarity {
         // chain back to round 1 (≈ O(k²) replays of the center-
         // distance join). One corpus-sized persist per round, pinned
         // so the harness release drains all four.
-        def pinned(df: org.apache.spark.sql.DataFrame) =
-          graft.operators.GlobalOrder.pinPersisted(
-            df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         val c1 = x.agg(min("vec_id")).head().getLong(0)
-        var dcur = pinned(distTo(c1))
+        var dcur = Loop.pinnedPersist(distTo(c1))
         var rows = List((1L, c1, 0L, radius(dcur)))
         for (r <- 2 to 4) {
           val sel = dcur.orderBy(col("dist").desc, col("vec_id")).limit(1).head()
@@ -2788,7 +2785,7 @@ object Similarity {
           val sd = sel.getDecimal(1).longValueExact()
           val dn = distTo(cid)
             .select(col("vec_id"), col("dist").as("dn"))
-          dcur = pinned(dcur.join(dn, "vec_id")
+          dcur = Loop.pinnedPersist(dcur.join(dn, "vec_id")
             .select(col("vec_id"),
               least(col("dist"), col("dn")).cast("decimal(38,0)").as("dist")))
           rows = rows :+ ((r.toLong, cid, sd, radius(dcur)))

@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.{QueryDef, Tables}
+import graft.operators.Loop
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1483,7 +1484,7 @@ object TextAnalysis {
     //
     // Plan shape (round 12 — the old form's 100× probe grew 63×
     // because the full bigram-TYPE table shuffled four separate
-    // times): the type table materializes ONCE (localCheckpoint — it
+    // times): the type table materializes ONCE (Loop.cutLineage — it
     // feeds four consumers, each of whose actions would otherwise
     // re-run the positional self-join), the top-20 output rows are
     // selected FIRST on the (c desc, w1, w2) order the final sort uses
@@ -1501,9 +1502,9 @@ object TextAnalysis {
           .join(w.select(col("doc_id"), (col("pos") - 1).as("pos"),
             col("w").as("w2")), Seq("doc_id", "pos"))
         val c12 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-          .localCheckpoint(true)
+          .transform(Loop.cutLineage(_))
         val top = c12.orderBy(col("c").desc, col("w1"), col("w2")).limit(20)
-          .localCheckpoint(true)
+          .transform(Loop.cutLineage(_))
         val c1 = c12.join(broadcast(top.select("w1").distinct()), "w1",
             "left_semi").groupBy("w1")
           .agg(sum("c").as("cw1"), count(lit(1)).as("nfollow"))

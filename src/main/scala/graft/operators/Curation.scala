@@ -111,8 +111,9 @@ object Curation {
     * lexicographically, so training is deterministic), and rewrites the
     * symbol arrays with a left-to-right non-overlapping fold — [a,a,a]
     * with merge (a,a) becomes [aa,a], the reference behavior. The word
-    * table is locally checkpointed each round (the CC-loop discipline:
-    * iterative lineage must be cut, or analysis cost grows per round).
+    * table's lineage is cut each round ([[Loop.cutLineage]], the CC-loop
+    * discipline: iterative lineage must be cut, or analysis cost grows
+    * per round).
     *
     * Returns the ordered merge list — with the word table's final
     * symbolization, the artifacts a tokenizer ships.
@@ -124,7 +125,7 @@ object Curation {
       .where(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .select(col("freq"), split(col("w"), "").as("syms"))
-      .localCheckpoint(true)
+      .transform(Loop.cutLineage(_))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var exhausted = false
     while (merges.size < numMerges && !exhausted) {
@@ -149,7 +150,7 @@ object Curation {
               concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
               .otherwise(concat(acc, array(x))))
         words = words.select(col("freq"), merged.as("syms"))
-          .localCheckpoint(true)
+          .transform(Loop.cutLineage(_))
       }
     }
     merges.toSeq
@@ -2922,7 +2923,7 @@ object Curation {
         val sh = Tables.documents(s, d).where(col("doc_id") < 100)
           .select(col("doc_id"),
             explode(DedupOps.shingles(col("text"), 3)).as("g"))
-          .localCheckpoint(true)
+          .transform(Loop.cutLineage(_))
         var picked = s.range(0).select(col("id").as("doc_id"),
           lit(0L).as("round"), lit(0L).as("gain"))
         for (r <- 1 to 5) {
@@ -2933,7 +2934,7 @@ object Curation {
             .orderBy(col("gain").desc, col("doc_id")).limit(1)
             .select(col("doc_id"), lit(r.toLong).as("round"),
               col("gain").cast("long").as("gain"))
-            .localCheckpoint(true)
+            .transform(Loop.cutLineage(_))
           picked = picked.unionByName(pick)
         }
         picked.select(col("round"), col("doc_id").cast("long").as("doc_id"),

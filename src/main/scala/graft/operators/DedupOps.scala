@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * candidates. Hashes are md5-derived so results are engine-portable and
   * deterministic (no seed-dependent murmur differences vs the oracle).
   */
-object DedupOps extends org.apache.spark.internal.Logging {
+object DedupOps {
 
   /** Declared scope bound for `q_setsim_join`, the exact pair-listing
     * verification oracle: a pair lister's OUTPUT is Ω(n²)·density on a
@@ -290,45 +290,25 @@ object DedupOps extends org.apache.spark.internal.Logging {
     * clusters are tiny (diameter ≪ 10), so the loop is effectively
     * bounded; `maxIter` guards pathological inputs. Returns
     * (id, cluster). */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 10,
-      checkpointDir: Option[String] = None,
-      failOnUnconverged: Boolean = true): DataFrame = {
-    val spark = pairs.sparkSession
-    // setCheckpointDir is application-global state: honor an existing
-    // setting rather than silently redirecting every other checkpoint in
-    // the app. NOTE reliable checkpoint files are NOT auto-deleted
-    // (spark.cleaner.referenceTracking.cleanCheckpoints is off by
-    // default) — pass a job-scoped directory and remove it once the
-    // returned labels have been persisted.
-    checkpointDir.foreach { d =>
-      if (spark.sparkContext.getCheckpointDir.isEmpty)
-        spark.sparkContext.setCheckpointDir(d)
-    }
-    // eager checkpoint (not cache) at every step: an iterative DataFrame
-    // loop otherwise grows its logical plan each round, and the
-    // accumulating lineage blows up analysis time and driver heap. With a
-    // `checkpointDir` the checkpoint is RELIABLE (survives executor loss
-    // — required on a real cluster, where a localCheckpoint'd iteration
-    // dies with any one executor); without one it falls back to
-    // executor-local blocks, fine for local[n] runs.
-    def persist(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
-    // persisted pre-partitioned on the per-round join key: every
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
+    // eager cut (not cache) at every step ([[Loop.cutLineage]]): an
+    // iterative DataFrame loop otherwise grows its logical plan each
+    // round, and the accumulating lineage blows up analysis time and
+    // driver heap. Cut pre-partitioned on the per-round join key: every
     // propagation round joins edges on id2, so paying one extra exchange
     // here removes the edges-side shuffle from every iteration
-    // (localCheckpoint preserves partitioning)
-    val edges = persist(pairs.select(col("id1"), col("id2"))
+    // (both checkpoint kinds preserve partitioning)
+    val edges = Loop.cutLineage(pairs.select(col("id1"), col("id2"))
       .unionByName(pairs.select(col("id2").as("id1"), col("id1").as("id2")))
       .distinct().repartition(col("id2")))
-    var labels = persist(edges.select(col("id1").as("id")).distinct()
+    var labels = Loop.cutLineage(edges.select(col("id1").as("id")).distinct()
       .withColumn("cluster", col("id")))
-    // Convergence is checked EVERY iteration, nearly for free: the
-    // persisted frame keeps the pre-propagation label alongside the new
-    // one, so the changed-row probe is a filter over already-materialized
-    // data (no extra join, no second shuffle). Near-dup graphs are
-    // mostly diameter-1 pairs, and a batched check (every k rounds)
-    // costs k−1 full propagation shuffles on exactly that common case —
-    // measured 6 rounds instead of 2 on the corpus-dedup pair graph.
+    // Convergence is checked EVERY iteration, for free: the step's cut
+    // keeps the pre-propagation label alongside the new one and counts
+    // the changed rows inside its own eager job (no probe job). Near-dup
+    // graphs are mostly diameter-1 pairs, and a batched check (every k
+    // rounds) costs k−1 full propagation shuffles on exactly that common
+    // case — measured 6 rounds instead of 2 on the corpus-dedup pair graph.
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -337,22 +317,21 @@ object DedupOps extends org.apache.spark.internal.Logging {
         .join(labels.withColumnRenamed("id", "id2"), "id2")
         .groupBy(col("id1").as("id"))
         .agg(min("cluster").as("n_cluster"))
-      val step = persist(labels.join(viaNeighbors, Seq("id"), "left")
-        .select(col("id"), col("cluster").as("old"),
-          least(col("cluster"), coalesce(col("n_cluster"), col("cluster"))).as("cluster")))
-      converged = step.where(col("cluster") =!= col("old")).limit(1).count() == 0
+      val (step, changed) = Loop.cutLineage(
+        labels.join(viaNeighbors, Seq("id"), "left")
+          .select(col("id"), col("cluster").as("old"),
+            least(col("cluster"), coalesce(col("n_cluster"), col("cluster"))).as("cluster")),
+        count(when(col("cluster") =!= col("old"), 1)))
+      converged = changed.getLong(0) == 0
       labels = step.select("id", "cluster")
       i += 1
     }
-    if (!converged) {
-      // a component with diameter > maxIter would otherwise ship WRONG
-      // cluster labels with no signal at all
-      val msg = s"connectedComponents did not converge within $maxIter iterations; " +
+    // a component with diameter > maxIter would otherwise ship WRONG
+    // cluster labels with no signal at all
+    if (!converged) throw new IllegalStateException(
+      s"connectedComponents did not converge within $maxIter iterations; " +
         "labels are incomplete (some components carry more than one cluster id). " +
-        "Raise maxIter or pass failOnUnconverged=false to accept partial labels."
-      if (failOnUnconverged) throw new IllegalStateException(msg)
-      else logWarning(msg)
-    }
+        "Raise maxIter.")
     labels
   }
 
@@ -370,24 +349,18 @@ object DedupOps extends org.apache.spark.internal.Logging {
     * and strictly shrink toward stars rooted at each component's min.
     * Returns (id, cluster) like [[connectedComponents]].
     */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 25,
-      checkpointDir: Option[String] = None,
-      failOnUnconverged: Boolean = true): DataFrame = {
-    val spark = pairs.sparkSession
-    checkpointDir.foreach { d =>
-      if (spark.sparkContext.getCheckpointDir.isEmpty)
-        spark.sparkContext.setCheckpointDir(d)
+  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
+    // every cut counts its own rows ([[Loop.cutLineage]] metrics), so the
+    // equality probe needs no separate count job of either edge list (the
+    // loop is action-latency-bound, not data-bound)
+    def cutCounted(df: DataFrame): (DataFrame, Long) = {
+      val (cut, m) = Loop.cutLineage(df, count(lit(1)))
+      (cut, m.getLong(0))
     }
-    def persist(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
-    var edges = persist(pairs
+    var (edges, edgeCount) = cutCounted(pairs
       .select(greatest(col("id1"), col("id2")).as("hi"),
         least(col("id1"), col("id2")).as("lo"))
       .where(col("hi") =!= col("lo")).distinct())
-    // carried across iterations so the equality probe needs no re-count
-    // of the already-persisted previous edge list (one fewer driver
-    // action per round; the loop is action-latency-bound, not data-bound)
-    var edgeCount = edges.count()
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -421,22 +394,18 @@ object DedupOps extends org.apache.spark.internal.Logging {
         .select(greatest(col("x"), col("m")).as("hi"),
           least(col("x"), col("m")).as("lo"))
         .distinct()
-      val next = persist(ss)
+      val (next, nextCount) = cutCounted(ss)
       // star-shaped fixpoint: the round rewrote every edge to point at a
       // root and changed nothing — set equality via anti-join on the
       // (small, persisted) edge lists, both already canonical+distinct
-      val nextCount = next.count()
       converged = nextCount == edgeCount &&
         next.join(edges, Seq("hi", "lo"), "left_anti").limit(1).count() == 0
       edges = next
       edgeCount = nextCount
       i += 1
     }
-    if (!converged) {
-      val msg = s"connectedComponentsStar did not converge within $maxIter rounds"
-      if (failOnUnconverged) throw new IllegalStateException(msg)
-      else logWarning(msg)
-    }
+    if (!converged) throw new IllegalStateException(
+      s"connectedComponentsStar did not converge within $maxIter rounds")
     edges.select(col("hi").as("id"), col("lo").as("cluster"))
       .unionByName(edges.select(col("lo"), col("lo")).distinct()
         .toDF("id", "cluster"))

@@ -563,7 +563,7 @@ object Journeys {
         // replay — but no repartition and no cuts: the remaining replay
         // is over the persisted ≤|types|² frame, and per-round
         // checkpoints cost more than they save at this size
-        val trj = Release.pinnedPersist(tr.join(rs, "a"))
+        val trj = Loop.pinnedPersist(tr.join(rs, "a"))
         val sts = trj.select(col("a").as("st")).distinct()
         val ns = sts.agg(count(lit(1)).as("k"))
         var pi = sts.crossJoin(broadcast(ns))
@@ -717,7 +717,7 @@ object Journeys {
         // corpus-scaled lead-window scan, which all 20 uncut broadcast
         // rounds used to replay — no repartition, no cuts (the replay
         // left is over the persisted ≤|types|² frame)
-        val q = Release.pinnedPersist(tr.join(rs, "a")
+        val q = Loop.pinnedPersist(tr.join(rs, "a")
           .where(col("a") =!= "purchase" && col("b") =!= "purchase")
           .select(col("a"), col("b"),
             expr("CAST(CAST(c AS DECIMAL(38,0)) * 1000000000 div tot AS BIGINT)")

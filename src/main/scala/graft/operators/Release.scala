@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.functions.NfcNormalize
+import graft.operators.Loop.{cutLineage, partitionedEdgeCache, pinnedPersist}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -101,88 +102,6 @@ object Release {
        |SELECT id AS partkey, r AS ppr_nano FROM p8
        |ORDER BY r DESC, id LIMIT 10""".stripMargin
   }
-
-  /** Eager lineage cut, DedupOps convention: a RELIABLE checkpoint when
-    * the session has a checkpoint dir (localCheckpoint blocks are pinned
-    * — they cannot be recomputed — so a corpus-scale edge list held in
-    * block storage starves hash aggregation of execution memory; the
-    * 100× probe hit exactly that), localCheckpoint otherwise. */
-  private[graft] def cutLineage(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(true)
-    else df.localCheckpoint(true)
-
-  /** The iterative-graph cache convention, defined ONCE (it was
-    * triplicated across q_ppr / q_weighted_pagerank / q_bfs_layers and
-    * each copy carried its own rationale comment — three copies of a
-    * subtle convention is how the fourth gets it wrong):
-    *
-    * Scope (r15 doc generalization, per the r14 advice): any LOOP-STATIC
-    * frame every round joins on a SINGLE fixed key — the data-sized edge
-    * frame is the motivating case and the naming case, but a node-sized
-    * base frame read k times on the same key (q_ppr's restart frame,
-    * nine consumers on `id`) earns the same treatment: the partitioned
-    * layout kills the per-round exchange wherever the OTHER side stops
-    * broadcasting, and the build-time sort below hands sort-merge both
-    * requirements whichever side of the join the cache lands on.
-    *
-    * Hash-partition the static frame by the loop's join key ONCE and
-    * persist MEMORY_AND_DISK. Every round's join then reuses the cached
-    * layout and shuffles only the skinny evolving side (rank / frontier
-    * / survivor set) — the GraphX contract. Without this, each round
-    * re-scans AND re-exchanges the data-sized static frame: k rounds =
-    * k full shuffles of the one input that grows with the corpus.
-    * Measured (round 13, 100× probes): q_ppr 131 → 56.6 s,
-    * q_weighted_pagerank 70.3 → 40.7 s. A `bucketBy(key).saveAsTable`
-    * layout is NOT a substitute — it avoids the exchange but not the
-    * per-round parquet re-decode (measured 3.6× worse; BENCH.md r13).
-    *
-    * The frame is pinned via [[GlobalOrder.pinPersisted]], so the
-    * harness's per-query release drains the blocks after the consuming
-    * action — callers outside [[graft.Harness.run]] must drain via
-    * `GlobalOrder.release()` (or run inside `GlobalOrder.scoped`) or
-    * the MEMORY_AND_DISK blocks leak for the session lifetime.
-    *
-    * CUT POLICY for the loop body built on top of this cache: cut
-    * lineage ([[cutLineage]]) at depth ≤ 2 — the per-round join
-    * broadcasts the evolving side at bench scale, and a broadcast
-    * exchange materializes its child eagerly with no cross-round stage
-    * reuse, so an uncut "linear" chain replays quadratically (measured:
-    * dropping q_ppr's cuts doubled it, 5.4 → 11 s; adding
-    * every-2nd-round cuts to q_weighted_pagerank took its 100× probe
-    * 53.9 → 34.7 s). Do NOT try to dodge the cuts by forcing the
-    * evolving side to SHUFFLE instead (shuffle_hash hints): measured
-    * round 14 on q_ppr, the all-shuffle form was worse on BOTH axes —
-    * sf0.1 4.6 s (broadcast+cuts) vs 20.4 s (shj+cuts) / 34.9 s (shj
-    * uncut), 100× 52.2 vs 43.9 / 69.7 s — the uncut-shj numbers show
-    * the chain still replays (AQE stage materialization does not reuse
-    * map outputs across the re-planned sub-stages), and the per-round
-    * shuffle of the evolving side costs far more than the broadcast it
-    * replaces wherever the rank frame is broadcastable. BENCH.md r14. */
-  private[graft] def partitionedEdgeCache(df: org.apache.spark.sql.DataFrame,
-      key: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    GlobalOrder.pinPersisted(
-      df.repartition(parts, key)
-        // sorted ONCE at cache build: at bench scale the evolving side
-        // broadcasts and the ordering is irrelevant, but at the scale
-        // where it stops broadcasting the per-round join plans as
-        // sort-merge — InMemoryRelation preserves outputOrdering, so a
-        // pre-sorted cache hands SMJ both the partitioning AND the
-        // order and only the skinny evolving side sorts per round,
-        // instead of the data-sized edge frame re-sorting k times
-        .sortWithinPartitions(key)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
-
-  /** Pin-scoped plain persist (no re-partitioning) for node-sized frames
-    * a loop reads every round — same release contract as
-    * [[partitionedEdgeCache]]. */
-  private[graft] def pinnedPersist(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    GlobalOrder.pinPersisted(
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Distinct undirected co-purchase edges (p1 < p2, with the shared-
     * order count `w` and per-node degrees) — the shared graph the
@@ -850,7 +769,7 @@ object Release {
         val (e00, deg0) = copurchaseGraph(s, d)
         // the full edge frame is consumed three times (round-1 peel, its
         // degree pass, and the final edge annotation join): cache it
-        // partitioned by p1 once ([[partitionedEdgeCache]]). Measured
+        // partitioned by p1 once ([[Loop.partitionedEdgeCache]]). Measured
         // r14: 1× 2.96 → 2.55 s, 100× a wash (22.7 vs 23.6 s — the peel
         // rounds are checkpoint-dominated there); kept for the
         // many-consumer shape, which is what scales.
@@ -860,10 +779,11 @@ object Release {
             e.select(col("p1").as("p")).unionAll(e.select(col("p2").as("p")))
               .groupBy("p").agg(count(lit(1)).as("deg")))
         val kk = deg0.agg(expr("sum(deg) div count(1)").as("k"))
+        def survivors(deg: org.apache.spark.sql.DataFrame) =
+          deg.crossJoin(broadcast(kk)).where(col("deg") >= col("k")).select("p")
         def peel(deg: org.apache.spark.sql.DataFrame,
             e: org.apache.spark.sql.DataFrame) = {
-          val surv = deg.crossJoin(broadcast(kk))
-            .where(col("deg") >= col("k")).select("p")
+          val surv = survivors(deg)
           val e2 = cutLineage(e.join(surv.select(col("p").as("p1")), "p1")
             .join(surv.select(col("p").as("p2")), "p2")
             .select("p1", "p2"))
@@ -872,7 +792,8 @@ object Release {
         val (s1, e1) = peel(deg0, e0)
         val (s2, e2) = peel(degrees(e1), e1)
         val (s3, e3) = peel(degrees(e2), e2)
-        val (s4, _) = peel(degrees(e3), e3)
+        // the last round reports survivors only: nothing reads its edges
+        val s4 = survivors(degrees(e3))
         // one plan, not ten count branches: annotate every node with the
         // LAST round it survived (the sets nest, so four left-join
         // markers fold into one CASE), derive each edge's last round as
@@ -890,7 +811,7 @@ object Release {
             coalesce(when(col("r4") === 1, 4).when(col("r3") === 1, 3)
               .when(col("r2") === 1, 2).when(col("r1") === 1, 1), lit(0))
               .as("last"))
-          .transform(cutLineage)
+          .transform(cutLineage(_))
         val nCols = Seq.range(0, 5).map(r =>
           count(when(col("last") >= r, 1)).as(s"n$r"))
         val nodeAgg = n.agg(nCols.head, nCols.tail: _*)
@@ -1114,7 +1035,7 @@ object Release {
         // per-query union + grouped sum + checkpoint
         val (nbs0, st) = copurchaseDirected(s, d)
         // six power rounds join on u: cache the edge frame partitioned
-        // by u once ([[partitionedEdgeCache]] — rationale + cut policy
+        // by u once ([[Loop.partitionedEdgeCache]] — rationale + cut policy
         // documented there). r16 re-profile under the releasing
         // ScaleProbe (verdict item 7): cached 68.8 s min-of-2 at 100×
         // vs 100.8 s uncached — the cache stands; see the q_ppr note
@@ -1157,7 +1078,7 @@ object Release {
       "q_bfs_layers",
       (s, d) => {
         // the adjacency is probed once per hop (three hops): cache it
-        // partitioned by the hop join key ([[partitionedEdgeCache]])
+        // partitioned by the hop join key ([[Loop.partitionedEdgeCache]])
         val nb = partitionedEdgeCache(
           copurchaseDirected(s, d)._1.select("u", "v"), col("u"))
         val l0 = cutLineage(
@@ -1457,7 +1378,7 @@ object Release {
         // parquet scan is the lineage cut each power step restarts from
         val (nbw, _) = copurchaseDirected(s, d)
         // all 8 power rounds join on src: cache the edge frame
-        // partitioned by src once ([[partitionedEdgeCache]]). Only the
+        // partitioned by src once ([[Loop.partitionedEdgeCache]]). Only the
         // precomputed 2³⁰ fixed-point factor fm rides along — the
         // per-round term is (r·fm) div 2³⁰ in pure LONG arithmetic
         // (DECIMAL multiply + data-dependent div paid once at artifact
@@ -1653,7 +1574,7 @@ object Release {
       "q_graph_diameter",
       (s, d) => {
         // the adjacency is probed by TWELVE hop joins (6 per sweep), all
-        // on u: cache it partitioned by u once ([[partitionedEdgeCache]])
+        // on u: cache it partitioned by u once ([[Loop.partitionedEdgeCache]])
         // instead of re-scanning the artifact parquet per hop
         val nb = partitionedEdgeCache(
           copurchaseDirected(s, d)._1
@@ -1764,7 +1685,7 @@ object Release {
       (s, d) => {
         // four consumers (the initial in-degree pass + three walk
         // rounds, all joining on u): cache the filtered adjacency
-        // partitioned by u once ([[partitionedEdgeCache]])
+        // partitioned by u once ([[Loop.partitionedEdgeCache]])
         val nb = partitionedEdgeCache(
           copurchaseDirected(s, d)._1
             .where(col("w") >= 3).select("u", "v"), col("u"))

@@ -103,16 +103,13 @@ class DedupSpec extends SparkSpec {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
-  test("connectedComponents: diameter > maxIter fails loudly, or warns with partial labels") {
+  test("connectedComponents: diameter > maxIter fails loudly") {
     // a 9-node chain needs 8 propagation rounds; cap at 2
     val chain = (0L until 8L).map(i => (i, i + 1)).toDF("id1", "id2")
     val e = intercept[IllegalStateException] {
       DedupOps.connectedComponents(chain, maxIter = 2)
     }
     assert(e.getMessage.contains("did not converge"))
-    // opting out returns the partial labels instead of throwing
-    val partial = DedupOps.connectedComponents(chain, maxIter = 2, failOnUnconverged = false)
-    assert(partial.count() == 9)
   }
 
   test("connectedComponentsStar: matches naive CC on pseudo-random graphs") {
@@ -139,14 +136,6 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(labels.length == 101)
     assert(labels.forall(_._2 == 0L))
-  }
-
-  test("connectedComponents: reliable checkpointDir path matches localCheckpoint path") {
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("id1", "id2")
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-chk").toString
-    val got = DedupOps.connectedComponents(pairs, checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
   test("dedupAgainstIndex: index hits drop, batch-internal dups keep min id, unique rows survive") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Release
+import graft.operators.{Loop, Release}
 import org.apache.spark.sql.DataFrame
 
 /** Invariants of the release-stage operators that the DuckDB hash oracle
@@ -26,7 +26,7 @@ class ReleaseSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val (nbw, _) = Release.copurchaseDirected(spark, sf)
-      val cached = Release.partitionedEdgeCache(
+      val cached = Loop.partitionedEdgeCache(
         nbw.select(col("u").as("src"), col("v"), col("fm")), col("src"))
       val nodes = Release.copurchaseGraph(spark, sf)._2
         .select(col("p").as("id"), lit(1L).as("r"))
