@@ -11,11 +11,13 @@ import org.apache.spark.sql.functions._
   *   paged source → synth key (P7) → timestamp normalize (P2) → status
   *   derive + expired drop (P3/F8) → WKT → lat/lon (P4) → county dim
   *   lookup (P5) → composite dedup (D1) → latest-wins dedup (D2) →
-  *   ranked sort (O1) → keyed upsert (S6)
+  *   status rank column → keyed upsert (S6)
   *
   * Everything is a single logical plan per stage — Catalyst fuses the
   * scalar stages into one WholeStageCodegen pass over the scan, and only
-  * the two dedups and the sort shuffle.
+  * the two dedups shuffle. No stage sorts: the upsert re-shuffles by key,
+  * so a global order here would be thrown away; the ranked sort (O1) is
+  * the dashboard's table view and `q_ranked_sort`'s.
   */
 object Pipeline {
 
@@ -76,12 +78,10 @@ object Pipeline {
       Seq(col("modified_ts").asc, col("incident_id").asc))
     val d2 = CoreQueries.latestWins(d1,
       Seq("incident_id"), Seq(col("modified_ts").desc))
-    // O1 ranked sort
+    // O1's rank key, part of the published schema
     d2.withColumn("status_rank",
       when(col("status") === "PÅGÅR", 0)
         .when(col("status") === "KOMMANDE", 1).otherwise(9))
-      .orderBy(col("status_rank").asc, col("modified_ts").desc, col("start_ts").desc,
-        col("incident_id").asc)
   }
 
   /** Full ingest: paged XML source → normalize → latest-wins upsert into a

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Artifacts
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -39,7 +40,8 @@ object ScaleProbe {
     val factor = if (args.length > 2) args(2).toInt else 10
     val named = Harness.select(args.drop(3).toSeq)
     val spark = Harness.session(Harness.cpus)
-    spark.sparkContext.setCheckpointDir(s"$dst/_checkpoints")
+    val checkpoints = new java.io.File(s"$dst/_checkpoints")
+    spark.sparkContext.setCheckpointDir(checkpoints.getPath)
 
     def base(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     def keyBase(df: DataFrame, c: String): Long =
@@ -313,5 +315,7 @@ object ScaleProbe {
       println(row.fold(m => s"| $q | ERROR $m |", identity))
     }
     spark.stop()
+    // the probe set the checkpoint dir, so it owns the reliable cuts' files
+    Artifacts.deleteRecursively(checkpoints)
   }
 }

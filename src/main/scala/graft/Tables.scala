@@ -36,11 +36,6 @@ object Tables {
       memo.computeIfAbsent(key, _ => read)
     }
 
-  /** Drop every memoized plan — call after regenerating a fixture dir
-    * in-place within one session (no harness path does; ScaleProbe
-    * writes scaled tables before first reading them). */
-  def clear(): Unit = memo.clear()
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     memoized((spark, dir, name), spark.read.parquet(s"$dir/$name.parquet"))
 

@@ -1161,7 +1161,7 @@ object Similarity {
         val cnt = n2.agg(count(lit(1)).as("cnt"))
         val med = graft.operators.GlobalOrder
           .withGlobalRowNumber(n2, Seq(col("n2m").asc, col("vec_id").asc), "rn")
-          .crossJoin(broadcast(cnt))
+          .crossJoin(cnt)
           .where(expr("rn = (cnt + 1) div 2"))
           .select(col("n2m").as("m"))
         n2.crossJoin(broadcast(med))
@@ -2102,7 +2102,7 @@ object Similarity {
           .select(col("vec_id"), col("cent_id").as("cluster"))
         val per = assign.groupBy("cluster").agg(count(lit(1)).as("n_vecs"))
         val tot = per.agg(sum("n_vecs").as("t"), count(lit(1)).as("cells"))
-        per.crossJoin(broadcast(tot))
+        per.crossJoin(tot)
           .select(col("cluster"), col("n_vecs"),
             expr("(n_vecs * CAST(1000000 AS BIGINT)) div t").as("share_micro"),
             expr("(n_vecs * cells * CAST(1000000 AS BIGINT)) div t").as("balance_micro"))
@@ -2397,7 +2397,7 @@ object Similarity {
             // collapsed/anisotropic spaces this probe exists to detect.
             .agg(sum(expr("CAST(mij AS DECIMAL(38,0)) * v")).as("w"))
           val mx = w.agg(max(abs(col("w"))).as("mx"))
-          w.crossJoin(broadcast(mx))
+          w.crossJoin(mx)
             .select(col("dim"),
               expr("CAST((CAST(w AS DECIMAL(38,0)) * 1000000) div mx AS BIGINT)")
                 .as("v"))
@@ -2411,7 +2411,7 @@ object Similarity {
           .agg(sum(expr("CAST(mij AS DECIMAL(38,0)) * va * vb")).as("vmv"))
         val vv = v2.agg(sum(col("v") * col("v")).as("v2n"))
         val tr = m.where(col("i") === col("j")).agg(sum("mij").as("trace"))
-        ray.crossJoin(broadcast(vv)).crossJoin(broadcast(tr))
+        ray.crossJoin(vv).crossJoin(tr)
           .select(expr("CAST(vmv div v2n AS BIGINT)").as("lambda_top"),
             col("trace"),
             expr("CAST((CAST(vmv div v2n AS DECIMAL(38,0)) * 1000000) div trace AS BIGINT)")
@@ -2813,7 +2813,7 @@ object Similarity {
           .agg(count(lit(1)).as("n"))
         val bp = n0.select(expr("greatest(8, n div 64)").as("b"))
         val v = Tables.embeddings(s, d).where(col("label").isin(0, 1))
-          .crossJoin(broadcast(bp))
+          .crossJoin(bp)
           .select(col("vec_id"), col("label"),
             (conv(substring(md5(concat(lit("mm:"),
               col("vec_id").cast("string"))), 1, 12), 16, 10)

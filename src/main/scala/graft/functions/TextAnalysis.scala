@@ -130,7 +130,7 @@ object TextAnalysis {
           .agg(count(lit(1)).as("cnt"))
           .orderBy(col("cnt").desc, col("phrase").asc)
           .limit(1).select("phrase")
-        bigrams.join(broadcast(top), "phrase")
+        bigrams.join(top, "phrase")
           .select("doc_id", "pos", "phrase")
           .orderBy("doc_id", "pos")
       },
@@ -211,7 +211,7 @@ object TextAnalysis {
         val vocab = uni.agg(count(lit(1)).as("v"))
         val model = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
           .join(uni, col("w1") === col("u_w"))
-          .crossJoin(broadcast(vocab))
+          .crossJoin(vocab)
           .select(col("w1"), col("w2"),
             expr("CAST(round(ln((c12 + 1.0) / (c1 + v)) * 1000000) AS BIGINT)")
               .as("s_micro"))
@@ -408,7 +408,7 @@ object TextAnalysis {
         val dfreq = toks.groupBy("tok").agg(countDistinct("doc_id").as("df"))
         val n = docs.agg(countDistinct("doc_id").as("n_docs"))
         val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("tok"))
-        tf.join(dfreq, "tok").crossJoin(broadcast(n))
+        tf.join(dfreq, "tok").crossJoin(n)
           .withColumn("score",
             round(col("tf").cast("double") * col("n_docs") / col("df"), 4))
           .withColumn("rn", row_number().over(w).cast("int"))
@@ -452,7 +452,7 @@ object TextAnalysis {
         val dfreq = toks.groupBy("tok").agg(countDistinct("doc_id").as("df"))
         val stats = docs.agg(count(lit(1)).as("n_docs"),
           sum(size(split(col("text"), " "))).as("tot_toks"))
-        tf.join(broadcast(dfreq), "tok").crossJoin(broadcast(stats))
+        tf.join(broadcast(dfreq), "tok").crossJoin(stats)
           .select(col("doc_id"), expr(
             """CAST(round(
               |  ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
@@ -818,7 +818,7 @@ object TextAnalysis {
         val tot = sw.agg(sum("c_sw").as("n_tot"))
         sw.join(broadcast(srcTot), "source")
           .join(wTot, "w")
-          .crossJoin(broadcast(tot))
+          .crossJoin(tot)
           .select(col("source"), expr(
             """CAST(round(c_sw / CAST(n_s AS DOUBLE)
               |  * ln((c_sw * CAST(n_tot AS DOUBLE)) / (CAST(n_s AS DOUBLE) * c_w))
@@ -1023,7 +1023,7 @@ object TextAnalysis {
         val dfreq = toks.groupBy("tok").agg(countDistinct("doc_id").as("df"))
         val stats = docs.agg(count(lit(1)).as("n_docs"),
           sum(size(split(col("text"), " "))).as("tot_toks"))
-        val bm = tf.join(broadcast(dfreq), "tok").crossJoin(broadcast(stats))
+        val bm = tf.join(broadcast(dfreq), "tok").crossJoin(stats)
           .select(col("doc_id"), expr(
             """CAST(round(
               |  ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
@@ -1173,7 +1173,7 @@ object TextAnalysis {
         val wt = cnt.groupBy("w").agg(sum("a").as("nw"))
         val tot = cnt.agg(sum("a").as("n"))
         val g2 = cnt.join(broadcast(st), "source").join(broadcast(wt), "w")
-          .crossJoin(broadcast(tot))
+          .crossJoin(tot)
           .select(col("source"), col("w"),
             expr("""CAST(round(2000000.0 * (
                    |  CASE WHEN a > 0 THEN a*ln(CAST(a AS DOUBLE)*n/(CAST(ns AS DOUBLE)*nw)) ELSE 0.0 END +
@@ -1261,7 +1261,7 @@ object TextAnalysis {
         val st = dc.groupBy("w")
           .agg(sum("c").as("cf"), count(lit(1)).as("df"), sum(expr("c*c")).as("cc"))
         st.orderBy(col("cf").desc, col("w")).limit(10)
-          .crossJoin(broadcast(nd))
+          .crossJoin(nd)
           .select(col("w"), col("cf").as("corpus_freq"), col("df").as("doc_freq"),
             expr("""CAST(round(1000000.0 *
                    |  (CAST(cc AS DOUBLE)/d - (CAST(cf AS DOUBLE)/d)*(CAST(cf AS DOUBLE)/d))
@@ -1364,7 +1364,7 @@ object TextAnalysis {
         val qt = toks.groupBy("w").agg(countDistinct("doc_id").as("df"))
           .orderBy(col("df").desc, col("w")).limit(3).select(col("w"))
         val fl = toks
-          .join(broadcast(qt.withColumn("hit", lit(1L))), Seq("w"), "left")
+          .join(qt.withColumn("hit", lit(1L)), Seq("w"), "left")
           .select(col("doc_id"), col("pos"),
             coalesce(col("hit"), lit(0L)).as("f"))
         val win = fl.withColumn("score",
@@ -1505,14 +1505,14 @@ object TextAnalysis {
           .transform(Loop.cutLineage(_))
         val top = c12.orderBy(col("c").desc, col("w1"), col("w2")).limit(20)
           .transform(Loop.cutLineage(_))
-        val c1 = c12.join(broadcast(top.select("w1").distinct()), "w1",
+        val c1 = c12.join(top.select("w1").distinct(), "w1",
             "left_semi").groupBy("w1")
           .agg(sum("c").as("cw1"), count(lit(1)).as("nfollow"))
-        val cont = c12.join(broadcast(top.select("w2").distinct()), "w2",
+        val cont = c12.join(top.select("w2").distinct(), "w2",
             "left_semi").groupBy("w2").agg(count(lit(1)).as("nprec"))
         val tot = c12.agg(count(lit(1)).as("ntypes"))
         top.join(broadcast(c1), "w1").join(broadcast(cont), "w2")
-          .crossJoin(broadcast(tot))
+          .crossJoin(tot)
           .select(col("w1"), col("w2"), col("c").cast("long").as("c"),
             expr("""CAST(
                    |  (1000000 * (CAST(c AS DECIMAL(38,0)) * 4 - 3)) div (cw1 * 4)
@@ -1682,8 +1682,8 @@ object TextAnalysis {
         val top = wt.orderBy(col("cw").desc, col("w")).limit(10)
         val st = ws.groupBy("source").agg(sum("c").as("ts"))
         val tt = st.agg(sum(expr("CAST(ts AS DECIMAL(38,0))")).as("tt"))
-        val wsTop = ws.join(broadcast(top.select("w")), Seq("w"), "left_semi")
-        top.crossJoin(broadcast(st)).crossJoin(broadcast(tt))
+        val wsTop = ws.join(top.select("w"), Seq("w"), "left_semi")
+        top.crossJoin(broadcast(st)).crossJoin(tt)
           .join(broadcast(wsTop), Seq("w", "source"), "left")
           .select(col("w"), col("cw"),
             abs(expr("""CAST(coalesce(c, 0) AS DECIMAL(38,0)) * 1000000 div cw
@@ -1771,7 +1771,7 @@ object TextAnalysis {
             expr("""CAST(round(1e9 * sqrt(sqrt(CAST(c AS DOUBLE)
                    |  * c * c))) AS BIGINT)""".stripMargin).as("s_nano"))
         val tot = cw.agg(sum(expr("CAST(s_nano AS DECIMAL(38,0))")).as("ts"))
-        cw.crossJoin(broadcast(tot))
+        cw.crossJoin(tot)
           .select(col("w").as("word"), col("c").cast("long").as("n_occurrences"),
             expr("CAST((1000000 * CAST(s_nano AS DECIMAL(38,0))) div ts AS BIGINT)")
               .as("p_micro"))

@@ -62,7 +62,7 @@ private[graft] object Artifacts {
     }
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  def deleteRecursively(f: java.io.File): Unit = {
     val kids = f.listFiles()
     if (kids != null) kids.foreach(deleteRecursively)
     f.delete(): Unit

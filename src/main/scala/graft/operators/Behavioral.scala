@@ -339,7 +339,7 @@ object Behavioral {
         val ranked = GlobalOrder.withGlobalNtile(
           pu, Seq(col("n").desc, col("user_id")), 10, "decile")
         val tot = pu.agg(sum("n").as("t"))
-        ranked.crossJoin(broadcast(tot))
+        ranked.crossJoin(tot)
           .groupBy("decile")
           .agg(count(lit(1)).as("users"), sum("n").as("events"),
             expr("(sum(n) * CAST(1000000 AS BIGINT)) div max(t)").as("share_micro"))
@@ -399,7 +399,7 @@ object Behavioral {
         val t = c.groupBy("event_type").agg(sum("n").as("tn"))
         val g = c.agg(sum("n").as("gn"))
         c.join(u, "user_id").join(broadcast(t), "event_type")
-          .crossJoin(broadcast(g))
+          .crossJoin(g)
           .select(col("user_id"), col("event_type"), col("n"),
             // 128-bit numerator: n·gn·1e6 passes int64 at corpus event
             // counts (DuckDB widens the same product to HUGEINT).
@@ -433,7 +433,7 @@ object Behavioral {
             col("event_type"))
           .groupBy("dow", "event_type").agg(count(lit(1)).as("n"))
         val t = c.agg(sum("n").as("tot"))
-        c.crossJoin(broadcast(t))
+        c.crossJoin(t)
           .select(col("dow"), col("event_type"), col("n"),
             expr("(n * CAST(1000000 AS BIGINT)) div tot").as("share_micro"))
           .orderBy("dow", "event_type")
@@ -621,7 +621,7 @@ object Behavioral {
         val grid = grp.crossJoin(broadcast(glb))
           .join(cell, Seq("source", "lang"), "left")
           .na.fill(0L, Seq("a"))
-          .crossJoin(broadcast(tot))
+          .crossJoin(tot)
         val tvd = grid.groupBy("source")
           .agg(max("ng").as("ng"), max("n").as("n"),
             sum(abs(expr("CAST(a AS DECIMAL(38,0)) * n - CAST(b AS DECIMAL(38,0)) * ng")))
@@ -749,12 +749,12 @@ object Behavioral {
         val ud = p.select(col("user_id"), to_date(col("ts")).as("day")).distinct()
         val n = s.range(1, 8).select(col("id").as("day_n"))
         val cohort = fp.agg(count(lit(1)).as("cohort"))
-        fp.join(ud, "user_id").crossJoin(broadcast(n))
+        fp.join(ud, "user_id").crossJoin(n)
           .groupBy("day_n")
           .agg(countDistinct(when(col("day") ===
             expr("date_add(d0, CAST(day_n AS INT))"), col("user_id")))
             .as("retained"))
-          .crossJoin(broadcast(cohort))
+          .crossJoin(cohort)
           .select(col("day_n"), col("cohort"), col("retained"),
             expr("retained * 1000 div cohort").as("retention_milli"))
           .orderBy("day_n")
@@ -999,7 +999,7 @@ object Behavioral {
           .where(col("r") === expr("(n_gaps + 1) div 2"))
           .select(col("user_id"), col("n_gaps"), col("gap_ms").as("med_gap_ms"))
         val lastp = p.groupBy("user_id").agg(max(col("ms")).as("last_ms"))
-        med.join(lastp, "user_id").crossJoin(broadcast(anchor))
+        med.join(lastp, "user_id").crossJoin(anchor)
           .select(col("user_id"), col("n_gaps"), col("med_gap_ms"),
             (col("mx") - col("last_ms")).as("idle_ms"))
           .select(col("user_id"), col("n_gaps"), col("med_gap_ms"), col("idle_ms"),
@@ -1161,7 +1161,7 @@ object Behavioral {
           lead(col("tsu"), 1).over(Window.partitionBy("user_id")
             .orderBy(col("tsu").asc, col("event_id").asc)))
         val asof = p.agg(expr("(min(tsu) + max(tsu)) div 2").as("t"))
-        scd.crossJoin(broadcast(asof))
+        scd.crossJoin(asof)
           .where(col("tsu") <= col("t") &&
             (col("valid_to").isNull || col("valid_to") > col("t")))
           .groupBy("band").agg(count(lit(1)).as("n_users"))

@@ -672,7 +672,7 @@ object CoreQueries {
             .otherwise(round(col("value") / 10 + 55, 4)).as("lat"),
           when(col("event_id") % 3 === 0, lit(null))
             .otherwise(round(col("value") / 20 + 11, 4)).as("lon"))
-        src.join(broadcast(centers), Seq("county"), "left")
+        src.join(centers, Seq("county"), "left")
           .select(col("event_id"), col("county"),
             coalesce(col("lat"), col("c_lat")).as("latitude"),
             coalesce(col("lon"), col("c_lon")).as("longitude"))
@@ -751,7 +751,7 @@ object CoreQueries {
         val groups = Tables.events(s, d)
           .select(element_at(names, (col("user_id") % 5 + 1).cast("int")).as("county"))
           .groupBy("county").agg(count(lit(1)).as("n"))
-        groups.join(broadcast(dim), Seq("county"), "left")
+        groups.join(dim, Seq("county"), "left")
           .withColumn("hex_color", coalesce(col("hex_color"), lit("#cccccc")))
           .withColumn("rgba", hexToRgba(col("hex_color"), 210))
           .select(col("county"), col("n"), col("hex_color"),

@@ -454,8 +454,8 @@ object Curation {
         val vocabN = cc.agg(count(lit(1)).as("v"))
         val model = cc.join(ct, Seq("w"), "left")
           .na.fill(0L, Seq("c_t"))
-          .crossJoin(broadcast(nC)).crossJoin(broadcast(nT))
-          .crossJoin(broadcast(vocabN))
+          .crossJoin(nC).crossJoin(nT)
+          .crossJoin(vocabN)
           .select(col("w"), expr(
             """CAST(round((ln((c_t + 1.0) / (n_t + v))
               |  - ln((c_c + 1.0) / (n_c + v))) * 1000000) AS BIGINT)""".stripMargin)
@@ -506,7 +506,7 @@ object Curation {
         val per = docs.groupBy("source").agg(count(lit(1)).as("n_src"))
         val tot = docs.agg(count(lit(1)).as("total"))
         val rate = least(lit(1.0), lit(0.04) * col("total") / col("n_src"))
-        val rates = per.crossJoin(broadcast(tot))
+        val rates = per.crossJoin(tot)
           .select(col("source"), col("n_src"),
             format_string("%03x", floor(rate * lit(256)).cast("int")).as("cut"))
         docs.join(broadcast(rates), "source")
@@ -556,7 +556,7 @@ object Curation {
           // column's whole report row — the exact row a profiler exists
           // to surface. The oracle's scalar subqueries return NULL there;
           // this matches them.
-          stats.join(broadcast(top), lit(true), "left")
+          stats.join(top, lit(true), "left")
             .select(lit(name).as("col_name"), col("n_rows"), col("n_nonnull"),
               col("n_distinct"), col("min_v"), col("max_v"),
               col("top_value"), col("top_count"))
@@ -609,7 +609,7 @@ object Curation {
         val per = docs.groupBy("source").agg(count(lit(1)).as("n_src"))
         val tot = docs.agg(count(lit(1)).as("total"))
         val f = least(lit(4.0), lit(0.25) * col("total") / col("n_src"))
-        val rates = per.crossJoin(broadcast(tot))
+        val rates = per.crossJoin(tot)
           .select(col("source"), col("n_src"),
             floor(f).cast("int").as("n_int"),
             format_string("%04x",
@@ -849,7 +849,7 @@ object Curation {
           .groupBy("label").agg(count(lit(1)).as("n"))
         val total = byLabel.agg(sum("n").as("t"),
           count(lit(1)).as("k"), max("n").as("max_n"))
-        byLabel.crossJoin(broadcast(total))
+        byLabel.crossJoin(total)
           .select(col("k"), col("t"), col("max_n"), expr(
             """CAST(round(-(n / CAST(t AS DOUBLE))
               |  * ln(n / CAST(t AS DOUBLE)) * 1000000) AS BIGINT)"""
@@ -1069,7 +1069,7 @@ object Curation {
         val ranked = GlobalOrder.withGlobalRowNumber(
           freq, Seq(col("n").desc, col("w")), "rnk")
         val tot = freq.agg(sum("n").as("t"))
-        ranked.crossJoin(broadcast(tot))
+        ranked.crossJoin(tot)
           .select(explode(array(lit(10), lit(25), lit(50))).as("k"),
             col("rnk"), col("n"), col("t"))
           .groupBy("k")
@@ -1408,7 +1408,7 @@ object Curation {
           .withColumn("w1", substring_index(col("gram"), " ", 1))
         val ct = c2.groupBy("w1").agg(sum("n").as("t"))
         val tot = c2.agg(sum("n").as("g"))
-        c2.join(ct, "w1").crossJoin(broadcast(tot))
+        c2.join(ct, "w1").crossJoin(tot)
           .select(round((col("n").cast("double") / col("g").cast("double")) *
             log(col("t").cast("double") / col("n").cast("double")) * lit(1e9))
             .cast("long").as("term_nano"))
@@ -1448,7 +1448,7 @@ object Curation {
           .groupBy("source")
           .agg(count(lit(1)).as("n"), count(when(col("sampled"), 1)).as("k"))
         val t = f.agg(sum("n").as("tn"), sum("k").as("tk"))
-        f.crossJoin(broadcast(t))
+        f.crossJoin(t)
           .select(
             expr("(n * CAST(1000000 AS BIGINT)) div tn").as("full_micro"),
             expr("CAST(CASE WHEN tk > 0 THEN (k * 1000000) div tk ELSE 0 END AS BIGINT)")
@@ -1553,12 +1553,12 @@ object Curation {
         val src = Tables.documents(s, d)
           .groupBy("source").agg(sum(length(col("text"))).as("c"))
         val t = src.agg(sum("c").as("ct"))
-        val w = src.crossJoin(broadcast(t))
+        val w = src.crossJoin(t)
           .select(col("source"), col("c"), col("ct"),
             round(exp(lit(0.7) * log(col("c").cast("double") / col("ct"))) * 1e9)
               .cast("long").as("w_nano"))
         val z = w.agg(sum("w_nano").as("wz"))
-        w.crossJoin(broadcast(z))
+        w.crossJoin(z)
           .select(col("source"), col("c").as("chars"),
             expr("CAST(CAST(c AS DECIMAL(38,0)) * 1000000 div ct AS BIGINT)")
               .as("raw_share_micro"),
@@ -1613,7 +1613,7 @@ object Curation {
           expr("""CAST(2 * (n * g2_1 - sv * CAST(2 * n1 - n AS DECIMAL(38,0)))
                  | * 1000000000 div (n * sv2 - sv * sv) AS BIGINT)""".stripMargin)
             .as("b1_nano"))
-        val pr = e.crossJoin(broadcast(b1))
+        val pr = e.crossJoin(b1)
           .withColumn("p_micro",
             expr("""CAST(round(1000000.0 / (1.0 + exp(-(b0_micro / 1000000.0
                    | + b1_nano / 1000000000.0 * v)))) AS BIGINT)""".stripMargin))
@@ -1624,7 +1624,7 @@ object Curation {
           sum(expr("CAST(w_micro AS DECIMAL(38,0))")).as("h00s"),
           sum(expr("CAST(w_micro AS DECIMAL(38,0)) * v")).as("h01s"),
           sum(expr("CAST(w_micro AS DECIMAL(38,0)) * v * v")).as("h11s"))
-        s2.crossJoin(broadcast(b1))
+        s2.crossJoin(b1)
           .select(col("n"), col("n_pos"),
             col("b0_micro").as("beta0_micro"), col("b1_nano").as("beta1_nano"),
             expr("""b0_micro + CAST((h11s * g0s - h01s * g1s) * 1000000
@@ -1740,7 +1740,7 @@ object Curation {
           expr("CAST(round(value*1000) AS BIGINT)").as("v"),
           when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"))
         val mm = e.agg(min("v").as("vmin"), max("v").as("vmax"))
-        val h = e.crossJoin(broadcast(mm))
+        val h = e.crossJoin(mm)
           .select(expr("CAST(((v - vmin) * 32) div (vmax - vmin + 1) AS INT)")
             .as("bin"), col("y"))
           .groupBy("bin").agg(count(lit(1)).as("n_b"), sum("y").as("pos_b"))
@@ -1748,7 +1748,7 @@ object Curation {
         val run = h.select(col("bin"),
           sum("n_b").over(w).as("nl"), sum("pos_b").over(w).as("posl"))
         val tot = e.agg(count(lit(1)).as("n"), sum("y").as("pos"))
-        val sc = run.crossJoin(broadcast(tot))
+        val sc = run.crossJoin(tot)
           .where(col("nl") > 0 && col("nl") < col("n"))
           .select(col("bin"), col("nl"), col("posl"),
             (col("n") - col("nl")).as("nr"), (col("pos") - col("posl")).as("posr"),
@@ -1759,7 +1759,7 @@ object Curation {
                    |   * 1000000 div (n - nl) AS BIGINT)""".stripMargin)
               .as("purity_score"))
         val best = sc.orderBy(col("purity_score").desc, col("bin")).limit(1)
-        best.crossJoin(broadcast(mm))
+        best.crossJoin(mm)
           .select(col("vmin"), col("vmax"), col("bin").as("best_bin"),
             expr("CAST(vmin + (bin + 1) * (vmax - vmin + 1) div 32 AS BIGINT)")
               .as("threshold_milli"),
@@ -1809,7 +1809,7 @@ object Curation {
             .as("prior_micro"))
         e.groupBy("event_type")
           .agg(count(lit(1)).as("n"), sum("y").as("pos"))
-          .crossJoin(broadcast(tot))
+          .crossJoin(tot)
           .select(col("event_type"), col("n"), col("pos"), col("prior_micro"),
             expr("""CAST((CAST(pos AS DECIMAL(38,0)) * 1000000 + 10 * prior_micro)
                    | div (n + 10) AS BIGINT)""".stripMargin).as("enc_micro"))
@@ -1851,7 +1851,7 @@ object Curation {
         val w = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)
         g.withColumn("cum_pos", sum("pos_d").over(w))
           .withColumn("cum_n", sum("n_d").over(w))
-          .crossJoin(broadcast(tot))
+          .crossJoin(tot)
           .select(col("decile").cast("int").as("decile"), col("n_d"), col("pos_d"),
             expr("CAST(cum_pos * 1000000 div pos AS BIGINT)").as("cum_gain_micro"),
             expr("""CAST((CAST(cum_pos AS DECIMAL(38,0)) * n * 1000000)
@@ -1925,7 +1925,7 @@ object Curation {
           when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"))
         val r = lab.agg(sum("y").as("pos"),
           (count(lit(1)) - sum("y")).as("neg"))
-        lab.crossJoin(broadcast(r))
+        lab.crossJoin(r)
           .where(col("y") === 1 ||
             conv(substring(md5(concat(lit("ds:"),
               col("event_id").cast("string"))), 1, 12), 16, 10)
@@ -1970,7 +1970,7 @@ object Curation {
         val t = sc.agg(sum("y").as("pos"), (count(lit(1)) - sum("y")).as("neg"))
         sc.groupBy("bin")
           .agg(sum("y").as("p"), (count(lit(1)) - sum("y")).as("q"))
-          .crossJoin(broadcast(t))
+          .crossJoin(t)
           .select(col("bin"), col("p").as("n_pos"), col("q").as("n_neg"),
             expr("""CAST(round(ln(((CAST(p AS DOUBLE) + 0.5)/pos)
                    | / ((CAST(q AS DOUBLE) + 0.5)/neg)) * 1000000) AS BIGINT)""".stripMargin)
@@ -2022,7 +2022,7 @@ object Curation {
           expr("date_add(DATE'2024-01-01', CAST(5*id AS INT))").as("cut"))
         val dc = ev.groupBy(to_date(col("ts")).as("day"))
           .agg(count(lit(1)).as("n"))
-        val evc = dc.crossJoin(broadcast(folds))
+        val evc = dc.crossJoin(folds)
           .groupBy("fold")
           .agg(coalesce(sum(when(col("day") < col("cut"), col("n"))), lit(0L))
               .as("train_n"),
@@ -2030,7 +2030,7 @@ object Curation {
               && col("day") < date_add(col("cut"), 5), col("n"))), lit(0L))
               .as("test_n"))
         val ud = ev.select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-        val us = ud.crossJoin(broadcast(folds))
+        val us = ud.crossJoin(folds)
           .groupBy("fold", "user_id")
           .agg(max(when(col("day") < col("cut"), 1L).otherwise(0L)).as("tr"),
             max(when(col("day") >= col("cut")
@@ -2141,7 +2141,7 @@ object Curation {
         val topv = tok.groupBy("w").agg(count(lit(1)).as("n"))
           .orderBy(col("n").desc, col("w")).limit(20)
           .select(col("w"), lit(1L).as("in_vocab"))
-        tok.join(broadcast(topv), Seq("w"), "left")
+        tok.join(topv, Seq("w"), "left")
           .groupBy("source")
           .agg(count(lit(1)).as("n_tokens"),
             sum(when(col("in_vocab").isNull, 1L).otherwise(0L)).as("oov_tokens"))
@@ -2304,10 +2304,10 @@ object Curation {
         val grid = s.range(0, 5).select(
           expr("CAST(element_at(array(1, 5, 10, 20, 50), CAST(id AS INT) + 1) AS BIGINT)")
             .as("k"))
-        rk.crossJoin(broadcast(grid))
+        rk.crossJoin(grid)
           .groupBy("k")
           .agg(sum(when(col("r") <= col("k"), col("n")).otherwise(0L)).as("covered"))
-          .crossJoin(broadcast(tot))
+          .crossJoin(tot)
           .select(col("k"),
             expr("covered * 1000000 div t").as("coverage_micro"),
             col("vocab").as("vocab_size"))
@@ -2579,7 +2579,7 @@ object Curation {
         val cw = w.groupBy("w").agg(count(lit(1)).as("c"))
         val n = w.agg(count(lit(1)).as("nt"))
         val dw = w.groupBy("source", "w").agg(count(lit(1)).as("cd"))
-        val terms = dw.join(cw, "w").crossJoin(broadcast(n))
+        val terms = dw.join(cw, "w").crossJoin(n)
           .select(col("source"), col("cd"),
             expr("CAST(round(1000000000.0 * cd * ln(CAST(nt AS DOUBLE) / c)) AS BIGINT)")
               .as("t_nano"))
@@ -2587,14 +2587,14 @@ object Curation {
           .agg(sum("cd").as("toks"),
             sum(expr("CAST(t_nano AS DECIMAL(38,0))")).as("loss_nano"))
         val tot = dom.agg(sum("toks").as("nt"))
-        val base = dom.crossJoin(broadcast(tot))
+        val base = dom.crossJoin(tot)
           .select(col("source"), col("toks"),
             expr("CAST(loss_nano div toks div 1000 AS BIGINT)").as("loss_micro"),
             expr("CAST((1000000 * toks) div nt AS BIGINT)").as("w0_micro"))
         val upd = base.withColumn("raw",
           expr("CAST(round(w0_micro * exp(0.1 * (loss_micro / 1000000.0))) AS BIGINT)"))
         val z = upd.agg(sum("raw").as("z"))
-        upd.crossJoin(broadcast(z))
+        upd.crossJoin(z)
           .select(col("source"), col("toks").cast("long").as("tokens"),
             col("loss_micro"), col("w0_micro"),
             expr("CAST((1000000 * CAST(raw AS DECIMAL(38,0))) div z AS BIGINT)")
@@ -2887,7 +2887,7 @@ object Curation {
           .agg(count(lit(1)).as("n"),
             sum(expr("CAST(q AS DECIMAL(38,0))")).as("sq"))
         val tot = g.agg(sum("n").as("nn"), sum("sq").as("ss"))
-        g.crossJoin(broadcast(tot))
+        g.crossJoin(tot)
           .select(col("source"), col("n").cast("long").as("n_docs"),
             expr("CAST((1000000 * sq) div n AS BIGINT)").as("source_mean_micro"),
             expr("""CAST((1000000 * (ss - sq)) div (nn - n)
@@ -2927,7 +2927,7 @@ object Curation {
         var picked = s.range(0).select(col("id").as("doc_id"),
           lit(0L).as("round"), lit(0L).as("gain"))
         for (r <- 1 to 5) {
-          val covered = sh.join(broadcast(picked.select("doc_id")),
+          val covered = sh.join(picked.select("doc_id"),
             Seq("doc_id"), "left_semi").select("g").distinct()
           val pick = sh.join(covered, Seq("g"), "left_anti")
             .groupBy("doc_id").agg(count(lit(1)).as("gain"))
@@ -3021,7 +3021,7 @@ object Curation {
     val vocab = train.agg(countDistinct("w").as("vocab"))
     val pri = train.groupBy("source").agg(countDistinct("doc_id").as("nd"))
     val tot = pri.agg(sum("nd").as("td"))
-    val priors = pri.crossJoin(broadcast(tot))
+    val priors = pri.crossJoin(tot)
       .select(col("source").as("cls"),
         expr("CAST(round(1e9*ln(CAST(nd AS DOUBLE)/td)) AS BIGINT)")
           .as("prior_nano"))
@@ -3030,7 +3030,7 @@ object Curation {
       .agg(count(lit(1)).as("cnt"))
     val terms = tw
       .crossJoin(broadcast(cs.select(col("source").as("cls"), col("ns"))))
-      .crossJoin(broadcast(vocab))
+      .crossJoin(vocab)
       .join(broadcast(model), Seq("cls", "w"), "left")
       .select(col("doc_id"), col("true_source"), col("cls"),
         expr("cnt * CAST(round(1e9*ln((coalesce(a,0)+1.0)/(ns + vocab))) AS BIGINT)")

@@ -40,7 +40,7 @@ object DedupOps {
   private[graft] def setsimScopeGuard(docs: DataFrame,
       maxDocs: Long = SetsimJoinMaxDocs): DataFrame = {
     val nd = docs.agg(count(lit(1)).as("__nd"))
-    docs.crossJoin(broadcast(nd))
+    docs.crossJoin(nd)
       .where(assert_true(col("__nd") <= maxDocs,
         lit(s"q_setsim_join is the small-scale exactness oracle (pair-list " +
           s"output is quadratic in near-dup density): bounded to $maxDocs " +
@@ -1520,10 +1520,8 @@ object DedupOps {
           minhashSignature(corpus, "doc_id", "text", 4, shingleN = 3),
           "doc_id", 4, 2)
         val found = truth.join(cand, Seq("id1", "id2"), "left_semi")
-        // both sides are single-row aggregates; broadcast keeps the
-        // no-CartesianProduct plan sweep future-proof against AQE changes
         truth.agg(count(lit(1)).as("n_true"))
-          .crossJoin(broadcast(found.agg(count(lit(1)).as("n_found"))))
+          .crossJoin(found.agg(count(lit(1)).as("n_found")))
           .select(col("n_true"), col("n_found"),
             round(col("n_found").cast("double") / col("n_true"), 4).as("recall"))
       },

@@ -71,11 +71,11 @@ object Evaluation {
         val g = sc.groupBy("c").agg(count(lit(1)).as("nc"), sum("y").as("pc"))
         val tot = sc.agg(sum("y").as("pos"))
         val th = s.range(10).select((col("id") * 5000L).as("thr"))
-        g.crossJoin(broadcast(th))
+        g.crossJoin(th)
           .groupBy("thr")
           .agg(sum(when(col("c") >= col("thr"), col("nc"))).as("pred_pos"),
             sum(when(col("c") >= col("thr"), col("pc"))).as("tp"))
-          .crossJoin(broadcast(tot))
+          .crossJoin(tot)
           .select(col("thr").as("threshold_cents"),
             expr("CAST(coalesce(tp, 0) * 1000000 div nullif(pred_pos, 0) AS BIGINT)")
               .as("precision_micro"),
@@ -170,7 +170,7 @@ object Evaluation {
         val b = sc.groupBy(expr("least(p div 100000, CAST(9 AS BIGINT))").as("bin"))
           .agg(count(lit(1)).as("nb"), sum("y").as("pos_b"),
             sum(expr("CAST(p AS DECIMAL(38,0))")).as("psum"))
-        val terms = b.crossJoin(broadcast(t))
+        val terms = b.crossJoin(t)
           .select(
             expr("""CAST(round(pow(CAST(psum - pos_b*1000000 AS DOUBLE), 2)
                    | / nb / 1000) AS BIGINT)""".stripMargin).as("rel_nano"),
@@ -362,7 +362,7 @@ object Evaluation {
         val ranked = GlobalOrder.withGlobalRowNumber(cal,
           Seq(col("r").asc, col("k").asc), "rk")
         val qi = n.select(expr("(9*n + 18) div 10").as("rk"), col("n"))
-        val qr = ranked.join(broadcast(qi), "rk")
+        val qr = ranked.join(qi, "rk")
           .select(col("r").as("qhat"), col("n"))
         o.join(broadcast(mu), "g").where(col("fold") === 3)
           .crossJoin(broadcast(qr))
@@ -420,7 +420,7 @@ object Evaluation {
           .select(abs(col("x") - lag("x", 1).over(Window.orderBy("dt"))).as("r"))
           .where(col("r").isNotNull)
           .agg(count(lit(1)).as("m"), sum("r").as("rr"))
-        val cand = s.range(0, 32).toDF("j").crossJoin(broadcast(nn))
+        val cand = s.range(0, 32).toDF("j").crossJoin(nn)
           .select(col("j"),
             (conv(substring(md5(concat(lit("ra:"), col("j").cast("string"),
               lit(":1"))), 1, 12), 16, 10).cast("long") % col("n")).as("i1"),
@@ -432,7 +432,7 @@ object Evaluation {
           .where(col("i1") =!= col("i2"))
           .select(col("j"), col("i1").as("t1"), col("x1"),
             col("i2").as("t2"), col("x2"))
-        val fitj = cl.crossJoin(idx).crossJoin(broadcast(mr))
+        val fitj = cl.crossJoin(idx).crossJoin(mr)
           .where(expr("""abs(CAST(m AS DECIMAL(38,0))*((x - x1)*(t2 - t1)
                         | - (x2 - x1)*(t - t1)))
                         | <= CAST(rr AS DECIMAL(38,0)) * abs(t2 - t1)"""
@@ -440,7 +440,7 @@ object Evaluation {
           .groupBy("j").agg(count(lit(1)).as("inliers"))
         fitj.join(cl, "j")
           .orderBy(col("inliers").desc, col("j")).limit(1)
-          .crossJoin(broadcast(nn))
+          .crossJoin(nn)
           .select(col("n").as("n_days"), col("j").as("best_candidate"),
             col("inliers"),
             expr("CAST(inliers * 1000000 div n AS BIGINT)").as("inlier_share_micro"),

@@ -129,7 +129,7 @@ object Experimentation {
             .cast("int").as("digit"))
           .groupBy("digit").agg(count(lit(1)).as("n"))
         val t = c.agg(sum("n").as("tot"))
-        c.crossJoin(broadcast(t))
+        c.crossJoin(t)
           .select(col("digit"), col("n"),
             expr("(n * CAST(1000000 AS BIGINT)) div tot").as("observed_micro"),
             round(log(lit(1.0) + lit(1.0) / col("digit")) / log(lit(10.0)) * lit(1e6))
@@ -176,7 +176,7 @@ object Experimentation {
             .as("r1x2"),
           sum(expr("CAST(cnt AS DECIMAL(38,0)) * cnt * cnt - cnt")).as("tie3"))
         val tot = ev.agg(sum("g1").as("n1"), count(lit(1)).as("n"))
-        acc.crossJoin(broadcast(tot)).select(
+        acc.crossJoin(tot).select(
           col("n1"), (col("n") - col("n1")).as("n2"),
           expr("CAST(r1x2 - CAST(n1 AS DECIMAL(38,0)) * (n1 + 1) AS BIGINT)")
             .as("u1_x2"),
@@ -255,8 +255,8 @@ object Experimentation {
           expr("CAST(CAST(sum(v) AS DECIMAL(38,0)) * 1000 div count(1) AS BIGINT)")
             .as("mean_micro"))
         base
-          .crossJoin(broadcast(r.where(col("rn") === 1)
-            .select(col("mean_micro").as("boot_lo_micro"))))
+          .crossJoin(r.where(col("rn") === 1)
+            .select(col("mean_micro").as("boot_lo_micro")))
           .crossJoin(broadcast(r.where(col("rn") === 39)
             .select(col("mean_micro").as("boot_hi_micro"))))
       },
@@ -632,7 +632,7 @@ object Experimentation {
         val t = c.agg(sum("n").as("tot"))
         val mx = c.groupBy("event_type").agg(sum("n").as("nx"))
         val my = c.groupBy("hv").agg(sum("n").as("ny"))
-        c.join(mx, "event_type").join(my, "hv").crossJoin(broadcast(t))
+        c.join(mx, "event_type").join(my, "hv").crossJoin(t)
           .select(expr("""CAST(round(1000000000 * (CAST(n AS DOUBLE) / tot)
                  | * ln(CAST(n AS DOUBLE) * tot / (CAST(nx AS DOUBLE) * ny)))
                  | AS BIGINT)""".stripMargin).as("term_nano"))
@@ -806,7 +806,7 @@ object Experimentation {
         val tm = o.groupBy("per").agg(sum("o").as("np"))
         val ty = o.groupBy("event_type").agg(sum("o").as("nt"))
         val n = o.agg(sum("o").as("n"))
-        val cells = ty.crossJoin(broadcast(tm)).crossJoin(broadcast(n))
+        val cells = ty.crossJoin(broadcast(tm)).crossJoin(n)
           .join(o, Seq("event_type", "per"), "left")
           .select(col("event_type"),
             coalesce(col("o"), lit(0L)).as("obs"),
@@ -895,7 +895,7 @@ object Experimentation {
           expr("avg(1.0/n)").as("invn"))
         val tau = w.select(col("s2w"), col("mbar"),
           expr("greatest(vbar - s2w * invn, 0.0)").as("tau2"))
-        g.crossJoin(broadcast(tau))
+        g.crossJoin(tau)
           .join(broadcast(Tables.nation(s, d)
             .select(col("n_nationkey").as("nk"), col("n_name").as("nation"))), "nk")
           .select(col("nation"), col("n").as("n_orders"),
@@ -1329,7 +1329,7 @@ object Experimentation {
         val rr = nn.groupBy("rk").agg(sum("gn").as("gn"), sum("gs").as("gs"))
         val betn = nn.agg(sum(expr("CAST(gs AS DOUBLE)*gs/gn")).as("gmn"))
         val betr = rr.agg(sum(expr("CAST(gs AS DOUBLE)*gs/gn")).as("gmr"))
-        g.crossJoin(broadcast(betn)).crossJoin(broadcast(betr))
+        g.crossJoin(betn).crossJoin(betr)
           .select(
             expr("""CAST(round(CAST(CAST(n AS DECIMAL(38,0))*ss - CAST(s AS DECIMAL(38,0))*s AS DOUBLE)
                    | / n / 1000000.0) AS BIGINT)""".stripMargin).as("ss_total_mega"),
@@ -1395,7 +1395,7 @@ object Experimentation {
         val n = gr.agg(sum("nj").as("n"))
         val tie = byv.agg(
           sum(expr("CAST(cnt AS DECIMAL(38,0))*cnt*cnt - cnt")).as("t3"))
-        gr.crossJoin(broadcast(n)).crossJoin(broadcast(tie))
+        gr.crossJoin(n).crossJoin(tie)
           .groupBy()
           .agg(max("n").as("n"), count(lit(1)).as("k"),
             expr("""(3.0/(CAST(max(n) AS DOUBLE)*(max(n)+1)))
@@ -1452,8 +1452,8 @@ object Experimentation {
           .groupBy(to_date(col("ts")).as("day"), col("event_type").as("ty"))
           .agg(count(lit(1)).as("c"))
         val grid = dd.select("day").distinct()
-          .crossJoin(broadcast(
-            dd.sparkSession.createDataFrame(types.map(Tuple1(_))).toDF("ty")))
+          .crossJoin(
+            dd.sparkSession.createDataFrame(types.map(Tuple1(_))).toDF("ty"))
           .join(dd, Seq("day", "ty"), "left")
           .na.fill(0L, Seq("c"))
         val rk2 = grid
@@ -1464,7 +1464,7 @@ object Experimentation {
         val rj = rk2.groupBy("ty").agg(sum("r2").as("r2j"))
         val nn = rk2.select("day").distinct().agg(count(lit(1)).as("n"))
         val aa = rk2.agg(sum(expr("r2*r2")).as("a4"))
-        rj.crossJoin(broadcast(nn)).crossJoin(broadcast(aa))
+        rj.crossJoin(nn).crossJoin(aa)
           .groupBy()
           .agg(max("n").as("n"), count(lit(1)).as("k"),
             sum(expr("""CAST(r2j - CAST(n AS DECIMAL(38,0))*6 AS DOUBLE)
@@ -1663,7 +1663,7 @@ object Experimentation {
           (3L, "1999-09-01"), (4L, "2001-08-02")))
           .toDF("look", "cutoff")
           .select(col("look"), col("cutoff").cast("date").as("cutoff"))
-        val cum = o.join(broadcast(lk), col("dt") < col("cutoff"))
+        val cum = o.join(lk, col("dt") < col("cutoff"))
           .groupBy("look")
           .agg(sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n0"),
             sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n1"),
@@ -1728,7 +1728,7 @@ object Experimentation {
         val tm = o.groupBy("per").agg(sum("o").as("np"))
         val ty = o.groupBy("event_type").agg(sum("o").as("nt"))
         val n = o.agg(sum("o").as("n"))
-        val cells = ty.crossJoin(broadcast(tm)).crossJoin(broadcast(n))
+        val cells = ty.crossJoin(broadcast(tm)).crossJoin(n)
           .join(o, Seq("event_type", "per"), "left")
           .select(col("event_type"),
             coalesce(col("o"), lit(0L)).as("obs"),
@@ -1810,7 +1810,7 @@ object Experimentation {
         val tm = o.groupBy("per").agg(sum("o").as("np"))
         val ty = o.groupBy("event_type").agg(sum("o").as("nt"))
         val n = o.agg(sum("o").as("n"))
-        ty.crossJoin(broadcast(tm)).crossJoin(broadcast(n))
+        ty.crossJoin(broadcast(tm)).crossJoin(n)
           .join(o, Seq("event_type", "per"), "left")
           .select(col("event_type"), col("per").cast("long").as("per"),
             coalesce(col("o"), lit(0L)).as("obs"),
@@ -1927,7 +1927,7 @@ object Experimentation {
               .otherwise(expr("CAST(0 AS DECIMAL(38,0))"))).as("y1"),
             sum(when(col("t") === 0, expr("CAST(y AS DECIMAL(38,0))"))
               .otherwise(expr("CAST(0 AS DECIMAL(38,0))"))).as("y0"))
-          .crossJoin(broadcast(tsum))
+          .crossJoin(tsum)
           .select(col("n").cast("long").as("n_obs"),
             expr("""CAST(round((CAST(y1 AS DOUBLE)/n1
                    |  - CAST(y0 AS DOUBLE)/(n - n1)) * 10000) AS BIGINT)"""

@@ -63,7 +63,7 @@ object GeoArray {
         val a = hav(dLat) +
           cos(radians(col("lat"))) * cos(radians(col("c_lat"))) * hav(dLon)
         val distKm = lit(2 * 6371.0) * asin(sqrt(a))
-        pts.crossJoin(broadcast(centers))
+        pts.crossJoin(centers)
           .select(col("event_id"), col("county"), distKm.as("d"))
           .groupBy("event_id")
           .agg(min_by(col("county"), col("d")).as("nearest"),

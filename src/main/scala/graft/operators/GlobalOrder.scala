@@ -354,7 +354,7 @@ object GlobalOrder {
         val ordered = withGlobalRowNumber(docs,
           Seq(col("n_chars").desc, col("doc_id").asc), "pos")
         val tot = docs.agg(count(lit(1)).cast("long").as("_n"))
-        ordered.crossJoin(broadcast(tot))
+        ordered.crossJoin(tot)
           .select(col("doc_id"), col("n_chars"), col("pos"),
             ntileFrom(col("pos"), col("_n"), 4).as("quartile"))
           .orderBy("doc_id")
@@ -384,7 +384,7 @@ object GlobalOrder {
         val edgeRanks = tot
           .select(explode(sequence(lit(1), lit(10))).as("decile"), col("n"))
           .select(col("decile"), expr("(decile * n + 9) div 10").as("rn"))
-        ranked.join(broadcast(edgeRanks), "rn")
+        ranked.join(edgeRanks, "rn")
           .select(col("decile"), col("cents").as("upper_cents"))
           .orderBy("decile")
       },
@@ -423,7 +423,7 @@ object GlobalOrder {
           call_function("div", sum("toks"), lit(4L)).as("_budget"))
         val run = withRunningTotal(scored,
           Seq(col("q_micro").desc, col("doc_id").asc), col("toks"), "cum_toks")
-        run.crossJoin(broadcast(budget))
+        run.crossJoin(budget)
           .where(col("cum_toks") <= col("_budget"))
           .select("doc_id", "q_micro", "toks", "cum_toks")
           .orderBy("doc_id")
@@ -461,7 +461,7 @@ object GlobalOrder {
         val tot = docs.agg(count(lit(1)).cast("long").as("_n"))
         val rn = withGlobalRowNumber(docs,
           Seq(col("n_tokens").asc, col("doc_id").asc), "rn")
-        rn.crossJoin(broadcast(tot))
+        rn.crossJoin(tot)
           .withColumn("bucket", ntileFrom(col("rn"), col("_n"), 8))
           // tile t of ntile(k) over n rows starts at
           // (t−1)·q + min(t−1, r) + 1 with n = k·q + r

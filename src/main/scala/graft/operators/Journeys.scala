@@ -185,7 +185,7 @@ object Journeys {
           .select(explode(array(lit(25), lit(50), lit(75), lit(90))).as("q"),
             col("n"))
           .select(col("q"), expr("(q * n + 99) div 100").as("rn"))
-        r.join(broadcast(edgeRanks), "rn")
+        r.join(edgeRanks, "rn")
           .select(col("q"), col("secs")).orderBy("q")
       },
       Some("""WITH ev AS (SELECT user_id, event_type,
@@ -566,7 +566,7 @@ object Journeys {
         val trj = Loop.pinnedPersist(tr.join(rs, "a"))
         val sts = trj.select(col("a").as("st")).distinct()
         val ns = sts.agg(count(lit(1)).as("k"))
-        var pi = sts.crossJoin(broadcast(ns))
+        var pi = sts.crossJoin(ns)
           .select(col("st"), expr("CAST(1000000000 div k AS BIGINT)").as("pi"))
         for (_ <- 1 to 10) {
           pi = trj.join(pi, col("a") === col("st"))

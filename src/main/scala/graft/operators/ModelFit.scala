@@ -142,7 +142,7 @@ object ModelFit {
         val f0 = t0.select(col("n"),
           expr("CAST(1000000 * sy div n AS BIGINT)").as("f0"))
         // per-cell residual sums for stage 1: Σr = 10⁶·Σy − n·f0
-        val cells1 = cell.crossJoin(broadcast(f0))
+        val cells1 = cell.crossJoin(f0)
           .select(col("x1"), col("x2"), col("nc"), col("cy"), col("cyy"),
             col("f0").as("cc"))
         // r16 job-count fold (guide §5 driver section, verdict item 3):
@@ -206,12 +206,12 @@ object ModelFit {
         }
         val b1 = stump(hist(cells1, "x1"), "x1", 1)
         // stage-2 per-cell constant: cc = f0 + stage-1 leaf of the cell
-        val cells2 = cells1.crossJoin(broadcast(b1))
+        val cells2 = cells1.crossJoin(b1)
           .select(col("x1"), col("x2"), col("nc"), col("cy"), col("cyy"),
             expr("CAST(cc + CASE WHEN x1 <= thr1 THEN gl1 ELSE gr1 END AS BIGINT)")
               .as("cc"))
         val b2 = stump(hist(cells2, "x2"), "x2", 2)
-        f0.crossJoin(broadcast(b1)).crossJoin(broadcast(b2))
+        f0.crossJoin(broadcast(b1)).crossJoin(b2)
           .select(col("n").cast("long").as("n_obs"),
             col("f0").as("f0_micro"),
             col("thr1").cast("long").as("hour_threshold"),

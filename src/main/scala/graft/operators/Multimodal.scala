@@ -581,7 +581,7 @@ object Multimodal {
           .groupBy("id1", "id2")
           .agg(sum(expr("bit_count(vx ^ vy)")).as("hd"))
         val nd = Tables.documents(s, d).agg(count(lit(1)).as("docs"))
-        ham.crossJoin(broadcast(nd)).crossJoin(broadcast(sk))
+        ham.crossJoin(nd).crossJoin(sk)
           .agg(max("docs").as("n_docs"),
             count(lit(1)).as("cand_pairs"),
             sum(when(col("hd") <= 6, 1L).otherwise(0L)).as("dup_pairs"),

@@ -107,7 +107,7 @@ object RankEval {
         val j = a.join(b, "item")
           .select(greatest(col("ra"), col("rb")).as("m"))
         val depths = li.sparkSession.range(1, 21).select(col("id").as("depth"))
-        val x = depths.join(broadcast(j), col("m") <= col("depth"), "left")
+        val x = depths.join(j, col("m") <= col("depth"), "left")
           .groupBy("depth").agg(count(col("m")).as("xd"))
         x.select(col("depth"), col("xd"),
             expr("CAST(round(0.1 * pow(0.9, depth - 1) * xd / depth * 1000000) AS BIGINT)")
@@ -167,11 +167,11 @@ object RankEval {
             .as("p_micro"))
         val pbar = pit.agg(count(lit(1)).as("nitems"), sum("p_micro").as("psum"))
         val pe = nij.groupBy("c").agg(sum("n").as("cnt"))
-          .crossJoin(broadcast(pbar.select("nitems")))
+          .crossJoin(pbar.select("nitems"))
           .agg(sum(expr(
             "CAST(round(1000000.0 * cnt * cnt / (9.0 * nitems * nitems)) AS BIGINT)"))
             .as("pe_micro"))
-        pbar.crossJoin(broadcast(pe))
+        pbar.crossJoin(pe)
           .select(col("nitems").cast("long").as("n_items"),
             expr("psum div nitems").cast("long").as("pbar_micro"),
             col("pe_micro").cast("long").as("pe_micro"),
@@ -373,12 +373,12 @@ object RankEval {
           .groupBy(col("l_partkey").as("v")).agg(count(lit(1)).as("freq"))
         val tot = Tables.lineitem(s, d).agg(count(lit(1)).as("nl"))
         val cat = Tables.part(s, d).agg(count(lit(1)).as("ncat"))
-        rec.join(pop, "v").crossJoin(broadcast(tot))
+        rec.join(pop, "v").crossJoin(tot)
           .agg(count(lit(1)).as("nrec_inst"),
             countDistinct("v").as("nrec"),
             sum(expr("CAST(round(-1000.0 * log2(CAST(freq AS DOUBLE) / nl)) AS BIGINT)"))
               .as("novsum"))
-          .crossJoin(broadcast(cat))
+          .crossJoin(cat)
           .select(col("ncat").cast("long").as("n_catalog"),
             col("nrec").cast("long").as("n_recommended"),
             expr("CAST((1000000 * nrec) div ncat AS BIGINT)").as("coverage_micro"),

@@ -330,7 +330,7 @@ object Relational {
         rows.crossJoin(cols)
           .join(cells, Seq("event_type", "bucket"), "left")
           .na.fill(0L, Seq("o"))
-          .crossJoin(broadcast(total))
+          .crossJoin(total)
           .select(expr(
             """CAST(round(
               |  pow(o - r_n * c_n / CAST(t_n AS DOUBLE), 2)
@@ -374,7 +374,7 @@ object Relational {
         rows.crossJoin(broadcast(cols))
           .join(cells, Seq("source", "lang"), "left")
           .na.fill(0L, Seq("o"))
-          .crossJoin(broadcast(total))
+          .crossJoin(total)
           .select(col("t_n"), col("r"), col("c"), expr(
             """CAST(round(
               |  pow(o - r_n * c_n / CAST(t_n AS DOUBLE), 2)
@@ -817,7 +817,7 @@ object Relational {
         top
           .join(broadcast(pc.select(col("l_partkey").as("p1"), col("c").as("c1"))), "p1")
           .join(broadcast(pc.select(col("l_partkey").as("p2"), col("c").as("c2"))), "p2")
-          .crossJoin(broadcast(n))
+          .crossJoin(n)
           .select(col("p1"), col("p2"), col("cnt"),
             // 128-bit numerator: cnt·n_orders·1e6 passes int64 at corpus
             // order counts long before 100 TB (DuckDB widens to HUGEINT).
@@ -1033,7 +1033,7 @@ object Relational {
           count(lit(1)).as("total_parts"))
         val th = ranked.sparkSession.range(1).select(
           explode(array(lit(50), lit(90), lit(99))).as("threshold_pct"))
-        ranked.crossJoin(broadcast(tot)).crossJoin(broadcast(th))
+        ranked.crossJoin(tot).crossJoin(th)
           .where(expr("CAST(cum AS DECIMAL(38,0)) * 100 >= CAST(tot AS DECIMAL(38,0)) * threshold_pct"))
           .groupBy("threshold_pct")
           .agg(min("rnk").as("parts_needed"), max("total_parts").as("total_parts"))
@@ -1173,7 +1173,7 @@ object Relational {
           .join(broadcast(p), col("p_partkey") === col("l_partkey"))
           .groupBy("p_brand").agg(sum("cents").as("cents"))
         val t = b.agg(sum("cents").as("tot"), count(lit(1)).as("n_brands"))
-        b.crossJoin(broadcast(t))
+        b.crossJoin(t)
           .select(col("n_brands"),
             expr("(CAST(cents AS DECIMAL(38,0)) * 1000000) div tot").cast("long")
               .as("share_micro"))
@@ -1319,7 +1319,7 @@ object Relational {
             .agg(max(col("l_shipdate").cast("timestamp_ntz")).as("max_ts"))
             .select(lit("lineitem").as("tbl"), col("max_ts")))
         val g = m.agg(max("max_ts").as("anchor"))
-        m.crossJoin(broadcast(g))
+        m.crossJoin(g)
           .select(col("tbl"), col("max_ts"),
             datediff(to_date(col("anchor")), to_date(col("max_ts")))
               .cast("long").as("staleness_days"))
@@ -1383,12 +1383,12 @@ object Relational {
         // each ln term is nano-quantized BEFORE the sum, so the reduction
         // is an exact integer sum — no cross-engine float-addition-order
         // hazard (the house convention for every Σln in the registry)
-        val h = t.crossJoin(broadcast(mn)).where(col("cents") > col("xk"))
+        val h = t.crossJoin(mn).where(col("cents") > col("xk"))
           .agg(count(lit(1)).as("k_in"),
             sum(expr("CAST(round(ln(CAST(cents AS DOUBLE) / xk) * 1e9) AS BIGINT)"))
               .as("s_nano"))
         val base = t.agg(count(lit(1)).as("k_all"))
-        h.crossJoin(broadcast(base)).crossJoin(broadcast(mn))
+        h.crossJoin(base).crossJoin(mn)
           .select(col("xk").as("xmin_cents"), col("k_all").as("k"),
             expr("CAST(CAST(k_in AS DECIMAL(38,0)) * 1000000000000 div s_nano AS BIGINT)")
               .as("alpha_milli"))
@@ -1426,7 +1426,7 @@ object Relational {
         val p = pm.select(col("m"), col("l_partkey"),
           expr("rev * 10000 div qty").as("p_micro"), col("qty"))
         val m0 = p.agg(min("m").as("m0"))
-        val base = p.crossJoin(broadcast(m0)).where(col("m") === col("m0"))
+        val base = p.crossJoin(m0).where(col("m") === col("m0"))
           .select(col("l_partkey"), col("p_micro").as("p0"), col("qty").as("q0"))
         p.join(base, "l_partkey")
           .groupBy(col("m").as("month"))
@@ -1471,7 +1471,7 @@ object Relational {
         val top = k.orderBy(col("n").desc, col("key")).limit(10)
         top.withColumn("rank",
             row_number().over(Window.orderBy(col("n").desc, col("key"))))
-          .crossJoin(broadcast(t))
+          .crossJoin(t)
           .select(col("rank"), col("key"), col("n"),
             expr("CAST(n * CAST(nk AS DECIMAL(38,0)) * 1000 div total AS BIGINT)")
               .as("skew_x_milli"))
@@ -1625,7 +1625,7 @@ object Relational {
       (s, d) => {
         val run = abcRunningTotal(s, d)
         val tot = run.agg(sum("cents").as("tot"))
-        run.crossJoin(broadcast(tot))
+        run.crossJoin(tot)
           .select(col("cents"), col("tot"),
             expr("""CASE WHEN CAST(cum AS DECIMAL(38,0)) * 100 <= CAST(tot AS DECIMAL(38,0)) * 80
                    |     THEN 'A'
@@ -1633,7 +1633,7 @@ object Relational {
                    |     THEN 'B' ELSE 'C' END""".stripMargin).as("cls"))
           .groupBy("cls")
           .agg(count(lit(1)).as("n_parts"), sum("cents").as("revenue_cents"))
-          .crossJoin(broadcast(tot))
+          .crossJoin(tot)
           .select(col("cls"), col("n_parts"), col("revenue_cents"),
             expr("revenue_cents * 1000 div tot").as("share_milli"))
           .orderBy("cls")
@@ -1804,7 +1804,7 @@ object Relational {
             expr("CAST(round(avg(CAST(ratio_micro AS DOUBLE))) AS BIGINT)").as("idx_micro"))
         val nrm = ix.agg(
           expr("CAST(round(avg(CAST(idx_micro AS DOUBLE))) AS BIGINT)").as("mean_idx"))
-        ix.crossJoin(broadcast(nrm))
+        ix.crossJoin(nrm)
           .select(col("cal_month").cast("long").as("cal_month"), col("n_obs"),
             col("idx_micro"),
             expr("CAST(round(1000000.0 * idx_micro / mean_idx) AS BIGINT)")
@@ -1891,7 +1891,7 @@ object Relational {
           .join(nv, "nk")
           .select(col("rk"), expr("CAST(rev AS DOUBLE)/n").as("v"))
         val m = x.agg(avg("v").as("mu"), count(lit(1)).as("k"))
-        val rg = x.crossJoin(broadcast(m))
+        val rg = x.crossJoin(m)
           .select(col("rk"), (col("v") - col("mu")).as("z"), col("k"))
           .groupBy("rk").agg(sum("z").as("sz"), sum(expr("z*z")).as("szz"),
             count(lit(1)).as("nr"), max("k").as("k"))
@@ -1999,7 +1999,7 @@ object Relational {
         // non-graph entry in the r12 close's worst-5
         val run = abcRunningTotal(s, d)
         val tot = run.agg(sum("cents").as("tot"))
-        val abc = run.crossJoin(broadcast(tot))
+        val abc = run.crossJoin(tot)
           .select(col("l_partkey"), col("cents"),
             expr("""CASE WHEN CAST(cum AS DECIMAL(38,0)) * 100 <= CAST(tot AS DECIMAL(38,0)) * 80
                    |     THEN 'A'
@@ -2022,7 +2022,7 @@ object Relational {
         abc.join(xyz, "l_partkey")
           .groupBy("abc", "xyz")
           .agg(count(lit(1)).as("n_parts"), sum("cents").as("cellrev"))
-          .crossJoin(broadcast(tot))
+          .crossJoin(tot)
           .select(col("abc"), col("xyz"), col("n_parts"),
             expr("cellrev * 1000000 div tot").as("revenue_share_micro"))
           .orderBy("abc", "xyz")
@@ -2083,7 +2083,7 @@ object Relational {
         val mc = cell.groupBy("cust_nation").agg(sum("rev").as("cr"))
         val t = cell.agg(sum("rev").as("tot"))
         cell.join(broadcast(ms), "supp_nation").join(broadcast(mc), "cust_nation")
-          .crossJoin(broadcast(t))
+          .crossJoin(t)
           .select(col("supp_nation"), col("cust_nation"),
             col("rev").as("rev_cents"),
             expr("""CAST(CAST(rev AS DECIMAL(38,0)) * tot * 1000
@@ -2188,7 +2188,7 @@ object Relational {
         top
           .join(broadcast(pc.select(col("l_partkey").as("p1"), col("c").as("c1"))), "p1")
           .join(broadcast(pc.select(col("l_partkey").as("p2"), col("c").as("c2"))), "p2")
-          .crossJoin(broadcast(n))
+          .crossJoin(n)
           .select(col("p1"), col("p2"), col("cnt"),
             expr("CAST(cnt * 1000000 div c1 AS BIGINT)").as("conf_fwd_micro"),
             expr("CAST(cnt * 1000000 div c2 AS BIGINT)").as("conf_bwd_micro"),
@@ -2239,11 +2239,11 @@ object Relational {
             expr("CAST(round(1e9*ln(CAST(r AS DOUBLE))) AS BIGINT)").as("lnr"))
           .agg(sum(expr("CAST(r AS DECIMAL(38,0))*lnr")).as("srl"))
         val gr = cg.groupBy("g").agg(count(lit(1)).as("ng"), sum("r").as("xg"))
-        val tb = gr.crossJoin(broadcast(tot))
+        val tb = gr.crossJoin(tot)
           .agg(sum(expr("""(CAST(xg AS DOUBLE)/x)
                           | * ln((CAST(xg AS DOUBLE)/x)
                           |   / (CAST(ng AS DOUBLE)/n))""".stripMargin)).as("bt"))
-        tot.crossJoin(broadcast(s1)).crossJoin(broadcast(tb))
+        tot.crossJoin(s1).crossJoin(tb)
           .select(col("n").as("n_customers"),
             expr("""CAST(round(1000000.0*(CAST(srl AS DOUBLE)/1e9/x
                    | + ln(CAST(n AS DOUBLE)/x))) AS BIGINT)""".stripMargin)
@@ -2358,7 +2358,7 @@ object Relational {
                    | * CAST(CAST(n AS DECIMAL(38,0))*sxy - CAST(sx AS DECIMAL(38,0))*sy AS DOUBLE)
                    | / CAST(CAST(n AS DECIMAL(38,0))*sxx - CAST(sx AS DECIMAL(38,0))*sx AS DOUBLE))
                    | AS BIGINT)""".stripMargin).as("slope_micro"))
-        gs.crossJoin(broadcast(ps))
+        gs.crossJoin(ps)
           .agg(max("slope_micro").as("pooled_slope_micro"),
             max("psgn").cast("long").as("pooled_sign"),
             count(lit(1)).as("n_groups"),
@@ -2424,7 +2424,7 @@ object Relational {
         val topp = pd.groupBy("l_partkey").agg(sum("q").as("tq"))
           .orderBy(col("tq").desc, col("l_partkey")).limit(10)
           .select("l_partkey")
-        val r = pd.join(broadcast(topp), "l_partkey")
+        val r = pd.join(topp, "l_partkey")
           .select(col("l_partkey"), col("q"),
             row_number().over(Window.partitionBy("l_partkey")
               .orderBy("q", "d")).as("rk"),
@@ -2432,7 +2432,7 @@ object Relational {
         val qs = r.groupBy("l_partkey")
           .agg(max("n").as("n_days"),
             min(when(expr("4*rk >= 3*n"), col("q"))).as("q_star"))
-        val mn = pd.join(broadcast(topp), "l_partkey")
+        val mn = pd.join(topp, "l_partkey")
           .groupBy("l_partkey")
           .agg(expr("sum(q) * 1000 div count(1)").as("mean_q_milli"))
         qs.join(mn, "l_partkey")
@@ -2475,7 +2475,7 @@ object Relational {
             .as("ending"))
         val n = c.agg(count(lit(1)).as("n"))
         c.groupBy("ending").agg(count(lit(1)).as("cnt"))
-          .crossJoin(broadcast(n))
+          .crossJoin(n)
           .select(col("ending"), col("cnt").as("n_orders"),
             expr("CAST(cnt * 1000000 div n AS BIGINT)").as("share_micro"),
             expr("CAST(cnt * 100000000 div n div 1000 AS BIGINT)")
@@ -2514,7 +2514,7 @@ object Relational {
         val sb = b.agg(sum("cb").as("nb"), count(lit(1)).as("db"))
         val actual = a.join(b, "o_orderkey")
           .agg(sum(expr("CAST(ca AS DECIMAL(38,0)) * cb")).as("act"))
-        sa.crossJoin(broadcast(sb)).crossJoin(broadcast(actual))
+        sa.crossJoin(sb).crossJoin(actual)
           .select(col("na").cast("long").as("n_orders"),
             col("nb").cast("long").as("n_lineitems"),
             col("da").cast("long").as("d_orders"),

@@ -552,7 +552,7 @@ object Release {
           .withColumn("cum2", sum("c2").over(w))
         val tot = ev.agg(sum(col("is1")).as("n1"),
           sum(lit(1L) - col("is1")).as("n2"))
-        cum.crossJoin(broadcast(tot))
+        cum.crossJoin(tot)
           .select(abs(col("cum1") * col("n2") - col("cum2") * col("n1")).as("dn"),
             col("n1"), col("n2"))
           .agg(max("dn").as("d_num"), max("n1").as("n1"), max("n2").as("n2"))
@@ -598,7 +598,7 @@ object Release {
           .groupBy("id").agg(count(lit(1)).as("d"))
         val wedges = deg.agg(
           sum(expr("d * (d - 1) div 2")).as("n_wedges"))
-        tri.crossJoin(broadcast(wedges))
+        tri.crossJoin(wedges)
       },
       Some(s"""WITH $shareEdgesCte,
               |tri AS (SELECT CAST(count(*) AS BIGINT) AS n_triangles
@@ -733,7 +733,7 @@ object Release {
           .agg(countDistinct("split").as("ns"))
           .where(col("ns") > 1)
           .agg(count(lit(1)).as("leaked_users"))
-        per.crossJoin(broadcast(lk)).orderBy("split")
+        per.crossJoin(lk).orderBy("split")
       },
       Some("""WITH tagged AS (SELECT user_id,
              |    CASE WHEN CAST(ts AS TIMESTAMP) < TIMESTAMP '2024-01-16 00:00:00'
@@ -780,7 +780,7 @@ object Release {
               .groupBy("p").agg(count(lit(1)).as("deg")))
         val kk = deg0.agg(expr("sum(deg) div count(1)").as("k"))
         def survivors(deg: org.apache.spark.sql.DataFrame) =
-          deg.crossJoin(broadcast(kk)).where(col("deg") >= col("k")).select("p")
+          deg.crossJoin(kk).where(col("deg") >= col("k")).select("p")
         def peel(deg: org.apache.spark.sql.DataFrame,
             e: org.apache.spark.sql.DataFrame) = {
           val surv = survivors(deg)
@@ -822,7 +822,7 @@ object Release {
         val eCols = Seq.range(0, 5).map(r =>
           count(when(col("elast") >= r, 1)).as(s"e$r"))
         val edgeAggD = edgeAgg.agg(eCols.head, eCols.tail: _*)
-        nodeAgg.crossJoin(broadcast(edgeAggD)).crossJoin(broadcast(kk))
+        nodeAgg.crossJoin(edgeAggD).crossJoin(kk)
           .select(col("k").cast("long").as("k"),
             expr("stack(5, 0, n0, e0, 1, n1, e1, 2, n2, e2, 3, n3, e3, 4, n4, e4)" +
               " AS (round, nodes, edges)"))
@@ -976,7 +976,7 @@ object Release {
         val (e, _) = copurchaseGraph(s, d)
         val t = e.agg(count(lit(1)).as("tot"))
         e.groupBy("w").agg(count(lit(1)).as("n_edges"))
-          .crossJoin(broadcast(t))
+          .crossJoin(t)
           .select(col("w"), col("n_edges"),
             expr("n_edges * CAST(1000000 AS BIGINT) div tot").as("share_micro"))
           .orderBy("w")
@@ -1179,7 +1179,7 @@ object Release {
         val t = deg.agg(count(lit(1)).as("nn"))
         deg.groupBy(col("deg").as("degree"))
           .agg(count(lit(1)).as("n_nodes"))
-          .crossJoin(broadcast(t))
+          .crossJoin(t)
           .select(col("degree"), col("n_nodes"),
             expr("CAST(n_nodes * 1000000 div nn AS BIGINT)").as("share_micro"))
           .orderBy("degree")
@@ -1236,7 +1236,7 @@ object Release {
           if (k < 2) hubs = cutLineage(hubs)
         }
         val sa = auth.agg(sum("a").as("stot"))
-        auth.crossJoin(broadcast(sa))
+        auth.crossJoin(sa)
           .select(col("p"),
             expr("CAST(a * 1000000000 div stot AS BIGINT)").as("auth_nano"))
           .orderBy(col("auth_nano").desc, col("p")).limit(10)
@@ -1265,9 +1265,9 @@ object Release {
         val ks = s.createDataFrame(
           Seq(1L, 2L, 4L, 8L, 16L, 32L, 64L, 128L, 256L, 512L, 1024L, 2048L, 4096L)
             .map(Tuple1(_))).toDF("k")
-        val ek = broadcast(ks).join(meh, col("m") > col("k"))
+        val ek = ks.join(meh, col("m") > col("k"))
           .groupBy("k").agg(sum("c").as("ne"))
-        val nk = broadcast(ks).join(dh, col("m") > col("k"))
+        val nk = ks.join(dh, col("m") > col("k"))
           .groupBy("k").agg(sum("c").as("nn"))
         ks.join(nk, Seq("k"), "left").join(ek, Seq("k"), "left")
           .na.fill(0L, Seq("nn", "ne"))
@@ -1321,7 +1321,7 @@ object Release {
           .join(br.select(col("p_partkey").as("p"), col("p_brand").as("g")), "p")
           .groupBy("g").agg(sum("deg").as("d"))
         db.join(eb, Seq("g"), "left").na.fill(0L, Seq("e"))
-          .crossJoin(broadcast(m))
+          .crossJoin(m)
           .agg(max("m").as("m"),
             sum(expr("CAST(4 AS DECIMAL(38,0))*m*e - CAST(d AS DECIMAL(38,0))*d"))
               .as("num"),
@@ -1394,7 +1394,7 @@ object Release {
         val nodes = copurchaseGraph(s, d)._2.select(col("p").as("id"))
         val seed = nodes.agg(min("id").as("sd"))
         val base = partitionedEdgeCache(
-          nodes.crossJoin(broadcast(seed)), col("id"))
+          nodes.crossJoin(seed), col("id"))
         var p = base
           .select(col("id"),
             when(col("id") === col("sd"), 1000000000L).otherwise(0L).as("r"))
@@ -1492,12 +1492,12 @@ object Release {
           .agg(coalesce(max("cnt"), lit(0L)).as("lcc_untouched"))
         val after = lccOf(DedupOps.connectedComponentsStar(
             efAff.select(col("p1").as("id1"), col("p2").as("id2"))))
-          .crossJoin(broadcast(untouched))
+          .crossJoin(untouched)
           .select(greatest(col("lcc"), col("lcc_untouched")).as("lcc_after"))
         val me = e0.agg(count(lit(1)).as("n_edges"))
         val hc = hubs.agg(count(lit(1)).as("hubs_removed"))
-        nn.crossJoin(broadcast(me)).crossJoin(broadcast(hc))
-          .crossJoin(broadcast(before)).crossJoin(broadcast(after))
+        nn.crossJoin(me).crossJoin(hc)
+          .crossJoin(before).crossJoin(after)
           .select(col("n").as("n_nodes"), col("n_edges"), col("hubs_removed"),
             col("lcc_before"), col("lcc_after"),
             expr("(lcc_before - lcc_after) * 1000000 div lcc_before")
@@ -1601,7 +1601,7 @@ object Release {
         val agg2 = d2.agg(max("dist").as("diameter_lb"),
           count(lit(1)).as("n_reached"))
         seed.select(col("id").cast("long").as("seed_node"))
-          .crossJoin(broadcast(ecc1)).crossJoin(broadcast(agg2))
+          .crossJoin(broadcast(ecc1)).crossJoin(agg2)
           .select(col("seed_node"),
             col("far_node").cast("long").as("far_node"),
             col("ecc_seed").cast("long").as("ecc_seed"),
@@ -1654,7 +1654,7 @@ object Release {
           .groupBy(col("lu").as("label")).agg(sum("w").as("cut"))
         val sz = lab.groupBy("label").agg(count(lit(1)).as("n_nodes"))
         sz.join(vol, "label").join(cut, Seq("label"), "left")
-          .crossJoin(broadcast(m2))
+          .crossJoin(m2)
           .where(col("vol") < col("tot"))
           .select(col("n_nodes").cast("long").as("n_nodes"),
             col("vol").cast("long").as("volume"),
@@ -1809,8 +1809,8 @@ object Release {
         val nNodes = deg.agg(count(lit(1)).as("n_nodes"))
         matched.agg(count(lit(1)).as("n_matched"),
             sum(expr("CAST(w AS DECIMAL(38,0))")).as("wsum"))
-          .crossJoin(broadcast(nNodes))
-          .crossJoin(broadcast(e.agg(count(lit(1)).as("n_edges"))))
+          .crossJoin(nNodes)
+          .crossJoin(e.agg(count(lit(1)).as("n_edges")))
           .select(col("n_edges").cast("long").as("n_edges"),
             col("n_matched").cast("long").as("n_matched"),
             col("wsum").cast("long").as("matched_weight"),

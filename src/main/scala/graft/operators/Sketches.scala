@@ -51,7 +51,7 @@ object Sketches {
         val kmin = h.orderBy("h").limit(256)
         val hk = kmin.agg(max("h").as("hk"), count(lit(1)).as("kk"))
         val exact = h.agg(count(lit(1)).as("exact"))
-        hk.crossJoin(broadcast(exact))
+        hk.crossJoin(exact)
           .select(col("exact").cast("long").as("exact_distinct"),
             col("kk").cast("long").as("k_used"),
             expr("""CAST(CASE WHEN kk < 256 THEN exact
@@ -111,7 +111,7 @@ object Sketches {
           .agg(count(lit(1)).as("exact_n"))
           .orderBy(col("exact_n").desc, col("user_id"))
           .limit(10)
-        top.crossJoin(broadcast(sk))
+        top.crossJoin(sk)
           .select(col("user_id"), col("exact_n"),
             SketchProbe.cmsEstimate(col("sk"), col("user_id")).as("est"),
             col("total"))

@@ -139,7 +139,7 @@ object StatTests {
           sum(expr("CAST(i AS DECIMAL(38,0))*i")).as("sxx"),
           sum(expr("CAST(y AS DECIMAL(38,0))")).as("sy"),
           sum(expr("CAST(i AS DECIMAL(38,0))*y")).as("sxy"))
-        val r = idx.crossJoin(broadcast(f))
+        val r = idx.crossJoin(f)
           .select(col("i"), col("n"),
             expr("""CAST(round((CAST(n*sxx - sx*sx AS DOUBLE) * y
                    |  - (CAST(sy*sxx - sx*sxy AS DOUBLE)
@@ -194,7 +194,7 @@ object StatTests {
           .distinct()
         val users = Tables.events(s, d).select("user_id").distinct()
         val weeks = users.sparkSession.range(3).select(col("id").as("w"))
-        val cell = users.crossJoin(broadcast(weeks))
+        val cell = users.crossJoin(weeks)
           .join(wk.withColumn("x", lit(1L)), Seq("user_id", "w"), "left")
           .select(col("user_id"), col("w"), coalesce(col("x"), lit(0L)).as("x"))
         val rows = cell.groupBy("user_id").agg(sum("x").as("r"))
@@ -202,7 +202,7 @@ object StatTests {
           sum(col("r") * col("r")).as("r2"))
         val cagg = cell.groupBy("w").agg(sum("x").as("c"))
           .agg(sum(col("c") * col("c")).as("c2"))
-        ragg.crossJoin(broadcast(cagg))
+        ragg.crossJoin(cagg)
           .select(col("b").cast("long").as("n_users"),
             col("nn").cast("long").as("total_hits"),
             expr("""CAST(round(1000.0 * (3*2*CAST(c2 AS DOUBLE) - 2*CAST(nn AS DOUBLE)*nn)
@@ -243,12 +243,12 @@ object StatTests {
         val m = v.agg(count(lit(1)).as("n"),
           sum(expr("CAST(c AS DECIMAL(38,0))")).as("s"),
           sum(expr("CAST(c AS DECIMAL(38,0)) * c")).as("s2"))
-        val dev = v.crossJoin(broadcast(m))
+        val dev = v.crossJoin(m)
           .agg(max(expr("abs(CAST(c AS DECIMAL(38,0)) * n - s)")).as("maxdev"))
-        val pick = v.crossJoin(broadcast(m)).crossJoin(broadcast(dev))
+        val pick = v.crossJoin(m).crossJoin(dev)
           .where(expr("abs(CAST(c AS DECIMAL(38,0)) * n - s) = maxdev"))
           .agg(min("c").as("outlier"))
-        m.crossJoin(broadcast(dev)).crossJoin(broadcast(pick))
+        m.crossJoin(dev).crossJoin(pick)
           .select(col("n").cast("long").as("n_obs"),
             col("outlier").cast("long").as("outlier_cents"),
             expr("""CAST(round(1000.0 * (CAST(maxdev AS DOUBLE) / n)
@@ -299,7 +299,7 @@ object StatTests {
         val b = g.select(col("event_type").as("type_b"), col("n").as("nb_"),
           col("s").as("sb_"))
         a.join(broadcast(b), col("type_a") < col("type_b"))
-          .crossJoin(broadcast(msw))
+          .crossJoin(msw)
           .select(col("type_a"), col("type_b"),
             expr("CAST(round((CAST(sa AS DOUBLE)/na - CAST(sb_ AS DOUBLE)/nb_) * 1000) AS BIGINT)")
               .as("mean_diff_milli"),
@@ -446,13 +446,13 @@ object StatTests {
             |    / (CAST(n AS DOUBLE)*sxx - CAST(sx AS DOUBLE)*sx) * sy
             |  - (CAST(n AS DOUBLE)*sxy - CAST(sx AS DOUBLE)*sy)
             |    / (CAST(n AS DOUBLE)*sxx - CAST(sx AS DOUBLE)*sx) * sxy)""".stripMargin
-        val withHalf = idx.crossJoin(broadcast(half))
+        val withHalf = idx.crossJoin(half)
         val mp = mom(idx).select(expr(sseExpr).as("ssep"), col("n"))
         val m1 = mom(withHalf.where(col("i") <= col("mx") / 2))
           .select(expr(sseExpr).as("sse1"))
         val m2 = mom(withHalf.where(col("i") > col("mx") / 2))
           .select(expr(sseExpr).as("sse2"))
-        mp.crossJoin(broadcast(m1)).crossJoin(broadcast(m2))
+        mp.crossJoin(m1).crossJoin(m2)
           .select(col("n").cast("long").as("n_days"),
             expr("""CAST(round(1000.0 * ((ssep - sse1 - sse2) / 2)
                    |  / ((sse1 + sse2) / (n - 4))) AS BIGINT)""".stripMargin)
@@ -490,7 +490,7 @@ object StatTests {
           sum(expr("CAST(i AS DECIMAL(38,0))*i")).as("sxx"),
           sum(expr("CAST(y AS DECIMAL(38,0))")).as("sy"),
           sum(expr("CAST(i AS DECIMAL(38,0))*y")).as("sxy"))
-        val r = idx.crossJoin(broadcast(m))
+        val r = idx.crossJoin(m)
           .select(col("i"), col("n"), col("sx"), col("sxx"),
             expr("""CAST(round((CAST(n*sxx - sx*sx AS DOUBLE) * y
                    |  - (CAST(sy*sxx - sx*sxy AS DOUBLE)
@@ -502,7 +502,7 @@ object StatTests {
             expr("""1.0/n + pow(i - CAST(sx AS DOUBLE)/n, 2)
                    |  / (CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*sx/n)"""
               .stripMargin))
-          .crossJoin(broadcast(mse))
+          .crossJoin(mse)
           .select(col("i").cast("long").as("day_index"),
             expr("""CAST(round(1000000.0 * (CAST(rd AS DOUBLE)*rd
                    |  / (CAST(se2 AS DOUBLE) / (nn - 2) * 2))
@@ -546,7 +546,7 @@ object StatTests {
           sum(expr("CAST(i AS DECIMAL(38,0))*i")).as("sxx"),
           sum(expr("CAST(y AS DECIMAL(38,0))")).as("sy"),
           sum(expr("CAST(i AS DECIMAL(38,0))*y")).as("sxy"))
-        val u = idx.crossJoin(broadcast(m))
+        val u = idx.crossJoin(m)
           .select(col("i"),
             expr("""CAST(round((CAST(n*sxx - sx*sx AS DOUBLE) * y
                    |  - (CAST(sy*sxx - sx*sxy AS DOUBLE)
@@ -677,7 +677,7 @@ object StatTests {
         .select(col("i").as("min_day"), col("slope_milli").as("min_slope_milli"))
       val ends = sl.agg(count(lit(1)).as("n_windows"),
         max("i").as("last_day"))
-      ends.crossJoin(broadcast(mx)).crossJoin(broadcast(mn))
+      ends.crossJoin(broadcast(mx)).crossJoin(mn)
         .select(col("n_windows").cast("long").as("n_windows"),
           col("max_day").cast("long").as("max_day"),
           col("max_slope_milli"), col("min_day").cast("long").as("min_day"),
@@ -773,7 +773,7 @@ object StatTests {
         .select(col("p"),
           expr("(sc/1e9)*(sc/1e9) + (ss/1e9)*(ss/1e9)").as("pw"))
       val tot = pw.agg(sum("pw").as("tp"), count(lit(1)).as("k"))
-      pw.crossJoin(broadcast(tot))
+      pw.crossJoin(tot)
         .select(col("k"),
           expr("CAST(round(1e9 * (pw/tp) * ln(pw/tp)) AS BIGINT)").as("e_nano"))
         .groupBy("k").agg(sum("e_nano").as("se"))
@@ -816,7 +816,7 @@ object StatTests {
       val tot = idx.agg(count(lit(1)).as("n"),
         sum(expr("CAST(y AS DECIMAL(38,0))")).as("sy"))
       // scale the series by n so the demeaned value y·n − Σy is integral
-      val st = idx.crossJoin(broadcast(tot))
+      val st = idx.crossJoin(tot)
         .withColumn("dm", expr("CAST(y AS DECIMAL(38,0)) * n - sy"))
         .withColumn("s", sum("dm").over(Window.orderBy("i")
           .rowsBetween(Window.unboundedPreceding, 0)))
@@ -927,7 +927,7 @@ object StatTests {
             .when(col("ca") === col("cb"), 500L).otherwise(0L)).as("w_milli"))
       val tot = pairs.agg(
         sum(expr("(2000 * CAST(w_milli AS DECIMAL(38,0))) div n")).as("z"))
-      pairs.crossJoin(broadcast(tot))
+      pairs.crossJoin(tot)
         .select(col("a").as("event_type"),
           col("n").cast("long").as("n_comparisons"),
           col("w_milli").cast("long").as("wins_milli"),
@@ -1035,7 +1035,7 @@ object StatTests {
                  |  - (CAST(n AS DOUBLE)*sxy - CAST(sx AS DOUBLE)*sy)
                  |    / (CAST(n AS DOUBLE)*sxx - CAST(sx AS DOUBLE)*sx) * sxy)
                  |  / (n - 2))""".stripMargin).as("sig"))
-      val w = idx.crossJoin(broadcast(m))
+      val w = idx.crossJoin(m)
         .select(col("i"), col("y"), col("n"), col("b"), col("sig"),
           expr("abs(y - (my - b*mx) - b*i)").as("ar"))
         .select(col("i"), col("y"), col("n"), col("b"),
@@ -1267,7 +1267,7 @@ object StatTests {
       rs.agg(count(lit(1)).as("n"),
           sum(expr("CAST(rsum AS DECIMAL(38,0)) * rsum")).as("s2"),
           sum(expr("CAST(rsum AS DECIMAL(38,0))")).as("s1"))
-        .crossJoin(broadcast(m))
+        .crossJoin(m)
         .select(col("n").cast("long").as("n_days"),
           col("m").cast("long").as("m_judges"),
           expr("""CAST((12 * (s2 - s1 * s1 div n) * 1000000)
@@ -1325,7 +1325,7 @@ object StatTests {
         .withColumn("ph", col("mt") - min("mt").over(wRun))
       val n = idx.agg(count(lit(1)).as("n_days"))
       ph.orderBy(col("ph").desc, col("i")).limit(1)
-        .crossJoin(broadcast(n))
+        .crossJoin(n)
         .select(col("n_days").cast("long").as("n_days"),
           col("i").cast("long").as("peak_day"),
           col("ph").cast("long").as("ph_max_micro"),
@@ -1372,10 +1372,10 @@ object StatTests {
       val cum = h.withColumn("cm", sum("n").over(Window.orderBy("c")
         .rowsBetween(Window.unboundedPreceding, 0)))
       val tt = h.agg(sum("n").as("nt"))
-      val q = cum.crossJoin(broadcast(tt))
+      val q = cum.crossJoin(tt)
         .where(expr("cm >= (99 * nt + 99) div 100"))
         .agg(min("c").as("var99"))
-      e.where(col("half") === 1).crossJoin(broadcast(q))
+      e.where(col("half") === 1).crossJoin(q)
         .agg(max("var99").as("var99"), count(lit(1)).as("n"),
           sum(when(col("c") > col("var99"), 1L).otherwise(0L)).as("x"))
         .select(col("var99").cast("long").as("var99_cents"),

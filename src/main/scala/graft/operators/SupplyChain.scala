@@ -110,7 +110,7 @@ object SupplyChain {
         val edgeRanks = gaps.agg(count(lit(1)).as("n"))
           .select(explode(array(lit(25), lit(50), lit(75))).as("q"), col("n"))
           .select(col("q"), expr("(q * n + 99) div 100").as("rn"))
-        r.join(broadcast(edgeRanks), "rn")
+        r.join(edgeRanks, "rn")
           .select(col("q"), col("secs")).orderBy("q")
       },
       Some("""WITH p AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id
@@ -245,7 +245,7 @@ object SupplyChain {
             sum(expr("CAST(q AS DECIMAL(38,0))")).as("s"),
             sum(expr("CAST(q AS DECIMAL(38,0))*q")).as("s2"))
         dem.select(col("n").as("nd"), col("s").as("sd_"), col("s2").as("sd2"))
-          .crossJoin(broadcast(ord))
+          .crossJoin(ord)
           .select(col("nd").cast("long").as("demand_days"),
             col("n").cast("long").as("order_days"),
             expr("""CAST(round((CAST(n AS DOUBLE)*s2 - CAST(s AS DOUBLE)*s)
@@ -549,7 +549,7 @@ object SupplyChain {
           datediff(col("l_shipdate").cast("date"),
             lit("1970-01-01").cast("date")).cast("long").as("t"))
         val anchor = li.agg(max("t").as("t0"))
-        li.crossJoin(broadcast(anchor))
+        li.crossJoin(anchor)
           .select(col("l_partkey"),
             // underflow-to-0 past ~20 half-lives is SAFE here (unlike
             // q_time_decay_attribution's clamped weights): the weight is
@@ -597,7 +597,7 @@ object SupplyChain {
           .agg(count(lit(1)).as("n"),
             count(when(col("value") > 250, 1)).as("k"))
         val tot = arms.agg(sum("n").as("nn"))
-        arms.crossJoin(broadcast(tot))
+        arms.crossJoin(tot)
           .select(col("event_type").as("arm"),
             col("n").cast("long").as("pulls"),
             col("k").cast("long").as("successes"),
@@ -642,14 +642,14 @@ object SupplyChain {
             expr("CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)")
               .as("cents"))
         val span = li.agg(min("t").as("t0"), max("t").as("t1"))
-        val b = li.crossJoin(broadcast(span))
+        val b = li.crossJoin(span)
           .groupBy("brand")
           .agg(sum(when(expr("t * 2 >= t0 + t1"),
               expr("CAST(cents AS DECIMAL(38,0))")).otherwise(lit(0))).as("r2"),
             sum(when(expr("t * 2 < t0 + t1"),
               expr("CAST(cents AS DECIMAL(38,0))")).otherwise(lit(0))).as("r1"))
         val tot = b.agg(sum("r2").as("tr2"), count(lit(1)).as("nb"))
-        b.crossJoin(broadcast(tot))
+        b.crossJoin(tot)
           .select(col("brand"),
             expr("CAST(r2 AS BIGINT)").as("recent_cents"),
             expr("CAST((1000000 * r2) div tr2 AS BIGINT)").as("share_micro"),

@@ -80,7 +80,7 @@ object Survival {
         val tot = obs.agg(count(lit(1)).as("n"))
         val w = Window.orderBy("t")
           .rowsBetween(Window.unboundedPreceding, 0)
-        riskTable(obs).crossJoin(broadcast(tot))
+        riskTable(obs).crossJoin(tot)
           .withColumn("n_risk", col("n") - col("cumbef"))
           .withColumn("h_micro",
             expr("""CAST(round(sum(CAST(d AS DOUBLE) / (n - cumbef))
@@ -209,7 +209,7 @@ object Survival {
         val tau = 168L
         val obs = observations(s, d)
         val tot = obs.agg(count(lit(1)).as("n"))
-        val km = riskTable(obs).crossJoin(broadcast(tot))
+        val km = riskTable(obs).crossJoin(tot)
           .withColumn("n_risk", col("n") - col("cumbef"))
           .withColumn("s_micro",
             when(col("d") === col("n_risk"), 0L).otherwise(
@@ -229,7 +229,7 @@ object Survival {
             (least(coalesce(col("tn"), lit(tau)), lit(tau)) - col("t"))),
             lit(0L)).as("body"))
         val n = obs.agg(count(lit(1)).cast("long").as("n_users"))
-        head.crossJoin(broadcast(body)).crossJoin(broadcast(n))
+        head.crossJoin(body).crossJoin(n)
           .select(lit(tau).cast("long").as("tau_hours"), col("n_users"),
             (col("head") + col("body")).cast("long").as("rmst_micro_hours"))
       },
@@ -269,7 +269,7 @@ object Survival {
       (s, d) => {
         val obs = observations(s, d)
         val tot = obs.agg(count(lit(1)).as("n"))
-        riskTable(obs).crossJoin(broadcast(tot))
+        riskTable(obs).crossJoin(tot)
           .withColumn("n_risk", col("n") - col("cumbef"))
           .withColumn("lns",
             expr("""sum(CASE WHEN d < n - cumbef
@@ -402,7 +402,7 @@ object Survival {
         val run = byt.withColumn("cumbef",
           coalesce(sum("ev").over(w.rowsBetween(Window.unboundedPreceding, -1)),
             lit(0L)))
-        run.crossJoin(broadcast(tot))
+        run.crossJoin(tot)
           .withColumn("n_risk", col("n") - col("cumbef"))
           .withColumn("s_micro",
             when(col("d") === col("n_risk"), 0L).otherwise(
@@ -467,7 +467,7 @@ object Survival {
         val pts = b
           .select(col("bucket"), col("k"),
             sum("k").over(Window.orderBy("bucket")).as("ck"))
-          .crossJoin(broadcast(n))
+          .crossJoin(n)
           .where(col("ck") < col("n"))
           .select(expr("ln(CAST(2 AS DOUBLE)) * (bucket + 1)").as("lnt"),
             expr("ln(-ln(1.0 - CAST(ck AS DOUBLE)/(n + 1)))").as("y"))
@@ -525,7 +525,7 @@ object Survival {
         val n = bk.agg(sum("k").as("n"), sum("sg").as("tot"))
         bk.select(col("bucket"), col("k"),
             sum("k").over(Window.orderBy("bucket")).as("ck"))
-          .crossJoin(broadcast(n))
+          .crossJoin(n)
           .select(expr("""abs(CAST(ck AS DOUBLE)/n
                  | - (1 - exp(-(power(2.0, bucket+1)-1) * n / tot)))""".stripMargin)
             .as("ks"), col("n"))

@@ -216,7 +216,7 @@ object TimeSeries {
         val mt = cnt.groupBy("month").agg(sum("n").as("t"))
         val pt = cnt.groupBy("pri").agg(sum("n").as("pn"))
         val g = cnt.agg(sum("n").as("gt"))
-        val grid = mt.crossJoin(broadcast(pt)).crossJoin(broadcast(g))
+        val grid = mt.crossJoin(broadcast(pt)).crossJoin(g)
         val j = grid.join(cnt, Seq("month", "pri"), "left")
           .select(col("month"),
             coalesce(col("n"), lit(0L)).cast("double").as("obs"),
@@ -312,7 +312,7 @@ object TimeSeries {
         val b = c.groupBy("wd").agg(count(lit(1)).as("nw"), sum("c").as("sw"))
           .agg(sum(expr("(CAST(sw AS DECIMAL(38,0)) * sw * 1000) div nw"))
             .as("ssb_milli"))
-        g.crossJoin(broadcast(b))
+        g.crossJoin(b)
           .select(col("n").as("n_days"),
             expr("CAST((CAST(n AS DECIMAL(38,0)) * ssb_milli - 1000 * CAST(s AS DECIMAL(38,0)) * s) * 1000000 " +
               "div (1000 * CAST(n AS DECIMAL(38,0)) * s2 - 1000 * CAST(s AS DECIMAL(38,0)) * s) AS BIGINT)")
@@ -350,7 +350,7 @@ object TimeSeries {
           .withColumn("cumx", sum("x").over(
             w.rowsBetween(Window.unboundedPreceding, 0)))
           .withColumn("idx", row_number().over(w))
-        val best = run.crossJoin(broadcast(tot))
+        val best = run.crossJoin(tot)
           .select(col("dt"), col("idx"), col("cumx"), col("t_days"),
             col("n_events"),
             expr("CAST(t_days AS DECIMAL(38,0)) * cumx - CAST(idx AS DECIMAL(38,0)) * n_events")
@@ -402,7 +402,7 @@ object TimeSeries {
           .join(cnt, Seq("dt", "event_type"), "left")
           .select(col("dt"), col("event_type"), coalesce(col("y"), lit(0L)).as("y"))
         val mx = g.agg(max("dt").as("t_last"))
-        val withLag = g.crossJoin(broadcast(mx))
+        val withLag = g.crossJoin(mx)
         val f = withLag
           .where(col("dt") < col("t_last") &&
             datediff(col("t_last"), col("dt")) <= 16)
@@ -466,7 +466,7 @@ object TimeSeries {
           .join(cnt, Seq("dt", "event_type"), "left")
           .select(col("dt"), col("event_type"), coalesce(col("y"), lit(0L)).as("y"))
         val mx = g.agg(max("dt").as("t_last"))
-        val wl = g.crossJoin(broadcast(mx))
+        val wl = g.crossJoin(mx)
         val ew = wl
           .where(col("dt") < col("t_last") &&
             datediff(col("t_last"), col("dt")) <= 16)
@@ -588,7 +588,7 @@ object TimeSeries {
         val lags = s.range(6).select(col("id").cast("int").as("lag"))
         val a = dd.select(col("day").as("d1"), col("x"))
         val b = dd.select(col("day").as("d2"), col("y"))
-        a.crossJoin(broadcast(lags))
+        a.crossJoin(lags)
           .join(broadcast(b), expr("d2 = date_add(d1, lag)"))
           .groupBy("lag")
           .agg(count(lit(1)).as("n_days"),
@@ -653,7 +653,7 @@ object TimeSeries {
             w.rowsBetween(Window.unboundedPreceding, 0)))
           .withColumn("cnext", lead("c", 1).over(w))
           .where(col("cnext").isNotNull)
-        e.crossJoin(broadcast(n))
+        e.crossJoin(n)
           .agg(sum(expr("""abs(CAST(cum1 AS DECIMAL(38,0)) * n2
                          | - CAST(cum2 AS DECIMAL(38,0)) * n1) * (cnext - c)"""
             .stripMargin)).as("num"),
@@ -706,7 +706,7 @@ object TimeSeries {
         val ties = dd.groupBy("y").agg(count(lit(1)).as("t"))
           .where(col("t") > 1)
           .agg(coalesce(sum(expr("t*(t-1)*(2*t+5)")), lit(0L)).as("tt"))
-        sFrame.crossJoin(broadcast(nFrame)).crossJoin(broadcast(ties))
+        sFrame.crossJoin(nFrame).crossJoin(ties)
           .select(col("s").as("s_stat"), col("n").as("n_days"),
             expr("""CAST(round((s - CASE WHEN s > 0 THEN 1 WHEN s < 0 THEN -1 ELSE 0 END)
                    | / sqrt((CAST(n AS DOUBLE)*(n-1)*(2*n+5) - tt) / 18.0) * 1000)
@@ -800,7 +800,7 @@ object TimeSeries {
           .agg(expr("CAST(round(avg(CAST(det_micro AS DOUBLE))) AS BIGINT)").as("seas_micro"))
         val off = sw.agg(
           expr("CAST(round(avg(CAST(seas_micro AS DOUBLE))) AS BIGINT)").as("off"))
-        mid.join(broadcast(sw), "dow").crossJoin(broadcast(off))
+        mid.join(broadcast(sw), "dow").crossJoin(off)
           .select(col("day"), col("n"), col("trend_micro"),
             (col("seas_micro") - col("off")).as("seasonal_micro"),
             (col("det_micro") - (col("seas_micro") - col("off"))).as("resid_micro"))
@@ -852,7 +852,7 @@ object TimeSeries {
           expr("avg(CAST(y AS DOUBLE))").as("my"),
           expr("avg(CAST(y1 AS DOUBLE))").as("my1"),
           expr("avg(CAST(x1 AS DOUBLE))").as("mx1"))
-        val sums = f.crossJoin(broadcast(m))
+        val sums = f.crossJoin(m)
           .select(expr("y - my").as("dy"), expr("y1 - my1").as("dy1"),
             expr("x1 - mx1").as("dx1"))
           .agg(count(lit(1)).as("n"), sum(expr("dy1*dy1")).as("a11"),
@@ -953,7 +953,7 @@ object TimeSeries {
         val daily = Tables.events(s, d)
           .groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("n"))
         val mu = daily.agg(expr("avg(CAST(n AS DOUBLE))").as("mu"))
-        val dm = daily.crossJoin(broadcast(mu))
+        val dm = daily.crossJoin(mu)
           .select(col("day"), (col("n") - col("mu")).as("z"))
         val c0 = dm.agg(sum(expr("z*z")).as("c0"))
         val ck = dm
@@ -962,7 +962,7 @@ object TimeSeries {
           .join(broadcast(dm.select(col("day").as("jday"), col("z").as("z2"))),
             "jday")
           .groupBy("k").agg(sum(expr("z*z2")).as("c"))
-        val r = ck.crossJoin(broadcast(c0))
+        val r = ck.crossJoin(c0)
           .groupBy()
           .agg(max(when(col("k") === 1, expr("c/c0"))).as("r1"),
             max(when(col("k") === 2, expr("c/c0"))).as("r2"),
@@ -1084,7 +1084,7 @@ object TimeSeries {
         val daily = Tables.events(s, d)
           .groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("x"))
         val t = daily.agg(count(lit(1)).as("t"), sum("x").as("n"))
-        val y = daily.crossJoin(broadcast(t))
+        val y = daily.crossJoin(t)
           .select(col("day"), expr("CAST(t AS DECIMAL(38,0))*x - n").as("y"),
             col("t"))
         val g0 = y.agg(sum(expr("y*y")).as("g0"))
@@ -1094,7 +1094,7 @@ object TimeSeries {
           .withColumn("jday", expr("date_add(day, lag)"))
           .join(broadcast(y.select(col("day").as("jday"), col("y").as("b"))), "jday")
           .groupBy("lag").agg(sum(expr("a*b")).as("gk"))
-        val q = gk.crossJoin(broadcast(g0)).crossJoin(broadcast(t))
+        val q = gk.crossJoin(g0).crossJoin(t)
           .groupBy()
           .agg(max("t").as("t"),
             sum(expr("""(CAST(gk AS DOUBLE)/CAST(g0 AS DOUBLE))
@@ -1154,7 +1154,7 @@ object TimeSeries {
           (row_number().over(Window.orderBy("dt")) - 1).as("t"), col("rev"))
         val ws = s.createDataFrame(Seq(8L, 16L, 32L, 64L, 128L).map(Tuple1(_)))
           .toDF("w")
-        val blk = idx.crossJoin(broadcast(ws))
+        val blk = idx.crossJoin(ws)
           .select(col("w"), expr("t div w").as("b"), expr("t % w").as("j"),
             col("rev"))
         val fb = blk.groupBy("w", "b")
@@ -1230,7 +1230,7 @@ object TimeSeries {
           abs(col("x") - lag("x", 1).over(Window.orderBy("dt"))))
         val tot = day.agg(count(lit(1)).as("n"), sum("x").as("s"))
         val rtot = mr.agg(count("r").as("m"), sum("r").as("rr"))
-        val v = day.crossJoin(broadcast(tot)).crossJoin(broadcast(rtot))
+        val v = day.crossJoin(tot).crossJoin(rtot)
           .agg(
             sum(expr("""CASE WHEN CAST(50 AS DECIMAL(38,0))*m*n*x
                        | > CAST(50 AS DECIMAL(38,0))*m*s + CAST(133 AS DECIMAL(38,0))*n*rr
@@ -1238,7 +1238,7 @@ object TimeSeries {
             sum(expr("""CASE WHEN CAST(50 AS DECIMAL(38,0))*m*n*x
                        | < CAST(50 AS DECIMAL(38,0))*m*s - CAST(133 AS DECIMAL(38,0))*n*rr
                        | THEN 1 ELSE 0 END""".stripMargin)).as("n_below"))
-        v.crossJoin(broadcast(tot)).crossJoin(broadcast(rtot))
+        v.crossJoin(tot).crossJoin(rtot)
           .select(col("n").as("n_days"),
             expr("CAST(s * 1000000 div n AS BIGINT)").as("center_micro"),
             expr("CAST(rr * 1000000 div m AS BIGINT)").as("mrbar_micro"),
@@ -1371,7 +1371,7 @@ object TimeSeries {
         val den = b.agg(
           (sum(when(col("half") === 0, col("n")).otherwise(0L)) + 10L).as("de"),
           (sum(when(col("half") === 1, col("n")).otherwise(0L)) + 10L).as("da"))
-        cells.crossJoin(broadcast(den))
+        cells.crossJoin(den)
           .select(col("bin").cast("long").as("bin"),
             expr("CAST((1000000 * ne) div de AS BIGINT)").as("expected_micro"),
             expr("CAST((1000000 * na) div da AS BIGINT)").as("actual_micro"),
@@ -1478,7 +1478,7 @@ object TimeSeries {
         bm.groupBy("brand")
           .agg(count(lit(1)).as("active_months"),
             sum(expr("CAST(dem AS DECIMAL(38,0))")).as("units"))
-          .crossJoin(broadcast(cal))
+          .crossJoin(cal)
           .select(col("brand"),
             col("active_months").cast("long").as("active_months"),
             col("months").cast("long").as("span_months"),

@@ -189,8 +189,8 @@ object TpchSuite {
           .join(broadcast(nations
             .select(col("n_nationkey").as("c_nk"), col("n_regionkey"))),
             col("c_nationkey") === col("c_nk"))
-          .join(broadcast(Tables.region(s, d)
-            .where(col("r_name") === "EUROPE").select("r_regionkey")),
+          .join(Tables.region(s, d)
+            .where(col("r_name") === "EUROPE").select("r_regionkey"),
             col("n_regionkey") === col("r_regionkey"))
           .select("c_custkey")
         val suppN = Tables.supplier(s, d)
@@ -375,7 +375,7 @@ object TpchSuite {
           .groupBy("l_suppkey")
           .agg(sum(revCents()).as("total_revenue_c"))
         val mx = rev.agg(max("total_revenue_c").as("mx"))
-        rev.join(broadcast(mx), col("total_revenue_c") === col("mx"))
+        rev.join(mx, col("total_revenue_c") === col("mx"))
           .join(Tables.supplier(s, d), col("l_suppkey") === col("s_suppkey"))
           .select("s_suppkey", "s_name", "total_revenue_c")
           .orderBy("s_suppkey")
@@ -484,7 +484,7 @@ object TpchSuite {
           .withColumn("cents", round(col("c_acctbal") * 100, 0).cast("long"))
         val thr = c.where(col("cents") > 0)
           .agg(sum("cents").as("s"), count(lit(1)).as("n"))
-        c.crossJoin(broadcast(thr)).where(col("cents") * col("n") > col("s"))
+        c.crossJoin(thr).where(col("cents") * col("n") > col("s"))
           .join(Tables.orders(s, d)
               .where(col("o_orderdate") >= lit("2000-01-01 00:00:00").cast("timestamp"))
               .select("o_custkey"),
@@ -525,7 +525,7 @@ object TpchSuite {
         // subquery and once for the outer block.
         val eur = Tables.supplier(s, d)
           .join(broadcast(Tables.nation(s, d)), col("s_nationkey") === col("n_nationkey"))
-          .join(broadcast(Tables.region(s, d).where(col("r_name") === "EUROPE")),
+          .join(Tables.region(s, d).where(col("r_name") === "EUROPE"),
             col("n_regionkey") === col("r_regionkey"))
           .select("s_suppkey", "s_acctbal", "s_name", "n_name")
         val ps = Tables.lineitem(s, d)
@@ -569,7 +569,7 @@ object TpchSuite {
       "q_tpch_q11",
       (s, d) => {
         val natSupp = Tables.supplier(s, d)
-          .join(broadcast(Tables.nation(s, d).where(col("n_name") === "NATION_3")),
+          .join(Tables.nation(s, d).where(col("n_name") === "NATION_3"),
             col("s_nationkey") === col("n_nationkey"))
           .select("s_suppkey")
         val value = derivedPartsupp(s, d)
@@ -577,7 +577,7 @@ object TpchSuite {
           .groupBy("ps_partkey")
           .agg(sum(col("ps_supplycost_c") * col("ps_availqty")).as("value_c"))
         val total = value.agg(sum("value_c").as("total_c"))
-        value.crossJoin(broadcast(total))
+        value.crossJoin(total)
           .where(col("value_c") * 500 > col("total_c"))
           .select("ps_partkey", "value_c")
           .orderBy(col("value_c").desc, col("ps_partkey"))
@@ -682,7 +682,7 @@ object TpchSuite {
           .select("l_suppkey")
         Tables.supplier(s, d)
           .join(broadcast(Tables.nation(s, d)), col("s_nationkey") === col("n_nationkey"))
-          .join(broadcast(Tables.region(s, d).where(col("r_name") === "EUROPE")),
+          .join(Tables.region(s, d).where(col("r_name") === "EUROPE"),
             col("n_regionkey") === col("r_regionkey"))
           .join(qual, col("s_suppkey") === col("l_suppkey"), "left_semi")
           .select("s_name", "s_acctbal")
@@ -738,7 +738,7 @@ object TpchSuite {
         fLines.where(late)
           .join(Tables.supplier(s, d)
               .join(broadcast(Tables.nation(s, d)), col("s_nationkey") === col("n_nationkey"))
-              .join(broadcast(Tables.region(s, d).where(col("r_name") === "EUROPE")),
+              .join(Tables.region(s, d).where(col("r_name") === "EUROPE"),
                 col("n_regionkey") === col("r_regionkey"))
               .select("s_suppkey", "s_name"),
             col("l_suppkey") === col("s_suppkey"))

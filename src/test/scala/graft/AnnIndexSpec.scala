@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.functions.Similarity
 import org.apache.spark.sql.functions._
 
@@ -14,7 +12,7 @@ import org.apache.spark.sql.functions._
 class AnnIndexSpec extends SparkSpec {
 
   test("persisted IVF index: build once, probe from a fresh session, in-memory parity + recall") {
-    val dir = Files.createTempDirectory("graft-ivf").toString
+    val dir = tempDir("graft-ivf")
     val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("ed"))
     Similarity.saveIvfIndex(emb, dir, k = 8, iters = 3)
@@ -56,7 +54,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("incremental append: delta-only assignment, probe identical to full re-assignment") {
-    val dir = Files.createTempDirectory("graft-ivf-inc").toString
+    val dir = tempDir("graft-ivf-inc")
     val all = Tables.embeddings(spark, sf)
       .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("ed"))
     val base = all.where(col("vec_id") < 400)
@@ -73,7 +71,7 @@ class AnnIndexSpec extends SparkSpec {
     // probe ≡ one full re-assignment of the unioned corpus against the
     // SAME codebook (assignment is pointwise per vector)
     val cents = spark.read.parquet(s"$dir/codebook")
-    val dir2 = Files.createTempDirectory("graft-ivf-full").toString
+    val dir2 = tempDir("graft-ivf-full")
     cents.write.parquet(s"$dir2/codebook")
     Similarity.assignToCodebook(all, cents)
       .write.parquet(s"$dir2/assignments")
@@ -93,7 +91,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("append drift report flags an out-of-distribution delta") {
-    val dir = Files.createTempDirectory("graft-ivf-ood").toString
+    val dir = tempDir("graft-ivf-ood")
     val all = Tables.embeddings(spark, sf)
       .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("ed"))
     Similarity.saveIvfIndex(all.where(col("vec_id") < 400), dir, k = 8, iters = 3)
@@ -109,7 +107,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("compaction: append xN grows the file count, compact shrinks it, probe identical") {
-    val dir = Files.createTempDirectory("graft-ivf-cmp").toString
+    val dir = tempDir("graft-ivf-cmp")
     val all = Tables.embeddings(spark, sf)
       .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("ed"))
     Similarity.saveIvfIndex(all.where(col("vec_id") < 300), dir, k = 8, iters = 3)
@@ -168,7 +166,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("probe plan touches the stored assignments, never re-assigns the corpus") {
-    val dir = Files.createTempDirectory("graft-ivf2").toString
+    val dir = tempDir("graft-ivf2")
     val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("ed"))
     Similarity.saveIvfIndex(emb, dir, k = 8, iters = 1)

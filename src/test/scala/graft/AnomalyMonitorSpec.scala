@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.streaming.AnomalyMonitor
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -55,7 +53,7 @@ class AnomalyMonitorSpec extends SparkSpec {
   }
 
   test("a day's count spans micro-batches and emits exactly once, after the watermark closes it") {
-    val dir = Files.createTempDirectory("graft-anomaly").toString
+    val dir = tempDir("graft-anomaly")
     val (src, out, chk) = (s"$dir/src", s"$dir/out", s"$dir/chk")
 
     def runOnce(): Unit = {

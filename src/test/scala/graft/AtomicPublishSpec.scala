@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 
 class AtomicPublishSpec extends SparkSpec {
@@ -11,7 +9,7 @@ class AtomicPublishSpec extends SparkSpec {
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   test("overwrite keeps a readable table through crash points, incl. recovery runs") {
-    val dir = Files.createTempDirectory("graft-pub").toString + "/t"
+    val dir = tempDir("graft-pub") + "/t"
     val hfs = fs(dir)
     AtomicPublish.overwrite(Seq(1, 2).toDF("x"), dir)
     assert(AtomicPublish.readIfExists(spark, dir).get.count() == 2)
@@ -29,7 +27,7 @@ class AtomicPublishSpec extends SparkSpec {
   }
 
   test("readIfExists: absent path and parquet-less directory both yield None") {
-    val base = Files.createTempDirectory("graft-pub").toString
+    val base = tempDir("graft-pub")
     assert(AtomicPublish.readIfExists(spark, base + "/missing").isEmpty)
     val empty = base + "/empty"
     fs(empty).mkdirs(new Path(empty)) // exists, but holds no parquet parts
@@ -37,7 +35,7 @@ class AtomicPublishSpec extends SparkSpec {
   }
 
   test("a stale tmp dir from a crashed write does not poison the next publish") {
-    val dir = Files.createTempDirectory("graft-pub").toString + "/t"
+    val dir = tempDir("graft-pub") + "/t"
     val hfs = fs(dir)
     hfs.mkdirs(new Path(dir + ".tmp")) // leftover from a crash mid-write
     AtomicPublish.overwrite(Seq(4, 5).toDF("x"), dir)

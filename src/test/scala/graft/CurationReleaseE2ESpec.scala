@@ -48,7 +48,7 @@ class CurationReleaseE2ESpec extends SparkSpec {
   }
 
   test("stream → dedup → publish → manifest, with immutable earlier releases") {
-    val dir = Files.createTempDirectory("graft-release-e2e").toString
+    val dir = tempDir("graft-release-e2e")
     val src = s"$dir/feed"; val index = s"$dir/index"
     val accepted = s"$dir/accepted"; val chk = s"$dir/chk"
     val releases = s"$dir/releases"

@@ -29,7 +29,7 @@ class CurationStreamSpec extends SparkSpec {
       index, accepted, chk).awaitTermination()
 
   test("JSONL arrivals → incremental dedup against the growing index across restarts") {
-    val dir = Files.createTempDirectory("graft-curation").toString
+    val dir = tempDir("graft-curation")
     val src = s"$dir/feed"
     val index = s"$dir/index"
     val accepted = s"$dir/accepted"

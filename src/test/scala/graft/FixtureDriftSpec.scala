@@ -18,7 +18,7 @@ class FixtureDriftSpec extends SparkSpec {
     // a tripwire that can't fire is decoration: write a deliberately
     // drifted events table (ts as STRING, props dropped, extra column)
     // and assert every drift class is named
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    val dir = tempDir("graft_drift")
     try {
       spark.read.parquet(s"$sf/events.parquet")
         .withColumn("ts", org.apache.spark.sql.functions.date_format(

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.time.Instant
 
 import graft.streaming.Funnel
@@ -45,7 +44,7 @@ class FunnelSpec extends SparkSpec {
   }
 
   test("a late click with an earlier timestamp wins the click stage across micro-batches") {
-    val dir = Files.createTempDirectory("graft-funnel").toString
+    val dir = tempDir("graft-funnel")
     val (src, out, chk) = (s"$dir/src", s"$dir/out", s"$dir/chk")
 
     def runOnce(): Unit = {

@@ -13,7 +13,7 @@ class JsonLinesSpec extends SparkSpec {
     StructField("text", StringType)))
 
   test("malformed lines quarantine with their raw text; clean lines parse") {
-    val dir = Files.createTempDirectory("graft-jsonl").toString
+    val dir = tempDir("graft-jsonl")
     val lines = Seq(
       """{"doc_id": 1, "text": "alpha"}""",
       """{"doc_id": 2, "text": "beta"}""",
@@ -36,7 +36,7 @@ class JsonLinesSpec extends SparkSpec {
   }
 
   test("null-struct lines (blank, literal null) quarantine instead of becoming all-null rows") {
-    val dir = Files.createTempDirectory("graft-jsonl-null").toString
+    val dir = tempDir("graft-jsonl-null")
     val lines = Seq(
       """{"doc_id": 1, "text": "alpha"}""",
       "", // blank line → from_json yields a NULL struct, not a corrupt record
@@ -54,7 +54,7 @@ class JsonLinesSpec extends SparkSpec {
   }
 
   test("round-trip: documents fixture → JSONL → identical frame, zero quarantine") {
-    val dir = Files.createTempDirectory("graft-jsonl-rt").toString
+    val dir = tempDir("graft-jsonl-rt")
     val docs = Tables.documents(spark, sf)
     JsonLines.write(docs, s"$dir/docs")
     val (back, quarantine) = JsonLines.readWithQuarantine(

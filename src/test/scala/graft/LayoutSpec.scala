@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.Layout
 import org.apache.spark.sql.functions._
 
@@ -50,7 +48,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("daily partitioning prunes directories via PartitionFilters") {
-    val dir = Files.createTempDirectory("graft-layout").toString + "/ev"
+    val dir = tempDir("graft-layout") + "/ev"
     Layout.writeDailyPartitioned(Tables.events(spark, sf), "ts", dir)
     val narrow = Layout.readDays(spark, dir, "2024-01-10", "2024-01-12")
     val plan = narrow.queryExecution.executedPlan.toString
@@ -94,7 +92,7 @@ class LayoutSpec extends SparkSpec {
     // z-order it touches O(box) contiguous key space. Measure run count
     // of matching rows in file order.
     val grid = (for (x <- 0 until 64; y <- 0 until 64) yield (x, y)).toDF("x", "y")
-    val dir = Files.createTempDirectory("graft-z").toString
+    val dir = tempDir("graft-z")
     Layout.writeZOrdered(grid, "x", "y", s"$dir/z")
     grid.orderBy("x", "y").write.parquet(s"$dir/rowmajor")
     def runs(path: String): Long = {
@@ -114,7 +112,7 @@ class LayoutSpec extends SparkSpec {
 
   test("compact: bin-packs a fragmented table atomically, content unchanged") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString + "/t"
+    val dir = tempDir("graft-compact") + "/t"
     // a streaming-sink-shaped mess: 32 tiny files
     spark.range(10000).select(col("id"), (col("id") % 97).as("v"))
       .repartition(32).write.parquet(dir)

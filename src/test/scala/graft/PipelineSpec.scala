@@ -48,7 +48,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("end-to-end ingest: flatten, normalize, status, geo, dedup, upsert") {
-    val dir = Files.createTempDirectory("graft-pipe-tgt").toString + "/tgt"
+    val dir = tempDir("graft-pipe-tgt") + "/tgt"
     val out = Pipeline.runIngest(spark, xmlPath, dir, now, pageSize = 3)
       .orderBy("incident_id")
 
@@ -74,7 +74,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("re-running the same window is idempotent; updates overwrite by key") {
-    val dir = Files.createTempDirectory("graft-pipe-tgt2").toString + "/tgt"
+    val dir = tempDir("graft-pipe-tgt2") + "/tgt"
     val first = Pipeline.runIngest(spark, xmlPath, dir, now).collect()
     val second = Pipeline.runIngest(spark, xmlPath, dir, now).collect()
     assert(first.map(_.getString(first.head.fieldIndex("incident_id"))).sorted.toSeq ==

@@ -1,5 +1,8 @@
 package graft
 
+import graft.operators.GlobalOrder
+import org.apache.spark.sql.DataFrame
+
 /** Executable plan audits for the continuation-batch queries — the shapes
   * BENCH.md claims, asserted on the optimized physical plan so a future
   * refactor can't silently regress them (a query that still returns the
@@ -127,6 +130,46 @@ class PlanAuditSpec extends SparkSpec {
     for (name <- SparkEntry.queries.keys) {
       assert(!planOf(name).contains("CartesianProduct"), s"$name")
     }
+  }
+
+  test("every join hint changes its query's plan at bench scale or at 1 KB") {
+    // a broadcast / shuffle_hash hint stays only where turning hints off
+    // changes the executed plan at the default broadcast threshold or at
+    // 1 KB, which stands in for scale (no data-derived frame broadcasts
+    // by size below it). AQE is off: its initial plan is this plan.
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint}
+    val Threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val DisableHints = "spark.sql.optimizer.disableHints"
+    val saved = Seq("spark.sql.adaptive.enabled", DisableHints, Threshold)
+      .map(k => k -> spark.conf.getOption(k))
+    // hints are dropped at analysis, so the hint-free form is rebuilt
+    def build(name: String, hintsOff: Boolean): DataFrame = {
+      spark.conf.set(DisableHints, hintsOff.toString)
+      try SparkEntry.queries(name)(spark, sf)
+      finally spark.conf.set(DisableHints, "false")
+    }
+    // planned before the pins are released, so cached frames still match
+    def plans(df: DataFrame): Seq[String] =
+      try Seq(None, Some("1024")).map { t =>
+        t.fold(spark.conf.unset(Threshold))(spark.conf.set(Threshold, _))
+        spark.sessionState.executePlan(df.queryExecution.analyzed).executedPlan
+          .toString.replaceAll("#\\d+L?", "#").replaceAll("plan_id=\\d+", "plan_id=")
+          .replaceAll("lambda (\\w+?)_\\d+", "lambda $1_")
+      } finally GlobalOrder.release(blocking = true)
+    def hinted(df: DataFrame): Boolean = df.queryExecution.optimizedPlan.exists {
+      case j: Join => j.hint != JoinHint.NONE
+      case _ => false
+    }
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val redundant = SparkEntry.queries.keys.toSeq.sorted.filter { name =>
+        val on = build(name, hintsOff = false)
+        if (hinted(on)) plans(on) == plans(build(name, hintsOff = true))
+        else { GlobalOrder.release(blocking = true); false }
+      }
+      assert(redundant.isEmpty, s"${redundant.size} queries whose join hints change no " +
+        s"plan at the default threshold or at 1 KB: ${redundant.mkString(", ")}")
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   test("partitionless windows appear only in the documented bounded-domain queries") {

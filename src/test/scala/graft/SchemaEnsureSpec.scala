@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -15,7 +13,7 @@ class SchemaEnsureSpec extends SparkSpec {
     StructField("score", DoubleType))) // additive evolution
 
   test("ensure creates an empty typed table once and is idempotent") {
-    val dir = Files.createTempDirectory("graft-ddl").toString + "/t"
+    val dir = tempDir("graft-ddl") + "/t"
     assert(SchemaEnsure.ensure(spark, dir, v1))      // created
     assert(!SchemaEnsure.ensure(spark, dir, v1))     // second run: no-op
     val df = SchemaEnsure.read(spark, dir, v1)
@@ -23,7 +21,7 @@ class SchemaEnsureSpec extends SparkSpec {
   }
 
   test("read through an evolved schema back-fills new columns with typed NULLs") {
-    val dir = Files.createTempDirectory("graft-ddl").toString + "/t"
+    val dir = tempDir("graft-ddl") + "/t"
     SchemaEnsure.ensure(spark, dir, v1)
     Seq((1L, "a"), (2L, "b")).toDF("id", "name").write.mode("append").parquet(dir)
     val evolved = SchemaEnsure.read(spark, dir, v2).orderBy("id").collect()
@@ -34,7 +32,7 @@ class SchemaEnsureSpec extends SparkSpec {
   }
 
   test("ensure is a no-op on a PARTITIONED table (parts live in subdirectories)") {
-    val dir = Files.createTempDirectory("graft-ddl").toString + "/t"
+    val dir = tempDir("graft-ddl") + "/t"
     Seq((1L, "a", "d1"), (2L, "b", "d2")).toDF("id", "name", "day")
       .write.partitionBy("day").parquet(dir)
     // no *.parquet directly under dir — only day=*/part-*.parquet; ensure

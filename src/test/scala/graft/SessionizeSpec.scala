@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.time.Instant
 
 import graft.streaming.Sessionize
@@ -19,7 +18,7 @@ class SessionizeSpec extends SparkSpec {
   private def us(s: String): Long = inst(s).toEpochMilli * 1000L
 
   test("stateful sessionization across two streaming runs closes gapped sessions") {
-    val dir = Files.createTempDirectory("graft-sess").toString
+    val dir = tempDir("graft-sess")
     val (src, out, chk) = (s"$dir/src", s"$dir/out", s"$dir/chk")
 
     def runOnce(): Unit = {

@@ -1,14 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 class SnapshotsSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft-snapshots").toString + "/t"
+    tempDir("graft-snapshots") + "/t"
 
   test("publish increments versions; latest and pinned reads see the right data") {
     val root = freshRoot()

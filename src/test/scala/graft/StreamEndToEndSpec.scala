@@ -81,7 +81,7 @@ class StreamEndToEndSpec extends SparkSpec {
       .awaitTermination()
 
   test("XML file arrival → normalize → versioned upsert → dashboard KPIs, late update across restart") {
-    val dir = Files.createTempDirectory("graft-e2e").toString
+    val dir = tempDir("graft-e2e")
     val src = s"$dir/feed"
     val root = s"$dir/table"
     val chk = s"$dir/chk"
@@ -148,7 +148,7 @@ class StreamEndToEndSpec extends SparkSpec {
     * dropDuplicates → foreachBatch merge), with a fault hook around the
     * merge — the hook is the only difference from production. */
   test("kill-and-resume: crashed runs resume from the checkpoint and equal the uninterrupted run") {
-    val dir = Files.createTempDirectory("graft-crash").toString
+    val dir = tempDir("graft-crash")
     val src = s"$dir/feed"
     Files.createDirectories(java.nio.file.Path.of(src))
     // three files = three micro-batches under maxFilesPerTrigger=1, with

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -21,7 +19,7 @@ class StreamJoinSpec extends SparkSpec {
     // binds at (re)start, so a dim overwrite is picked up by the next
     // AvailableNow run against the SAME checkpoint — already-processed
     // batches keep their old enrichment (no retroactive rewrite)
-    val dir = Files.createTempDirectory("graft-ssjoin").toString
+    val dir = tempDir("graft-ssjoin")
     val (src, out, chk, dimDir) = (s"$dir/src", s"$dir/out", s"$dir/chk", s"$dir/dim")
 
     Seq((1L, "bronze"), (2L, "silver")).toDF("user_id", "tier")
@@ -56,7 +54,7 @@ class StreamJoinSpec extends SparkSpec {
   }
 
   test("clicks join impressions within the attribution window, batch parity") {
-    val dir = Files.createTempDirectory("graft-sjoin").toString
+    val dir = tempDir("graft-sjoin")
     val (impSrc, clkSrc, out, chk) = (s"$dir/imp", s"$dir/clk", s"$dir/out", s"$dir/chk")
 
     def ts(c: String) = col(c).cast("timestamp")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.streaming.IncrementalUpsert
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,7 +17,7 @@ class StreamingSpec extends SparkSpec {
       .select(col("event_id"), col("ts_s").cast("timestamp").as("ts"), col("value"))
 
   test("incremental latest-wins upsert across two streaming runs (restart-safe)") {
-    val dir = Files.createTempDirectory("graft-stream").toString
+    val dir = tempDir("graft-stream")
     val src = s"$dir/src"
     val tgt = s"$dir/tgt"
     val chk = s"$dir/chk"
@@ -53,7 +51,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("versioned streaming upsert: each run publishes a time-travelable snapshot") {
-    val dir = Files.createTempDirectory("graft-stream-ver").toString
+    val dir = tempDir("graft-stream-ver")
     val src = s"$dir/src"
     val root = s"$dir/table"
     val chk = s"$dir/chk"
@@ -88,7 +86,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup drops cross-batch duplicates within the watermark, bounded state") {
     import graft.streaming.StreamDedup
-    val dir = Files.createTempDirectory("graft-sdedup").toString
+    val dir = tempDir("graft-sdedup")
     val (src, out, chk) = (s"$dir/src", s"$dir/out", s"$dir/chk")
 
     def runOnce(): Unit = StreamDedup.run(
@@ -123,7 +121,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming near-dup signature filter drops token-set duplicates across batches") {
     import graft.streaming.StreamDedup
-    val dir = Files.createTempDirectory("graft-snear").toString
+    val dir = tempDir("graft-snear")
     val (src, out, chk) = (s"$dir/src", s"$dir/out", s"$dir/chk")
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType),

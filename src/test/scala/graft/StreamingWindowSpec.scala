@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -12,7 +10,7 @@ class StreamingWindowSpec extends SparkSpec {
   import spark.implicits._
 
   test("tumbling-window counts over a file stream equal the batch result") {
-    val dir = Files.createTempDirectory("graft-swin").toString
+    val dir = tempDir("graft-swin")
     val src = s"$dir/src"
     val rows = Seq(
       (1L, "2024-01-01 00:10:00", 1.0), (2L, "2024-01-01 00:50:00", 2.0),

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.streaming.TopK
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -38,7 +36,7 @@ class TopKSpec extends SparkSpec {
   }
 
   test("space-saving bounds hold across micro-batches under eviction") {
-    val dir = Files.createTempDirectory("graft-topk").toString
+    val dir = tempDir("graft-topk")
     val (src, chk) = (s"$dir/src", s"$dir/chk")
     val capacity = 8
 
