@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 /** JVM-lifetime build-once cache for derived relations that several
   * registry queries consume — the U11 persisted-index convention
@@ -18,12 +18,24 @@ import java.util.concurrent.ConcurrentHashMap
   * consume-path ≡ build-path row-for-row. The cache key includes the
   * dataset dir, so sf0.001 specs, sf0.01 verification, and sf0.1 bench
   * runs never share an artifact; the root is a fresh per-JVM temp dir,
-  * so a stale artifact cannot outlive the process that built it.
+  * deleted at JVM exit, so a stale artifact cannot outlive the process
+  * that built it.
   */
 private[graft] object Artifacts {
 
-  private lazy val root =
-    java.nio.file.Files.createTempDirectory("graft_artifacts").toString
+  private lazy val root = tempDir("graft_artifacts")
+
+  private val exitDeletes = new ConcurrentLinkedQueue[java.io.File]()
+  sys.addShutdownHook(exitDeletes.forEach(d => deleteRecursively(d)))
+
+  /** A fresh temp dir named by `prefix`, deleted with its contents when
+    * the JVM exits: the one exit-cleanup path, for the artifact root and
+    * the specs' temp dirs alike. */
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    exitDeletes.add(dir)
+    dir.toString
+  }
 
   private val built = new ConcurrentHashMap[String, String]()
   private val locks = new ConcurrentHashMap[String, AnyRef]()

@@ -28,9 +28,13 @@ object Loop {
   /** [[cutLineage]] plus aggregate `metrics` over the cut frame's rows,
     * gathered by `Dataset.observe` inside the cut's own eager job: a loop
     * reads its convergence test with no probe job. An empty frame gives
-    * the aggregates' empty values (0 for a count). */
+    * the aggregates' empty values (0 for a count). Every cut observes
+    * under one fixed name: the session keys an observation by name AND
+    * frame id, so cuts in flight at once never collide (`LoopSpec` runs
+    * two on two threads), and a cut prints the same plan on every build
+    * where an unnamed `Observation()` would print a fresh UUID. */
   private[graft] def cutLineage(df: DataFrame, metrics: Column*): (DataFrame, Row) = {
-    val obs = Observation()
+    val obs = Observation("loop_cut")
     val cut = cutLineage(df.observe(obs, metrics.head, metrics.tail: _*))
     (cut, Await.result(obs.future, duration.Duration.Inf))
   }

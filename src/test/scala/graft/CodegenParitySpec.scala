@@ -17,19 +17,9 @@ import org.scalacheck.rng.Seed
   * wholeStage=false) and must match bit-for-bit. */
 class CodegenParitySpec extends SparkSpec {
 
-  private def withCodegen[T](on: Boolean)(body: => T): T = {
-    val ws = spark.conf.getOption("spark.sql.codegen.wholeStage")
-    val fm = spark.conf.getOption("spark.sql.codegen.factoryMode")
-    spark.conf.set("spark.sql.codegen.wholeStage", on.toString)
-    spark.conf.set("spark.sql.codegen.factoryMode",
-      if (on) "CODEGEN_ONLY" else "NO_CODEGEN")
-    try body finally {
-      ws.fold(spark.conf.unset("spark.sql.codegen.wholeStage"))(
-        spark.conf.set("spark.sql.codegen.wholeStage", _))
-      fm.fold(spark.conf.unset("spark.sql.codegen.factoryMode"))(
-        spark.conf.set("spark.sql.codegen.factoryMode", _))
-    }
-  }
+  private def withCodegen[T](on: Boolean)(body: => T): T =
+    SparkSpec.withConf("spark.sql.codegen.wholeStage" -> on.toString,
+      "spark.sql.codegen.factoryMode" -> (if (on) "CODEGEN_ONLY" else "NO_CODEGEN"))(body)
 
   private def samples[T](g: Gen[T], n: Int): Seq[T] =
     (1 to n).flatMap(i => g.apply(Gen.Parameters.default, Seed(1234L + i)))

@@ -26,9 +26,7 @@ class LayoutSpec extends SparkSpec {
       "ev_bucketed_b", 8, Seq("user_id"))
     // at fixture size the planner rightly prefers broadcast; disable it
     // to surface the bucketed sort-merge path a large-large join would use
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    SparkSpec.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("ev_bucketed_a")
         .join(spark.table("ev_bucketed_b"), "user_id")
       val plan = joined.queryExecution.executedPlan.toString
@@ -36,7 +34,7 @@ class LayoutSpec extends SparkSpec {
         s"expected no shuffle:\n$plan")
       assert(plan.contains("Bucketed: true"), s"expected bucketed scan:\n$plan")
       assert(joined.count() > 0)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    }
   }
 
   test("bucketed aggregation on the bucket key also skips the shuffle") {

@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.{DedupOps, Loop}
+import java.util.concurrent.CountDownLatch
+import java.util.concurrent.TimeUnit.MINUTES
 import org.apache.spark.graft.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -12,8 +14,9 @@ import scala.jdk.CollectionConverters._
 
 /** The loop-state module's guarantees: a cut's metrics come from the
   * cut's own eager job (no probe job), empty frames yield zero metrics
-  * without hanging, both connected-components loops accept an empty
-  * pair list, and no source file cuts lineage on its own. */
+  * without hanging, two cuts in flight at once read their own metrics,
+  * both connected-components loops accept an empty pair list, and no
+  * source file cuts lineage on its own. */
 class LoopSpec extends SparkSpec {
   import spark.implicits._
 
@@ -59,6 +62,24 @@ class LoopSpec extends SparkSpec {
     }
   }
 
+  test("cutLineage with metrics: two cuts in flight at once on two threads read their own counts") {
+    // every metric cut observes under Loop's one fixed name; each cut's
+    // first task waits on a shared latch until the other cut's task has
+    // started, so both jobs are in flight together
+    LoopSpec.gate = new CountDownLatch(2)
+    val meet = udf { (id: Long) =>
+      if (id == 0L) { LoopSpec.gate.countDown(); LoopSpec.gate.await(1, MINUTES) }
+      true
+    }
+    def cut(n: Long) = Future(Loop.cutLineage(
+      spark.range(0, n, 1, 1).toDF().where(meet(col("id"))), count(lit(1)), sum("id")))
+    val (a, b) = (cut(100), cut(250))
+    val ((_, ma), (_, mb)) = bounded((Await.result(a, 2.minutes), Await.result(b, 2.minutes)))
+    assert(LoopSpec.gate.getCount == 0L, "the two cuts never ran at the same time")
+    assert(ma.getLong(0) == 100L && ma.getLong(1) == 4950L, s"first cut read $ma")
+    assert(mb.getLong(0) == 250L && mb.getLong(1) == 31125L, s"second cut read $mb")
+  }
+
   test("connectedComponents and connectedComponentsStar: an empty pair list has no labels") {
     val none = Seq.empty[(Long, Long)].toDF("id1", "id2")
     assert(bounded(DedupOps.connectedComponents(none, maxIter = 3)).isEmpty)
@@ -79,4 +100,11 @@ class LoopSpec extends SparkSpec {
     } yield s"${f.getPath}:${no + 1}: $b"
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+}
+
+object LoopSpec {
+  /** The latch the two-thread cut test's tasks meet on: tasks run in
+    * this JVM's executor threads, and a latch captured in the closure
+    * would be a serialized copy per task. */
+  @volatile var gate = new CountDownLatch(0)
 }

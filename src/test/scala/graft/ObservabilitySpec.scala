@@ -3,6 +3,7 @@ package graft
 import scala.collection.mutable
 
 import graft.observability.RunReport
+import org.apache.spark.graft.ListenerBusAccess
 import org.apache.spark.sql.functions._
 
 class ObservabilitySpec extends SparkSpec {
@@ -33,10 +34,7 @@ class ObservabilitySpec extends SparkSpec {
     spark.listenerManager.register(l)
     try {
       Seq(1, 2, 3).toDF("x").count()
-      // listener events are delivered asynchronously; poll briefly
-      val deadline = System.currentTimeMillis() + 10000
-      while (l.snapshot.isEmpty && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
+      ListenerBusAccess.drain(spark.sparkContext) // listener events are async
       assert(l.snapshot.exists { case (name, secs, ok) => ok && secs >= 0 })
     } finally spark.listenerManager.unregister(l)
   }

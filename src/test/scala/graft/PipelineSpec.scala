@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
@@ -42,7 +42,7 @@ class PipelineSpec extends SparkSpec {
         |    <WGS84>bad wkt here</WGS84></Deviation>
         |</Situation>
         |</RESULT></RESPONSE>""".stripMargin
-    val p = Files.createTempFile("graft-pipe", ".xml")
+    val p = Paths.get(tempDir("graft-pipe"), "feed.xml")
     Files.writeString(p, xml)
     p.toString
   }

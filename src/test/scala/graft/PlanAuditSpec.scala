@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.GlobalOrder
-import org.apache.spark.sql.DataFrame
 
 /** Executable plan audits for the continuation-batch queries — the shapes
   * BENCH.md claims, asserted on the optimized physical plan so a future
@@ -11,8 +10,12 @@ import org.apache.spark.sql.DataFrame
   */
 class PlanAuditSpec extends SparkSpec {
 
-  private def planOf(name: String): String =
-    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+  /** The final frame's physical plan from the suite's one registry build. */
+  private def planOf(name: String): String = RegistrySweep.records(name).plan
+
+  /** `body` over a build of this test's own, its pins released after. */
+  private def released[T](body: => T): T =
+    try body finally GlobalOrder.release(blocking = true)
 
   test("declared path installs the heap rewrite on a vanilla session") {
     // SparkEntry.queries wraps every fn in GraftRuntime.ensure so the
@@ -26,8 +29,8 @@ class PlanAuditSpec extends SparkSpec {
       "newSession() was expected to start with no experimental hooks")
     for (name <- Seq("q_topk_heap", "q_ann_recall", "q_ivf_recall",
         "q_pq_recall", "q_ivfpq_recall", "q_knn_graph")) {
-      val plan = SparkEntry.queries(name)(vanilla, sf)
-        .queryExecution.executedPlan.toString
+      val plan = released(SparkEntry.queries(name)(vanilla, sf)
+        .queryExecution.executedPlan.toString)
       assert(plan.contains("TopKPerGroup"),
         s"$name did not plan through the heap operator on a vanilla session:\n$plan")
     }
@@ -91,8 +94,8 @@ class PlanAuditSpec extends SparkSpec {
     // checkpoint (lineage deliberately severed), so the LSH stages are
     // audited on the pair generator they actually run through
     val emb = Tables.embeddings(spark, sf).select("vec_id", "embedding")
-    val pairs = graft.functions.Similarity.adaptiveNearDupPairs(emb, 0.95, 0.9999)
-      .queryExecution.executedPlan.toString
+    val pairs = released(graft.functions.Similarity.adaptiveNearDupPairs(emb, 0.95, 0.9999)
+      .queryExecution.executedPlan.toString)
     assert(pairs.contains("hyperplane_sigs"),
       s"signature stage not the native expression:\n$pairs")
     // keyed on (band, sig) — shuffled at scale, broadcast on the tiny
@@ -116,9 +119,9 @@ class PlanAuditSpec extends SparkSpec {
     val index = operators.DedupOps.lshBuckets(
       operators.DedupOps.minhashSignature(base, "doc_id", "text", 4, shingleN = 3),
       "doc_id", 4, 2)
-    val uncached = operators.DedupOps
+    val uncached = released(operators.DedupOps
       .dedupAgainstIndex(batch, index, "doc_id", 4, 2, materialize = false)
-      .queryExecution.executedPlan.toString
+      .queryExecution.executedPlan.toString)
     assert(uncached.contains("LeftSemi"), s"index probe not a semi-join:\n$uncached")
     assert(uncached.contains("LeftAnti"), s"dup drop not an anti-join:\n$uncached")
     assert(planOf("q_incremental_dedup").contains("LeftAnti"))
@@ -126,55 +129,29 @@ class PlanAuditSpec extends SparkSpec {
 
   test("no declared query plans a CartesianProduct") {
     // brute-force baselines use broadcast nested loop ON PURPOSE (small
-    // side broadcast); an unbroadcast cartesian product is never intended
-    for (name <- SparkEntry.queries.keys) {
-      assert(!planOf(name).contains("CartesianProduct"), s"$name")
-    }
+    // side broadcast); an unbroadcast cartesian product is never intended,
+    // in the final plan or in any eager job the build runs
+    val cartesian = RegistrySweep.records.collect { case (n, r) if r.cartesian => n }
+    assert(cartesian.isEmpty, s"queries planning a CartesianProduct: ${cartesian.toSeq.sorted}")
   }
 
   test("every join hint changes its query's plan at bench scale or at 1 KB") {
     // a broadcast / shuffle_hash hint stays only where turning hints off
     // changes the executed plan at the default broadcast threshold or at
     // 1 KB, which stands in for scale (no data-derived frame broadcasts
-    // by size below it). AQE is off: its initial plan is this plan.
-    import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint}
-    val Threshold = "spark.sql.autoBroadcastJoinThreshold"
-    val DisableHints = "spark.sql.optimizer.disableHints"
-    val saved = Seq("spark.sql.adaptive.enabled", DisableHints, Threshold)
-      .map(k => k -> spark.conf.getOption(k))
-    // hints are dropped at analysis, so the hint-free form is rebuilt
-    def build(name: String, hintsOff: Boolean): DataFrame = {
-      spark.conf.set(DisableHints, hintsOff.toString)
-      try SparkEntry.queries(name)(spark, sf)
-      finally spark.conf.set(DisableHints, "false")
-    }
-    // planned before the pins are released, so cached frames still match
-    def plans(df: DataFrame): Seq[String] =
-      try Seq(None, Some("1024")).map { t =>
-        t.fold(spark.conf.unset(Threshold))(spark.conf.set(Threshold, _))
-        spark.sessionState.executePlan(df.queryExecution.analyzed).executedPlan
-          .toString.replaceAll("#\\d+L?", "#").replaceAll("plan_id=\\d+", "plan_id=")
-          .replaceAll("lambda (\\w+?)_\\d+", "lambda $1_")
-      } finally GlobalOrder.release(blocking = true)
-    def hinted(df: DataFrame): Boolean = df.queryExecution.optimizedPlan.exists {
-      case j: Join => j.hint != JoinHint.NONE
-      case _ => false
-    }
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val redundant = SparkEntry.queries.keys.toSeq.sorted.filter { name =>
-        val on = build(name, hintsOff = false)
-        if (hinted(on)) plans(on) == plans(build(name, hintsOff = true))
-        else { GlobalOrder.release(blocking = true); false }
-      }
-      assert(redundant.isEmpty, s"${redundant.size} queries whose join hints change no " +
-        s"plan at the default threshold or at 1 KB: ${redundant.mkString(", ")}")
-    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    // by size below it). Both sides are re-planned with AQE off: its
+    // initial plan is this plan.
+    val redundant = RegistrySweep.hintsOffReplans.collect {
+      case (name, off) if RegistrySweep.records(name).replans == off => name
+    }.toSeq.sorted
+    assert(redundant.isEmpty, s"${redundant.size} queries whose join hints change no " +
+      s"plan at the default threshold or at 1 KB: ${redundant.mkString(", ")}")
   }
 
   test("partitionless windows appear only in the documented bounded-domain queries") {
     // a window with no partition spec funnels its whole input through one
-    // task — fatal at scale UNLESS the input is provably bounded. The
+    // task — fatal at scale UNLESS the input is provably bounded, in the
+    // final plan and in every eager job the build runs alike. The
     // whitelist: GlobalOrder's prefix-sum over ≤ #shuffle-partitions rows
     // (q_global_order, q_equidepth_hist, q_rfm), the skyline's |buckets|-
     // row cummax, and the KS ECDF over the bounded integer-cents domain.
@@ -409,12 +386,9 @@ class PlanAuditSpec extends SparkSpec {
       // convention)
       "q_wilcoxon")
     val offenders = for {
-      (name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1) if !allowed(name)
-      w = fn(spark, sf).queryExecution.optimizedPlan.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window
-          if w.partitionSpec.isEmpty => w
-      } if w.nonEmpty
-    } yield s"$name plans ${w.size} partitionless window(s):\n${w.mkString("\n")}"
+      (name, r) <- RegistrySweep.records.toSeq.sortBy(_._1)
+      if !allowed(name) && r.windows.nonEmpty
+    } yield s"$name plans ${r.windows.size} partitionless window(s):\n${r.windows.mkString("\n")}"
     assert(offenders.isEmpty, offenders.mkString("\n\n"))
   }
 
@@ -532,8 +506,8 @@ class PlanAuditSpec extends SparkSpec {
       s"wedge generation fell off the equi-join path:\n$plan")
     // the cap itself is plan-audited at the artifact level: the build
     // path's window must stay p-keyed (never partitionless)
-    val build = graft.operators.Release.cappedAdjacencyRaw(spark, sf)
-      .queryExecution.executedPlan.toString
+    val build = released(graft.operators.Release.cappedAdjacencyRaw(spark, sf)
+      .queryExecution.executedPlan.toString)
     assert(build.contains("hashpartitioning(p#"),
       s"top-m neighbor cap is not keyed on the node:\n$build")
   }
@@ -574,15 +548,13 @@ class PlanAuditSpec extends SparkSpec {
     // show the InMemoryTableScan (one per ntile/rank pass); release()
     // afterward is the other half of the discipline (GlobalOrderSpec
     // covers it)
-    try {
-      // the single-pass rewrite ranks all three dimensions in ONE
-      // GlobalOrder pass over the 3n exploded frame: exactly one pinned
-      // projection, scanned by both the offsets job and the final pass
-      assert("InMemoryTableScan".r.findAllIn(planOf("q_rfm")).length >= 1,
-        "q_rfm's quartile pass no longer pins its projection")
-      assert(planOf("q_gain_chart").contains("InMemoryTableScan"),
-        "q_gain_chart's decile pass no longer pins its projection")
-    } finally operators.GlobalOrder.release()
+    // the single-pass rewrite ranks all three dimensions in ONE
+    // GlobalOrder pass over the 3n exploded frame: exactly one pinned
+    // projection, scanned by both the offsets job and the final pass
+    assert("InMemoryTableScan".r.findAllIn(planOf("q_rfm")).length >= 1,
+      "q_rfm's quartile pass no longer pins its projection")
+    assert(planOf("q_gain_chart").contains("InMemoryTableScan"),
+      "q_gain_chart's decile pass no longer pins its projection")
   }
 
   test("q_tpch_q3: broadcast dim, shuffle fact join, TakeOrderedAndProject") {
@@ -618,8 +590,8 @@ class PlanAuditSpec extends SparkSpec {
     // inspect the LOGICAL windows: the point-level one (computing the
     // prevMax running max) must carry a non-empty partition spec; only
     // the |buckets|-row cummax window may be global
-    val plan = SparkEntry.queries("q_skyline")(spark, sf)
-      .queryExecution.optimizedPlan
+    val plan = released(SparkEntry.queries("q_skyline")(spark, sf)
+      .queryExecution.optimizedPlan)
     val windows = plan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }
@@ -638,8 +610,8 @@ class PlanAuditSpec extends SparkSpec {
     // runs partitionless (seed ranks key on (band,bucket), top-1 keys on
     // doc id) and (b) candidates come from the bucket equi-join, never a
     // cross product / nested loop
-    val logical = SparkEntry.queries("q_setsim_topk")(spark, sf)
-      .queryExecution.optimizedPlan
+    val logical = released(SparkEntry.queries("q_setsim_topk")(spark, sf)
+      .queryExecution.optimizedPlan)
     val windows = logical.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }
@@ -655,7 +627,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_setsim_topk: one row per matched doc, scores in the J >= 0.5 contract") {
-    val out = SparkEntry.queries("q_setsim_topk")(spark, sf).collect()
+    val out = released(SparkEntry.queries("q_setsim_topk")(spark, sf).collect())
     val ids = out.map(_.getAs[Long]("doc_id"))
     assert(ids.distinct.length == ids.length, "duplicate doc_id rows in top-1 output")
     out.foreach { r =>
@@ -694,7 +666,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_bm25: df/stats broadcast, term filter pre-shuffle, top-20 is a TakeOrdered") {
-    val exec = SparkEntry.queries("q_bm25")(spark, sf).queryExecution.executedPlan
+    val exec = released(SparkEntry.queries("q_bm25")(spark, sf).queryExecution.executedPlan)
     val plan = exec.toString
     assert(plan.contains("BroadcastHashJoin"), s"df table not broadcast:\n$plan")
     assert(plan.contains("TakeOrderedAndProject"),

@@ -20,11 +20,8 @@ class ReleaseSpec extends SparkSpec {
     // with all rows still green — exactly what a spec must pin. Plain
     // (non-adaptive, non-broadcast) planning so the exchange count is
     // deterministic.
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try SparkSpec.withConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val (nbw, _) = Release.copurchaseDirected(spark, sf)
       val cached = Loop.partitionedEdgeCache(
         nbw.select(col("u").as("src"), col("v"), col("fm")), col("src"))
@@ -54,11 +51,7 @@ class ReleaseSpec extends SparkSpec {
       assert(edgeSideShuffles.isEmpty,
         s"the cached edge side re-exchanged — the cached HashPartitioning " +
           s"did not survive into the join:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      graft.operators.GlobalOrder.release(blocking = true)
-    }
+    } finally graft.operators.GlobalOrder.release(blocking = true)
   }
 
   test("q_split_assign: no near-dup cluster straddles a split boundary") {

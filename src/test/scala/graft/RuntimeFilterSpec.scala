@@ -13,14 +13,11 @@ import org.apache.spark.sql.functions._
 class RuntimeFilterSpec extends SparkSpec {
 
   test("a selective dim filter injects a bloom runtime filter into the fact side") {
-    val confs = Seq(
+    SparkSpec.withConf(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // the creation side must be a SELECTIVE FILTER OVER A SCAN (an
       // aggregate-derived filter does not qualify for injection)
       val fact = Tables.orders(spark, sf)
@@ -37,9 +34,6 @@ class RuntimeFilterSpec extends SparkSpec {
       val expected = fact.join(dim.hint("broadcast"),
         col("o_custkey") === col("c_custkey")).count()
       assert(joined.count() == expected)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

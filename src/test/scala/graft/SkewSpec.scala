@@ -45,7 +45,7 @@ class SkewSpec extends SparkSpec {
   test("AQE splits a skewed sort-merge join partition (skew=true in the final plan)") {
     // force the skew machinery visible at toy scale: no broadcast, tiny
     // skew thresholds, so the "hot" partition qualifies as skewed
-    val confs = Map(
+    SparkSpec.withConf(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
@@ -53,10 +53,7 @@ class SkewSpec extends SparkSpec {
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "2KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       val big = spark.range(0, 20000)
         .select(when(col("id") % 100 =!= 0, "hot").otherwise(concat(lit("c"), col("id"))).as("k"),
           col("id").as("v"))
@@ -71,8 +68,6 @@ class SkewSpec extends SparkSpec {
       val finalPlan = joined.queryExecution.executedPlan.toString
       assert(finalPlan.contains("skew=true"),
         s"expected AQE to mark the hot partition skewed; plan:\n$finalPlan")
-    } finally saved.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
   }
 

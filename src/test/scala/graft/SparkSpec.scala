@@ -1,9 +1,6 @@
 package graft
 
 import graft.operators.Artifacts
-import java.io.File
-import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,20 +11,23 @@ import org.scalatest.funsuite.AnyFunSuite
   * every box. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
-  lazy val sf: String = "/root/testdata/sf0.001"
+  lazy val sf: String = SparkSpec.sf
 
   /** A fresh temp dir named by `prefix`, deleted with its contents when
     * the test JVM exits. */
-  def tempDir(prefix: String): String = {
-    val dir = Files.createTempDirectory(prefix).toFile
-    SparkSpec.tempDirs.add(dir)
-    dir.toString
-  }
+  def tempDir(prefix: String): String = Artifacts.tempDir(prefix)
 }
 
 object SparkSpec {
   lazy val session: SparkSession = Harness.session(Harness.DefaultCpus)
+  val sf = s"${Harness.FixtureRoot}/sf0.001"
 
-  private val tempDirs = new ConcurrentLinkedQueue[File]()
-  sys.addShutdownHook(tempDirs.forEach(d => Artifacts.deleteRecursively(d)))
+  /** `body` with each session conf key set to its value, every key
+    * restored (or unset, if it was unset) after. */
+  def withConf[T](pairs: (String, String)*)(body: => T): T = {
+    val saved = pairs.map { case (k, _) => k -> session.conf.getOption(k) }
+    pairs.foreach { case (k, v) => session.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, v) => v.fold(session.conf.unset(k))(session.conf.set(k, _)) }
+  }
 }

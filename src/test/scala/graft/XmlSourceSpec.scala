@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
@@ -27,7 +27,7 @@ class XmlSourceSpec extends SparkSpec {
       sb.append("</Situation>")
     }
     sb.append("</RESULT></RESPONSE>")
-    val p = Files.createTempFile("graft-situations", ".xml")
+    val p = Paths.get(tempDir("graft-situations"), "feed.xml")
     Files.writeString(p, sb.toString)
     p.toString
   }
@@ -151,7 +151,7 @@ class XmlSourceSpec extends SparkSpec {
       sb.append("</Deviation>")
     }
     sb.append("</Situation></RESULT></RESPONSE>")
-    val p = Files.createTempFile("graft-utf8-topn", ".xml")
+    val p = Paths.get(tempDir("graft-utf8-topn"), "feed.xml")
     Files.writeString(p, sb.toString)
     val src = spark.read.format("paged-xml").option("path", p.toString)
 
