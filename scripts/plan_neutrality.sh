@@ -53,7 +53,9 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
 done
 dump() { # <classes dir> <out file> [-Dspark.* ...]
   echo "dumping $2" >&2
-  (cd "$work" && java -Xmx2g "${opens[@]}" -Dspark.ui.enabled=false \
+  # java.io.tmpdir in $work: an old revision's artifact roots, which it
+  # never deletes itself, go with $work
+  (cd "$work" && java -Xmx2g "${opens[@]}" -Djava.io.tmpdir="$work" -Dspark.ui.enabled=false \
     -Dspark.sql.adaptive.enabled=false "${@:3}" -cp "$1:$jars/*" \
     graft.Probe plans > "$2" 2> "$2.log")
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * declarative composition over this library's operators:
   *
   *   paged source → synth key (P7) → timestamp normalize (P2) → status
-  *   derive + expired drop (P3/F8) → WKT → lat/lon (P4) → county dim
+  *   derive + expired drop (P3/F8) → WKT → lat/lon (P4) → county map
   *   lookup (P5) → composite dedup (D1) → latest-wins dedup (D2) →
   *   status rank column → keyed upsert (S6)
   *
@@ -32,11 +32,6 @@ object Pipeline {
     17 -> "Värmlands län", 18 -> "Örebro län", 19 -> "Västmanlands län",
     20 -> "Dalarnas län", 21 -> "Gävleborgs län", 22 -> "Västernorrlands län",
     23 -> "Jämtlands län", 24 -> "Västerbottens län", 25 -> "Norrbottens län")
-
-  def countyDim(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    countyNames.toSeq.toDF("county_no", "county_name")
-  }
 
   /** ISO-8601 'Z' string → timestamp_ntz (UTC), invalid → NULL
     * (reference src/trv/transform.py:18-23). */
@@ -67,9 +62,12 @@ object Pipeline {
       .withColumn("latitude", col("geo.lat"))
       .withColumn("longitude", col("geo.lon"))
       .drop("geo")
-    // P5 county lookup with display fallback
+    // P5 county lookup with display fallback: a literal map, so a
+    // 21-entry table costs no join (a missing or NULL key gives NULL).
+    // Published order: county_no first, the names after longitude.
     val withCounty = keyed
-      .join(broadcast(countyDim(spark)), Seq("county_no"), "left")
+      .select(col("county_no") +: keyed.columns.toSeq.filter(_ != "county_no").map(col) :+
+        element_at(typedLit(countyNames), col("county_no")).as("county_name"): _*)
       .withColumn("county_display",
         coalesce(col("county_name"), lit("Okänt län")))
     // D1 composite dedup (order pinned), then D2 latest-wins by key
@@ -97,11 +95,12 @@ object Pipeline {
       .option("path", xmlPath).option("pageSize", pageSize.toString)
       .option("maxPages", maxPages.toString).load()
     val normalized = normalizeIncidents(spark, raw, nowLit)
-    val merged = AtomicPublish.readIfExists(spark, targetDir) match {
+    // both reads go through the declared schema: no inference job
+    val merged = AtomicPublish.readIfExists(spark, targetDir, Some(normalized.schema)) match {
       case Some(t) => CoreQueries.upsert(t, normalized, Seq("incident_id"))
       case None => normalized
     }
     AtomicPublish.overwrite(merged, targetDir)
-    spark.read.parquet(targetDir)
+    spark.read.schema(merged.schema).parquet(targetDir)
   }
 }

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions.call_function
@@ -45,10 +45,13 @@ case class WktCentroid(child: Expression)
 object WktCentroid {
 
   /** Register `wkt_centroid` in the session's function registry (SQL and
-    * [[column]] both resolve through it). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wkt_centroid", exprs => WktCentroid(exprs.head), "built-in")
+    * [[column]] both resolve through it), unless the session has it. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("wkt_centroid")))
+      registry.createOrReplaceTempFunction(
+        "wkt_centroid", exprs => WktCentroid(exprs.head), "built-in")
+  }
 
   /** Column API wrapper; requires [[register]] on the session first. */
   def column(c: Column): Column = call_function("wkt_centroid", c)

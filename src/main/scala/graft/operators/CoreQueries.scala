@@ -19,14 +19,14 @@ object CoreQueries {
 
   /** The dashboard's county color map as a file, written once per JVM the
     * way `save_color_map` does (src/app/streamlit_app.py:271-277) so
-    * `q_color_map` can exercise the load path (file → engine → dim). */
+    * `q_color_map` can exercise the load path (file → engine → dim). It
+    * lives under the per-JVM artifact root, deleted at exit. */
   private[operators] def colorMapFile(): String = {
-    val p = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_county_colors.json")
     val doc =
       """{"Stockholms län": "#1f77b4", "Uppsala län": "#ff7f0e", "Skåne län": "#2ca02c"}"""
-    java.nio.file.Files.write(p, doc.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    p.toString
+    Artifacts.dirFor("county_colors", dir => java.nio.file.Files.write(
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir)).resolve("colors.json"),
+      doc.getBytes(java.nio.charset.StandardCharsets.UTF_8))) + "/colors.json"
   }
 
   // ---------------------------------------------------------------- library

@@ -8,7 +8,7 @@ import org.apache.spark.sql.Row
   * keeps the oracle green but breaks a law still fails loudly).
   * Fixture: sf0.001. Convention follows [[InferenceInvariantSpec]].
   */
-class AnalyticsInvariantSpec extends SparkSpec {
+class AnalyticsInvariantSpec extends ReleasesPins {
 
   private def rows(name: String): Seq[Row] =
     SparkEntry.queries(name)(spark, sf).collect().toSeq
@@ -525,7 +525,6 @@ class AnalyticsInvariantSpec extends SparkSpec {
       .groupBy("cluster").agg(count(lit(1)).as("cnt"))
       .agg(coalesce(max("cnt"), lit(0L)).as("lcc"))
       .head().getAs[Long]("lcc")
-    graft.operators.GlobalOrder.release()
     assert(row.getAs[Long]("lcc_after") == lccGlobal,
       s"decomposed=${row.getAs[Long]("lcc_after")} global=$lccGlobal")
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
   * equality is the oracle gate's job; these assert the structural
   * properties (interval tiling, stage ordering, cohort conservation) the
   * oracle can't express. */
-class BehavioralSpec extends SparkSpec {
+class BehavioralSpec extends ReleasesPins {
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * value-level equality is the oracle gate's job; these assert the
   * properties the oracle can't express (budget bounds, rate caps,
   * planted-contamination recall). */
-class CurationSpec extends SparkSpec {
+class CurationSpec extends ReleasesPins {
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 

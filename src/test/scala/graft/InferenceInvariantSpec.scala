@@ -8,7 +8,7 @@ import org.apache.spark.sql.Row
   * regeneration that keeps the oracle green but breaks a law still
   * fails loudly). Fixture: sf0.001.
   */
-class InferenceInvariantSpec extends SparkSpec {
+class InferenceInvariantSpec extends ReleasesPins {
 
   private def rows(name: String): Seq[Row] =
     SparkEntry.queries(name)(spark, sf).collect().toSeq

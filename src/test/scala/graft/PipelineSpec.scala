@@ -2,6 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class PipelineSpec extends SparkSpec {
@@ -79,5 +84,85 @@ class PipelineSpec extends SparkSpec {
     val second = Pipeline.runIngest(spark, xmlPath, dir, now).collect()
     assert(first.map(_.getString(first.head.fieldIndex("incident_id"))).sorted.toSeq ==
       second.map(_.getString(second.head.fieldIndex("incident_id"))).sorted.toSeq)
+  }
+
+  /** `n` source rows of `PagedXmlSource`'s schema, every id and message
+    * distinct. Start times and WKT points come in pairs, so a dictionary
+    * would compress them. `county` gives each row's CountyNo. */
+  private def rawRows(n: Int, county: Column): DataFrame = {
+    val ts = "date_format(timestamp_seconds(1704067200 + id div 2), \"yyyy-MM-dd'T'HH:mm:ss'Z'\")"
+    spark.range(n).select(
+      concat(lit("s"), col("id")).as("situation_id"),
+      concat(lit("d"), col("id")).as("deviation_id"),
+      concat(lit("message "), col("id")).as("message"),
+      when(col("id") % 2 === 0, "Olycka").otherwise("Vägarbete").as("message_type"),
+      lit("E4 north").as("location_descriptor"), lit("E4").as("road_number"),
+      county.cast("int").as("county_no"),
+      expr(ts).as("start_time"), lit(null).cast("string").as("end_time"),
+      expr(ts).as("modified_time"), expr(ts).as("publication_time"),
+      format_string("POINT (%.4f %.4f)", lit(11) + (col("id") / 2).cast("int") * 0.0001,
+        lit(57) + (col("id") / 2).cast("int") * 0.0001).as("wkt"))
+  }
+
+  test("county lookup: an unknown and a missing CountyNo both give Okänt län") {
+    val county = when(col("id") === 0, 1).when(col("id") === 1, 99)
+    val out = Pipeline.normalizeIncidents(spark, rawRows(3, county), now)
+    val byId = out.select("incident_id", "county_no", "county_name", "county_display")
+      .collect().map(r => r.getString(0) -> r).toMap
+    assert(byId("d0").getString(2) == "Stockholms län")
+    assert(byId("d0").getString(3) == "Stockholms län")
+    assert(byId("d1").getInt(1) == 99 && byId("d1").isNullAt(2))
+    assert(byId("d1").getString(3) == "Okänt län")
+    assert(byId("d2").isNullAt(1) && byId("d2").isNullAt(2))
+    assert(byId("d2").getString(3) == "Okänt län")
+    // published order: county_no first, the two names right after longitude
+    val cols = out.columns.toSeq
+    assert(cols.head == "county_no")
+    assert(cols.slice(cols.indexOf("longitude"), cols.indexOf("longitude") + 3) ==
+      Seq("longitude", "county_name", "county_display"))
+  }
+
+  test("published parts: near-unique columns are plain, categorical ones keep dictionaries") {
+    val dir = tempDir("graft-pipe-enc") + "/tgt"
+    AtomicPublish.overwrite(
+      Pipeline.normalizeIncidents(spark, rawRows(20000, col("id") % 25), now), dir)
+    val (fs, root) = AtomicPublish.fsFor(spark, dir)
+    val chunks = fs.listStatus(root).map(_.getPath).filter(_.getName.endsWith(".parquet"))
+      .toSeq.flatMap { part =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(part, fs.getConf))
+        try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+          .map(c => c.getPath.toDotString -> c.hasDictionaryPage)
+        finally reader.close()
+      }
+    assert(chunks.nonEmpty)
+    def dictionary(c: String): Seq[Boolean] = chunks.collect { case (`c`, d) => d }
+    for (c <- Seq("incident_id", "wkt", "start_ts"))
+      assert(dictionary(c).nonEmpty && !dictionary(c).exists(identity), s"$c has a dictionary page")
+    for (c <- Seq("status", "county_display"))
+      assert(dictionary(c).nonEmpty && dictionary(c).forall(identity), s"$c has no dictionary page")
+  }
+
+  test("a target written without status_rank reads back with NULL there") {
+    val dir = tempDir("graft-pipe-evolve") + "/tgt"
+    val first = Pipeline.runIngest(spark, xmlPath, dir, now)
+    // an older table: no status_rank, and keys the feed does not update
+    AtomicPublish.overwrite(first.drop("status_rank")
+      .withColumn("incident_id", concat(lit("old:"), col("incident_id"))), dir)
+    val out = Pipeline.runIngest(spark, xmlPath, dir, now)
+    assert(out.columns.toSeq == first.columns.toSeq)
+    val rows = out.select("incident_id", "status_rank").collect()
+    val (old, fresh) = rows.partition(_.getString(0).startsWith("old:"))
+    assert(old.nonEmpty && old.forall(_.isNullAt(1)))
+    assert(fresh.nonEmpty && !fresh.exists(_.isNullAt(1)))
+  }
+
+  test("a target holding a column the feed does not produce fails the run") {
+    val dir = tempDir("graft-pipe-extra") + "/tgt"
+    val first = Pipeline.runIngest(spark, xmlPath, dir, now)
+    AtomicPublish.overwrite(first.withColumn("legacy_flag", lit(true)), dir)
+    val e = intercept[IllegalArgumentException](Pipeline.runIngest(spark, xmlPath, dir, now))
+    assert(e.getMessage.contains("legacy_flag"), e.getMessage)
+    // the failed run published nothing: the table still has the column
+    assert(spark.read.parquet(dir).columns.contains("legacy_flag"))
   }
 }

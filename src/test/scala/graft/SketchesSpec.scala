@@ -7,7 +7,7 @@ import graft.functions.SketchProbe
   * native cms_estimate probe expression — the oracle rows pin the bound
   * booleans; these pin the probe's mechanics on known-count inputs.
   */
-class SketchesSpec extends SparkSpec {
+class SketchesSpec extends ReleasesPins {
 
   import spark.implicits._
 

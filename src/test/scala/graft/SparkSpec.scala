@@ -1,7 +1,8 @@
 package graft
 
-import graft.operators.Artifacts
+import graft.operators.{Artifacts, GlobalOrder}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites run
@@ -16,6 +17,14 @@ trait SparkSpec extends AnyFunSuite {
   /** A fresh temp dir named by `prefix`, deleted with its contents when
     * the test JVM exits. */
   def tempDir(prefix: String): String = Artifacts.tempDir(prefix)
+}
+
+/** For suites that build registry queries outside [[Harness.run]]: every
+  * GlobalOrder or `Loop` pin a test took is released, blocking, in a
+  * `finally` when the test ends, pass or fail. */
+trait ReleasesPins extends SparkSpec {
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test) finally GlobalOrder.release(blocking = true)
 }
 
 object SparkSpec {

@@ -6,7 +6,7 @@ package graft
   * intended PLAN survives — broadcast sides, semi/anti join strategies,
   * top-N pushdown, and the two-pass (not single-partition-window) Q15.
   */
-class TpchSuiteSpec extends SparkSpec {
+class TpchSuiteSpec extends ReleasesPins {
 
   private def df(name: String) = SparkEntry.queries(name)(spark, sf)
   private def planOf(name: String): String = RegistrySweep.records(name).plan

@@ -51,4 +51,14 @@ class WktCentroidSpec extends SparkSpec {
     assert(got(0).getDouble(0) == 20.0 && got(0).getDouble(1) == 10.0)
     assert(got(1).isNullAt(0) && got(2).isNullAt(0))
   }
+
+  test("register keeps a session's existing wkt_centroid instead of replacing it") {
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("wkt_centroid")
+    val registry = spark.sessionState.functionRegistry
+    WktCentroid.register(spark)
+    // a replacing registration stores a fresh ExpressionInfo
+    val before = registry.lookupFunction(id)
+    WktCentroid.register(spark)
+    assert(before.isDefined && registry.lookupFunction(id).exists(_ eq before.get))
+  }
 }
