@@ -2,6 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import graft.operators.CoreQueries
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -63,6 +64,19 @@ object AtomicPublish {
           spark.read.schema(s).parquet(dir.toString)
         }
       }
+  }
+
+  /** Latest-wins upsert of `updates` on `keys` into the table at
+    * `targetDir` ([[graft.operators.CoreQueries.upsert]]), published by
+    * [[overwrite]]; with no table yet, `updates` is the table. The target
+    * is read through `updates`' schema ([[readIfExists]]): no inference
+    * job, and a target column `updates` lacks fails the merge. Returns
+    * the published schema. */
+  def upsert(updates: DataFrame, targetDir: String, keys: Seq[String]): StructType = {
+    val merged = readIfExists(updates.sparkSession, targetDir, Some(updates.schema))
+      .fold(updates)(CoreQueries.upsert(_, updates, keys))
+    overwrite(merged, targetDir)
+    merged.schema
   }
 
   /** Write `df` as the new content of `targetDir`: tmp write → backup

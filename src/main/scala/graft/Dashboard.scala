@@ -25,16 +25,16 @@ object Dashboard {
       road: Option[String] = None,
       geoOnly: Boolean = false)
 
-  /** Base view: predicate scan + casts + display coalesce, optionally
-    * cached (S8). `sinceLit` mirrors the 30-day window of the reference
-    * scan (src/app/streamlit_app.py:154-167). */
-  def baseView(spark: SparkSession, incidents: DataFrame, sinceLit: Option[Column],
-      cache: Boolean = true): DataFrame = {
+  /** Base view: predicate scan + casts + display coalesce, cached (S8)
+    * for the session: the caller owns the view and unpersists it at
+    * refresh. `sinceLit` mirrors the 30-day window of the reference scan
+    * (src/app/streamlit_app.py:154-167). */
+  def baseView(spark: SparkSession, incidents: DataFrame, sinceLit: Option[Column]): DataFrame = {
     val scanned = sinceLit.fold(incidents)(c => incidents.where(col("start_ts") >= c))
     val sources = Seq("county_display", "county_name")
       .filter(scanned.columns.contains).map(col) :+ lit("Okänt län")
     val view = scanned.withColumn("county_display", coalesce(sources: _*))
-    if (cache) view.cache() else view
+    view.cache()
   }
 
   /** F2–F7 as one conjunctive predicate chain. */

@@ -37,8 +37,14 @@ object GraftFunctions {
     ("word_ngrams", classOf[WordNGrams], e => WordNGrams(e(0), litInt(e(1), "n"))),
     ("bpe_encode", classOf[BpeEncode], e => BpeEncode(e(0), e(1))))
 
-  def registerAll(spark: SparkSession): Unit = builders.foreach { case (name, _, build) =>
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "built-in")
+  /** Registers every graft function the session lacks; a name the
+    * session already has keeps its existing registration. */
+  def registerAll(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    builders.foreach { case (name, _, build) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }
 

@@ -1,12 +1,12 @@
 package graft
 
-import graft.operators.GlobalOrder
+import graft.operators.Loop
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one run path graft's mains and specs share: the session, the
   * environment contract (`SPARK_GRAFT_CPUS`, `SPARK_GRAFT_SF_DIR`,
   * `SPARK_GRAFT_BENCH_OUT` — the only variables the mains read), the
-  * query-name selector and the timed, pin-releasing query run. */
+  * query-name selector and the timed, pin-scoped query run. */
 object Harness {
   val DefaultCpus = 4
   val FixtureRoot = "/root/testdata"
@@ -72,14 +72,15 @@ object Harness {
   }
 
   /** Runs registry query `name` over `dir` into `sink`, timing DataFrame
-    * construction plus the sink's action (the lookup is outside). Always
-    * ends, untimed, by releasing GlobalOrder's pins BLOCKING: a long sweep
-    * cannot accumulate MEMORY_AND_DISK blocks, and one run's async block
-    * removal cannot overlap — and add noise to — the next run's span. */
+    * construction plus the sink's action (the lookup is outside), in its
+    * own [[Loop.scoped]] pin scope. The scope's blocking release runs
+    * untimed and drops only this run's pins: a long sweep cannot
+    * accumulate MEMORY_AND_DISK blocks, one run's async block removal
+    * cannot add noise to the next run's span, and a run on another thread
+    * keeps its pins. */
   def run(spark: SparkSession, name: String, dir: String, sink: Sink): Either[String, Run] = {
     val query = SparkEntry.queries(name)
-    try time(sink(query(spark, dir))).map { case (s, rows) => Run(s, rows) }
-    finally GlobalOrder.release(blocking = true)
+    Loop.scoped(time(sink(query(spark, dir)))).map { case (s, rows) => Run(s, rows) }
   }
 
   /** The min-of-2 protocol: run 1 absorbs janino codegen, JIT and

@@ -42,7 +42,6 @@ object Pipeline {
     * src/trv/transform.py:49-137). `nowLit` must be pinned by the caller
     * for deterministic status derivation. */
   def normalizeIncidents(spark: SparkSession, raw: DataFrame, nowLit: Column): DataFrame = {
-    WktCentroid.register(spark)
     val keyed = raw
       // P7 synthetic key
       .withColumn("incident_id",
@@ -94,13 +93,9 @@ object Pipeline {
     val raw = spark.read.format("graft.sources.PagedXmlSource")
       .option("path", xmlPath).option("pageSize", pageSize.toString)
       .option("maxPages", maxPages.toString).load()
-    val normalized = normalizeIncidents(spark, raw, nowLit)
-    // both reads go through the declared schema: no inference job
-    val merged = AtomicPublish.readIfExists(spark, targetDir, Some(normalized.schema)) match {
-      case Some(t) => CoreQueries.upsert(t, normalized, Seq("incident_id"))
-      case None => normalized
-    }
-    AtomicPublish.overwrite(merged, targetDir)
-    spark.read.schema(merged.schema).parquet(targetDir)
+    val published = AtomicPublish.upsert(
+      normalizeIncidents(spark, raw, nowLit), targetDir, Seq("incident_id"))
+    // read back through the published schema: no inference job
+    spark.read.schema(published).parquet(targetDir)
   }
 }

@@ -10,18 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ordering on a unique key, timestamp_ntz on both sides, rounded doubles
   * where summation order could differ.
   *
-  * CACHE-RELEASE CONTRACT: some query programs pin MEMORY_AND_DISK
-  * frames for cross-job consistency or iterative reuse
-  * ([[graft.operators.GlobalOrder.withGlobalRowNumber]] projections,
-  * [[graft.operators.Loop]]'s `partitionedEdgeCache` / `pinnedPersist`
-  * loop-static frames). The pins land on
-  * GlobalOrder's default handle; the caller that materializes the
-  * result MUST drain them afterwards via `GlobalOrder.release()` —
-  * [[graft.Harness.run]] does, per query, for every main and spec sweep.
-  * A caller that skips the release leaks pinned blocks per invocation
-  * (disk-backed blocks are never LRU-reclaimed until context shutdown).
-  * Concurrent callers in one JVM wrap execution in
-  * `GlobalOrder.scoped { ... }` and release the returned handle instead.
+  * Pinned frames follow [[graft.operators.Loop]]'s pin contract.
   */
 final case class QueryDef(
     name: String,

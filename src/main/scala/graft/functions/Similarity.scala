@@ -311,19 +311,22 @@ object Similarity {
     val baseOcc = spark.read.parquet(s"$dir/assignments")
       .groupBy("cluster").agg(count(lit(1)).as("base_n")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val assign = assignToCodebook(delta, cents).persist()
-    assign.write.mode("append").parquet(s"$dir/assignments")
-    // keep the file count bounded across arbitrarily many appends
-    compactIvfIndex(spark, dir)
-    // delta occupancy materializes (≤k rows, driver-safe like baseOcc)
-    // BEFORE the unpersist: releasing first would make the lazily-read
-    // report recompute the delta assignment from scratch — and if a
-    // caller ever passed a non-deterministic delta, the written
-    // assignments and the reported delta_n could diverge.
-    val deltaOccRows = assign.groupBy("cluster")
-      .agg(count(lit(1)).as("delta_n")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assign.unpersist(false)
+    // the assignment is pinned for the scope: the write and the delta
+    // occupancy read one computation of it. Occupancy materializes
+    // (≤k rows, driver-safe like baseOcc) BEFORE the release: releasing
+    // first would make the lazily-read report recompute the delta
+    // assignment from scratch — and if a caller ever passed a
+    // non-deterministic delta, the written assignments and the reported
+    // delta_n could diverge.
+    val deltaOccRows = Loop.scoped {
+      val assign = Loop.pinnedPersist(assignToCodebook(delta, cents))
+      assign.write.mode("append").parquet(s"$dir/assignments")
+      // keep the file count bounded across arbitrarily many appends
+      compactIvfIndex(spark, dir)
+      assign.groupBy("cluster")
+        .agg(count(lit(1)).as("delta_n")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
     import spark.implicits._
     val deltaOcc = deltaOccRows.toDF("cluster", "delta_n")
     val base = baseOcc.toDF("cluster", "base_n")
@@ -1193,8 +1196,7 @@ object Similarity {
         // the corpus union feeds the sig explode, two confirm joins, and
         // the final anti-join — cache the (skinny) table so each branch
         // doesn't re-read and re-union the fixture
-        val corpus = graft.operators.GlobalOrder.pinPersisted(
-          dedupCorpus(s, d).cache()) // pinned: harness release drains it (r15 leak-guard)
+        val corpus = Loop.pinnedPersist(dedupCorpus(s, d))
         val eb = explodeBands(corpus, col("embedding"), NdBands, NdBits)
           .drop("embedding")
           // single (band, sig) exchange shared by both self-join sides
@@ -1255,8 +1257,7 @@ object Similarity {
       (s, d) => {
         // cached for the same reason as q_embed_dedup, plus the shape-
         // sizing count() in adaptiveNearDupPairs is one more consumer
-        val corpus = graft.operators.GlobalOrder.pinPersisted(
-          dedupCorpus(s, d).cache()) // pinned: harness release drains it (r15 leak-guard)
+        val corpus = Loop.pinnedPersist(dedupCorpus(s, d))
         // COST NOTE (r15 tail sweep): warm ~3.0 s at sf0.1 decomposes as
         // ~0.6 s adaptive-LSH candidate+confirm (q_dedup_sweep runs the
         // same machinery solo, with fewer bands) + the CC checkpoint
@@ -2755,8 +2756,7 @@ object Similarity {
         // the exploded quantized frame feeds every one of the greedy
         // loop's ~9 actions (4 rounds × argmax/radius readouts, each
         // with a center-distance join) — persist it once instead of
-        // re-exploding the embedding table per action (pinned for the
-        // harness's per-query release)
+        // re-exploding the embedding table per action
         val x = Loop.pinnedPersist(
           Tables.embeddings(s, d)
             .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "e")))
@@ -2774,8 +2774,7 @@ object Similarity {
         // actions per round (argmax + radius) and the next round's
         // join — unpersisted, each action replayed the whole join
         // chain back to round 1 (≈ O(k²) replays of the center-
-        // distance join). One corpus-sized persist per round, pinned
-        // so the harness release drains all four.
+        // distance join). One corpus-sized persist per round.
         val c1 = x.agg(min("vec_id")).head().getLong(0)
         var dcur = Loop.pinnedPersist(distTo(c1))
         var rows = List((1L, c1, 0L, radius(dcur)))
@@ -3032,8 +3031,7 @@ object Similarity {
   private def dedupSweepDef: QueryDef = QueryDef(
     "q_dedup_sweep",
     (s, d) => {
-      val corpus = graft.operators.GlobalOrder.pinPersisted(
-          dedupCorpus(s, d).cache()) // pinned: harness release drains it (r15 leak-guard)
+      val corpus = Loop.pinnedPersist(dedupCorpus(s, d))
       val eb = explodeBands(corpus, col("embedding"), NdBands, NdBits)
         .drop("embedding")
         .repartition(col("band"), col("sig"))

@@ -684,15 +684,12 @@ object TextAnalysis {
           .select(col("w1"), col("w2"),
             expr("CAST(round(ln((c12 + 1.0) / (c1 + v)) * 1000000) AS BIGINT)")
               .as("s_micro"))
-        // pinned so the harness release drains the LM-score cache
-        // (r15 leak-guard caught the bare .cache() surviving release)
-        val scored = graft.operators.GlobalOrder.pinPersisted(
+        val scored = Loop.pinnedPersist(
           pairs.join(model, Seq("w1", "w2"))
             .groupBy("doc_id")
             .agg(sum("s_micro").as("sm"), count(lit(1)).as("nb"))
             .select(col("doc_id"),
-              round(col("sm") / 1e6 / col("nb"), 4).as("avg_logp"))
-            .cache())
+              round(col("sm") / 1e6 / col("nb"), 4).as("avg_logp")))
         graft.operators.GlobalOrder.withGlobalNtile(scored,
             Seq(col("avg_logp").desc, col("doc_id").asc), 3, "tile")
           .select(col("doc_id"), col("avg_logp"),

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -64,10 +64,6 @@ object NfcNormalize {
     else UTF8String.fromString(Normalizer.normalize(str, Normalizer.Form.NFC))
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "built-in")
-
-  /** Column API wrapper; requires [[register]] (or GraftExtensions) first. */
-  def column(c: Column): Column = call_function("nfc_normalize", c)
+  /** Column API wrapper; needs no function registration. */
+  def column(c: Column): Column = ColumnBridge.column(NfcNormalize(ColumnBridge.expression(c)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** `wkt_centroid(string) → struct<lat double, lon double>` — full-WKT
@@ -44,17 +44,8 @@ case class WktCentroid(child: Expression)
 
 object WktCentroid {
 
-  /** Register `wkt_centroid` in the session's function registry (SQL and
-    * [[column]] both resolve through it), unless the session has it. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("wkt_centroid")))
-      registry.createOrReplaceTempFunction(
-        "wkt_centroid", exprs => WktCentroid(exprs.head), "built-in")
-  }
-
-  /** Column API wrapper; requires [[register]] on the session first. */
-  def column(c: Column): Column = call_function("wkt_centroid", c)
+  /** Column API wrapper; needs no function registration. */
+  def column(c: Column): Column = ColumnBridge.column(WktCentroid(ColumnBridge.expression(c)))
 
   private val Num = "[-+]?[0-9]*\\.?[0-9]+(?:[eE][-+]?[0-9]+)?".r
 

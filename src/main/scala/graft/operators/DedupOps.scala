@@ -212,29 +212,21 @@ object DedupOps {
     * (bucket self-join → transitive clusters → keep min id). Returns
     * the surviving batch rows with their original columns. */
   def dedupAgainstIndex(batch: DataFrame, index: DataFrame, id: String,
-      k: Int, rowsPerBand: Int, materialize: Boolean = true): DataFrame = {
+      k: Int, rowsPerBand: Int): DataFrame = {
     // bb and fresh are each consumed twice (bb: index probe + batch-
     // internal clustering; fresh: clustering input + final survivors),
     // and the CC loop's own actions would otherwise re-run the whole
     // signature chain once more per consumer — measured 3× sig / 2×
-    // index rebuilds per call. cache() (recomputable on eviction, so
+    // index rebuilds per call. A pin (recomputable on eviction, so
     // never a correctness risk) collapses that to one build each; the
-    // cached sets are id/bucket lists, ∝ batch size only. The entries
-    // are PINNED on GlobalOrder's registry, so the harness's per-query
-    // release drains them (the r15 leak-guard caught the unpinned form
-    // surviving past release); LONG-RUNNING callers outside the harness
-    // (a foreachBatch loop) must pass materialize=false or drain via
-    // GlobalOrder.release. Plan audits also use materialize=false to
-    // see the uncached join shape.
-    def mat(df: DataFrame): DataFrame =
-      if (materialize) GlobalOrder.pinPersisted(df.cache()) else df
-    val bb = mat(lshBuckets(
+    // pinned sets are id/bucket lists, ∝ batch size only.
+    val bb = Loop.pinnedPersist(lshBuckets(
       minhashSignature(batch, id, "text", k, shingleN = 3), id, k, rowsPerBand))
     val hitBase = bb
       .join(index.select(col("band"), col("bucket")), Seq("band", "bucket"),
         "left_semi")
       .select(col(id)).distinct()
-    val fresh = mat(batch.join(hitBase, Seq(id), "left_anti"))
+    val fresh = Loop.pinnedPersist(batch.join(hitBase, Seq(id), "left_anti"))
     val fb = bb.join(fresh.select(id), Seq(id), "left_semi")
       .repartition(col("band"), col("bucket"))
     // star edges (hub = bucket min): same components as the all-pairs

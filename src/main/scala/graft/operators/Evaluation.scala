@@ -343,17 +343,15 @@ object Evaluation {
         // calibration residuals, the calibration count, the held-out
         // coverage pass) and each re-ran the orders⋈customer join plus
         // the md5 fold hash. One narrow (k, g, y, fold) persist makes
-        // the join and hash run once; pinned so the harness release
-        // drains it.
-        val o = GlobalOrder.pinPersisted(Tables.orders(s, d)
+        // the join and hash run once.
+        val o = Loop.pinnedPersist(Tables.orders(s, d)
           .join(Tables.customer(s, d).select(col("c_custkey"), col("c_nationkey")),
             col("o_custkey") === col("c_custkey"))
           .select(col("o_orderkey").as("k"), col("c_nationkey").as("g"),
             round(col("o_totalprice") * 100).cast("long").as("y"),
             (conv(substring(md5(concat(lit("cf:"),
               col("o_orderkey").cast("string"))), 1, 12), 16, 10)
-              .cast("long") % 4).as("fold"))
-          .cache())
+              .cast("long") % 4).as("fold")))
         val mu = o.where(col("fold") <= 1).groupBy("g")
           .agg(expr("sum(y) div count(1)").as("yhat"))
         val cal = o.join(broadcast(mu), "g").where(col("fold") === 2)

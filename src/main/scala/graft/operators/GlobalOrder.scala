@@ -37,85 +37,9 @@ object GlobalOrder {
 
   private val LocalBits = 33 // monotonically_increasing_id: pid << 33 | local
 
-  /** A per-invocation registry of the ranked projections pinned by
-    * [[withGlobalRowNumber]] / [[withRunningTotal]]. The persist must
-    * outlive the CONSUMING action — the offsets job and the final pass
-    * both read it — which a lazily-returned DataFrame cannot scope on
-    * its own; so every pinned projection is tracked on a handle and
-    * released by the caller once the query output is materialized.
-    * Without that, each invocation leaves MEMORY_AND_DISK blocks pinned
-    * for the session lifetime (disk-backed blocks are never
-    * LRU-reclaimed until context shutdown) and a long multi-query
-    * session accumulates unbounded cache. */
-  final class PinHandle private[GlobalOrder] () {
-    private[GlobalOrder] val pins =
-      new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-    /** Unpersists every projection pinned under THIS handle — another
-      * caller's scoped pins are untouched, so releasing cannot force a
-      * concurrent consumer to silently recompute its ranked projection
-      * (and lose the cross-job boundary consistency the persist exists
-      * for). Call AFTER the consuming action has materialized the
-      * output; idempotent and safe when nothing is pinned.
-      * `blocking = true` waits for block removal — use between timed
-      * runs so async cleanup can't bleed into the next measurement. */
-    def release(blocking: Boolean = false): Unit = {
-      var d = pins.poll()
-      while (d != null) { d.unpersist(blocking); d = pins.poll() }
-    }
-  }
-
-  /** Pins from callers outside any [[scoped]] block land here — the
-    * sequential runs of [[graft.Harness.run]], which drain it per query
-    * via the process-global [[release]]. */
-  private val defaultHandle = new PinHandle
-
-  /** The handle receiving pins on the current thread — thread-local
-    * (inherited by child threads), so two concurrent scoped callers in
-    * one JVM cannot see each other's pins. */
-  private val current =
-    new scala.util.DynamicVariable[PinHandle](defaultHandle)
-
-  private def pin(df: DataFrame): DataFrame = { current.value.pins.add(df); df }
-
-  /** Registers an externally-persisted frame on the current handle so
-    * the harness's per-query [[release]] drains it with the ranked
-    * projections — for operators that persist a frame REUSED across
-    * iterative rounds (q_ppr / q_weighted_pagerank pre-partition the
-    * edge frame by join key once so the 6–8 power rounds shuffle only
-    * the skinny rank side; the cache must outlive the final action but
-    * not the session). Caller persists; this only scopes the release.
-    *
-    * RELEASE CONTRACT (documented on [[graft.QueryDef]] too): pins land
-    * on the DEFAULT handle unless the caller runs inside [[scoped]].
-    * [[graft.Harness.run]] (every main, the registry spec) drains the
-    * default handle per query; any OTHER caller executing a
-    * pinning query must call [[release]] after materializing its output
-    * or wrap the run in [[scoped]] and release that handle — otherwise
-    * every invocation leaks MEMORY_AND_DISK blocks for the session
-    * lifetime. */
-  private[graft] def pinPersisted(df: DataFrame): DataFrame = pin(df)
-
-  /** Runs `body` with a FRESH per-invocation handle and returns
-    * (result, handle): every projection pinned during `body` belongs to
-    * the returned handle, which the caller releases after materializing
-    * its output. This is the concurrency-safe entry point — a scoped
-    * caller can never unpersist another caller's projections, and the
-    * global [[release]] never touches scoped pins. */
-  def scoped[T](body: => T): (T, PinHandle) = {
-    val h = new PinHandle
-    (current.withValue(h)(body), h)
-  }
-
-  /** Unpersists every ranked projection pinned OUTSIDE any [[scoped]]
-    * block since the last call — the sequential-harness convenience
-    * ([[graft.Harness.run]] calls it per query). Re-executing a previously
-    * returned frame after release would recompute the projection and
-    * lose the cross-job boundary consistency the persist exists for;
-    * materialize once, release, re-derive if needed. Concurrent callers
-    * must use [[scoped]] instead: this drains only the default handle,
-    * so it cannot reach — and cannot break — their pins. */
-  def release(blocking: Boolean = false): Unit = defaultHandle.release(blocking)
+  /** Drains the pins taken outside any [[Loop.scoped]] block (see
+    * [[Loop]]'s pin contract). */
+  def release(blocking: Boolean = false): Unit = Loop.defaultHandle.release(blocking)
 
   /** Adds a dense 1-based `out` BIGINT column: the row's position under
     * `order` (which must be a total order) across the whole dataset.
@@ -132,13 +56,11 @@ object GlobalOrder {
     * cluster scale prefer a checkpoint if executor loss is in play. */
   def withGlobalRowNumber(df: DataFrame, order: Seq[Column], out: String): DataFrame = {
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val mid = df.repartitionByRange(parts, order: _*)
+    val mid = Loop.pinnedPersist(df.repartitionByRange(parts, order: _*)
       .sortWithinPartitions(order: _*)
       .withColumn("_go_mid", monotonically_increasing_id())
       .withColumn("_go_pid", shiftright(col("_go_mid"), LocalBits))
-      .withColumn("_go_loc", col("_go_mid").bitwiseAND(lit((1L << LocalBits) - 1)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pin(mid)
+      .withColumn("_go_loc", col("_go_mid").bitwiseAND(lit((1L << LocalBits) - 1))))
     val offsets = mid.groupBy("_go_pid").agg(count(lit(1)).as("_go_cnt"))
       .withColumn("_go_off", coalesce(
         sum("_go_cnt").over(Window.orderBy("_go_pid")
@@ -188,13 +110,11 @@ object GlobalOrder {
     // persisted for the same cross-job consistency reason as
     // withGlobalRowNumber: the offsets job and the final pass must see
     // identical range partitioning
-    val mid = df.repartitionByRange(parts, order: _*)
+    val mid = Loop.pinnedPersist(df.repartitionByRange(parts, order: _*)
       .sortWithinPartitions(order: _*)
       .withColumn("_go_val", value.cast("long"))
       .withColumn("_go_pid",
-        shiftright(monotonically_increasing_id(), LocalBits))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pin(mid)
+        shiftright(monotonically_increasing_id(), LocalBits)))
     val local = mid.withColumn("_go_run",
       sum("_go_val").over(Window.partitionBy("_go_pid").orderBy(order: _*)
         .rowsBetween(Window.unboundedPreceding, 0)))
@@ -221,14 +141,12 @@ object GlobalOrder {
   def withRunningTotalAndRowNumber(df: DataFrame, order: Seq[Column],
       value: Column, runOut: String, rnOut: String): DataFrame = {
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val mid = df.repartitionByRange(parts, order: _*)
+    val mid = Loop.pinnedPersist(df.repartitionByRange(parts, order: _*)
       .sortWithinPartitions(order: _*)
       .withColumn("_go_val", value.cast("long"))
       .withColumn("_go_mid", monotonically_increasing_id())
       .withColumn("_go_pid", shiftright(col("_go_mid"), LocalBits))
-      .withColumn("_go_loc", col("_go_mid").bitwiseAND(lit((1L << LocalBits) - 1)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pin(mid)
+      .withColumn("_go_loc", col("_go_mid").bitwiseAND(lit((1L << LocalBits) - 1))))
     val prefixW = Window.orderBy("_go_pid")
       .rowsBetween(Window.unboundedPreceding, -1)
     val offsets = mid.groupBy("_go_pid")

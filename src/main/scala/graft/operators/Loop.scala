@@ -1,13 +1,41 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.storage.StorageLevel
 import scala.concurrent.{Await, duration}
+import scala.util.DynamicVariable
 
 /** Loop state in ONE place: how an iterative frame's lineage is cut
   * ([[cutLineage]], optionally reading the loop's convergence counters
-  * from the cut's own job) and how a loop-static frame is pinned
-  * ([[partitionedEdgeCache]], [[pinnedPersist]]). `LoopSpec` fails on a
-  * checkpoint call anywhere else, so the policy cannot fork per caller. */
+  * from the cut's own job) and how a frame is pinned and released
+  * ([[pinnedPersist]], [[partitionedEdgeCache]], [[scoped]]). `LoopSpec`
+  * fails on a checkpoint, persist, cache or unpersist call anywhere else
+  * (the dashboard's session-lifetime view aside), so the policy cannot
+  * fork per caller.
+  *
+  * PIN CONTRACT. A program pins a frame whose consumers span several
+  * jobs: a GlobalOrder ranked projection (its offsets job and final pass
+  * must see one range partitioning), a loop-static frame read every
+  * round, a frame several branches of one query read. The pin must
+  * outlive the consuming action, which a lazily returned DataFrame cannot
+  * scope on its own, so [[pinnedPersist]] registers every pin on the
+  * current thread's handle:
+  *  - inside [[scoped]], the scope's own handle, released (blocking) when
+  *    the scope exits, normally or by a throw. [[graft.Harness.run]] (every
+  *    main, the registry sweep), each curation micro-batch and each IVF
+  *    append run in a scope, so a run releases exactly the pins it took
+  *    and never another thread's;
+  *  - outside any scope, the process-wide default handle, which
+  *    `GlobalOrder.release()` drains. A caller that runs pinning queries
+  *    outside a scope and never drains leaks MEMORY_AND_DISK blocks for
+  *    the session lifetime (disk-backed blocks are never LRU-reclaimed
+  *    before context shutdown).
+  *
+  * Consume a pinned result before its release: re-executing it after
+  * recomputes the pinned plan and loses the cross-job consistency the pin
+  * exists for. Spark's CacheManager keys a persist by logical plan, so two
+  * scopes that pin the same plan share one entry, and the first release
+  * drops it for both. */
 object Loop {
 
   /** Eager lineage cut. With a session checkpoint dir it is RELIABLE:
@@ -64,12 +92,6 @@ object Loop {
     * layout is NOT a substitute — it avoids the exchange but not the
     * per-round parquet re-decode (measured 3.6× worse; BENCH.md r13).
     *
-    * The frame is pinned via [[GlobalOrder.pinPersisted]], so the
-    * harness's per-query release drains the blocks after the consuming
-    * action — callers outside [[graft.Harness.run]] must drain via
-    * `GlobalOrder.release()` (or run inside `GlobalOrder.scoped`) or
-    * the MEMORY_AND_DISK blocks leak for the session lifetime.
-    *
     * CUT POLICY for the loop body built on top of this cache: cut
     * lineage ([[cutLineage]]) at depth ≤ 2 — the per-round join
     * broadcasts the evolving side at bench scale, and a broadcast
@@ -88,7 +110,7 @@ object Loop {
     * replaces wherever the rank frame is broadcastable. BENCH.md r14. */
   private[graft] def partitionedEdgeCache(df: DataFrame, key: Column): DataFrame = {
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    GlobalOrder.pinPersisted(
+    pinnedPersist(
       df.repartition(parts, key)
         // sorted ONCE at cache build: at bench scale the evolving side
         // broadcasts and the ordering is irrelevant, but at the scale
@@ -97,14 +119,41 @@ object Loop {
         // pre-sorted cache hands SMJ both the partitioning AND the
         // order and only the skinny evolving side sorts per round,
         // instead of the data-sized edge frame re-sorting k times
-        .sortWithinPartitions(key)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .sortWithinPartitions(key))
   }
 
-  /** Pin-scoped plain persist (no re-partitioning) for node-sized frames
-    * a loop reads every round — same release contract as
-    * [[partitionedEdgeCache]]. */
+  /** The pins one scope took; for [[defaultHandle]], every pin taken
+    * outside a scope. */
+  private[operators] final class PinHandle {
+    private val pins = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+
+    def add(df: DataFrame): DataFrame = { pins.add(df); df }
+
+    /** Unpersists every frame pinned here; idempotent. `blocking` waits
+      * for block removal, so async cleanup cannot bleed into whatever the
+      * caller times next. */
+    def release(blocking: Boolean): Unit = {
+      var d = pins.poll()
+      while (d != null) { d.unpersist(blocking); d = pins.poll() }
+    }
+  }
+
+  /** Receives the pins taken outside any [[scoped]] block. */
+  private[operators] val defaultHandle = new PinHandle
+
+  /** The handle receiving pins on the current thread. Child threads
+    * inherit it, and two scopes on two threads never share one. */
+  private val current = new DynamicVariable[PinHandle](defaultHandle)
+
+  /** The one way to pin: persists `df` MEMORY_AND_DISK and registers it on
+    * the current handle (see the pin contract above). */
   private[graft] def pinnedPersist(df: DataFrame): DataFrame =
-    GlobalOrder.pinPersisted(
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    current.value.add(df.persist(StorageLevel.MEMORY_AND_DISK))
+
+  /** Runs `body` under a fresh handle and releases that handle, blocking,
+    * when `body` returns or throws: every pin `body` took, and no other. */
+  def scoped[T](body: => T): T = {
+    val handle = new PinHandle
+    try current.withValue(handle)(body) finally handle.release(blocking = true)
+  }
 }

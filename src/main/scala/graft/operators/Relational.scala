@@ -1020,12 +1020,11 @@ object Relational {
         // projection build + the totals branch) — exchange reuse cannot
         // cross a job boundary, so this is the q_conformal case, not
         // the in-action case (A/B: 0.94 s pinned vs 1.37 s unpinned).
-        val pr = GlobalOrder.pinPersisted(Tables.lineitem(s, d)
+        val pr = Loop.pinnedPersist(Tables.lineitem(s, d)
           .select(col("l_partkey"),
             round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
               .cast("long").as("cents"))
-          .groupBy("l_partkey").agg(sum("cents").as("cents"))
-          .cache())
+          .groupBy("l_partkey").agg(sum("cents").as("cents")))
         val ord = Seq(col("cents").desc, col("l_partkey").asc)
         val ranked = GlobalOrder.withRunningTotalAndRowNumber(
           pr, ord, col("cents"), "cum", "rnk")

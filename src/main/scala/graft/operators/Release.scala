@@ -622,7 +622,6 @@ object Release {
     QueryDef(
       "q_unicode_norm",
       (s, d) => {
-        NfcNormalize.register(s)
         // the literal below is DECOMPOSED on purpose ('e'+U+0301,
         // 'i'+U+0308, raw UTF-8 in this source file) — NFC must do real
         // work for len_raw > len_norm to hold

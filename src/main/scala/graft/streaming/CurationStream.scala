@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.DedupOps
+import graft.operators.{DedupOps, Loop}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -59,16 +59,13 @@ object CurationStream {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val s = batch.sparkSession
-        // materialize=false: the internal bucket/survivor caches the
-        // batch form uses have no unpersist path, so a long-running
-        // stream would leak two cache entries per trigger; the
-        // micro-batch is small and its two consumers (write + index
-        // build) already share this persist()
-        val survivors = DedupOps.dedupAgainstIndex(
-          batch, readIndex(s, indexRoot), "doc_id", k, rowsPerBand,
-          materialize = false)
-          .persist()
-        try {
+        // one pin scope per micro-batch: the dedup's own pins and the
+        // survivors (read by the write and the index build) are all
+        // released when the batch ends, so a long-running stream holds
+        // no cache between triggers
+        Loop.scoped {
+          val survivors = Loop.pinnedPersist(DedupOps.dedupAgainstIndex(
+            batch, readIndex(s, indexRoot), "doc_id", k, rowsPerBand))
           survivors.write.mode("overwrite")
             .parquet(s"$acceptedRoot/batch=$id")
           DedupOps.lshBuckets(
@@ -76,8 +73,7 @@ object CurationStream {
                 shingleN = 3), "doc_id", k, rowsPerBand)
             .write.mode("overwrite")
             .parquet(s"$indexRoot/batch=$id")
-        } finally survivors.unpersist()
-        ()
+        }
       }
       .start()
 }

@@ -25,16 +25,10 @@ object IncrementalUpsert {
     * deployments the target would be a MERGE-capable table; on plain
     * parquet we recompute deterministically (SURVEY §7 hard-parts note).
     */
-  def mergeBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
-      keys: Seq[String], versionCol: String): Unit = {
-    val deduped = CoreQueries.latestWins(
-      batch, keys, Seq(col(versionCol).desc))
-    val merged = graft.AtomicPublish.readIfExists(spark, targetDir) match {
-      case Some(t) => CoreQueries.upsert(t, deduped, keys)
-      case None => deduped
-    }
-    graft.AtomicPublish.overwrite(merged, targetDir)
-  }
+  def mergeBatch(batch: DataFrame, targetDir: String, keys: Seq[String],
+      versionCol: String): Unit =
+    graft.AtomicPublish.upsert(
+      CoreQueries.latestWins(batch, keys, Seq(col(versionCol).desc)), targetDir, keys)
 
   /** Wire a streaming DataFrame into the watermark → dropDuplicates →
     * foreachBatch-merge pipeline. `eventTimeCol` bounds the dedup state
@@ -50,7 +44,7 @@ object IncrementalUpsert {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeBatch(batch.sparkSession, batch, targetDir, keys, versionCol)
+        mergeBatch(batch, targetDir, keys, versionCol)
       }
       .start()
   }

@@ -120,7 +120,7 @@ class CodegenParitySpec extends SparkSpec {
     val rows = samples(strGen, 60).map(Row(_))
     val schema = StructType(Seq(StructField("s", StringType)))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-    graft.functions.NfcNormalize.register(spark)
+    GraftFunctions.registerAll(spark)
     def run(on: Boolean): Seq[Any] = withCodegen(on) {
       df.selectExpr("nfc_normalize(s) AS n").collect().map(_.get(0)).toSeq
     }

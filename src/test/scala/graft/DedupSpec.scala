@@ -3,7 +3,7 @@ package graft
 import graft.operators.DedupOps
 import org.apache.spark.sql.functions._
 
-class DedupSpec extends SparkSpec {
+class DedupSpec extends ReleasesPins {
   import spark.implicits._
 
   private val docs = Seq(

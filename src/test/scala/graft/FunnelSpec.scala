@@ -6,7 +6,7 @@ import graft.streaming.Funnel
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-class FunnelSpec extends SparkSpec {
+class FunnelSpec extends ReleasesPins {
   import spark.implicits._
 
   private def evDf(rows: Seq[(Long, String, String)]) =

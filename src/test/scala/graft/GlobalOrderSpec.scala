@@ -1,13 +1,13 @@
 package graft
 
-import graft.operators.GlobalOrder
+import graft.operators.{GlobalOrder, Loop}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The distributed global-ordering primitive must reproduce the
   * single-partition window semantics exactly — on ragged sizes, ties in
   * the value column (broken by the unique key), and n < k. */
-class GlobalOrderSpec extends SparkSpec {
+class GlobalOrderSpec extends ReleasesPins {
   import spark.implicits._
 
   test("withGlobalRowNumber equals the single-partition row_number window") {
@@ -77,13 +77,14 @@ class GlobalOrderSpec extends SparkSpec {
   }
 
   test("scoped handles: releasing one caller's pins leaves the other's cached") {
-    // two interleaved callers, each in its own scope: caller A releasing
-    // must not unpersist caller B's ranked projection (the process-global
-    // release() trap this API exists to close), and the global release()
-    // must not reach scoped pins at all
+    // nested scopes, each with its own ranked projection: the inner
+    // scope's release must not unpersist the outer scope's projection
+    // (the process-global release() trap scopes exist to close), and the
+    // default-handle release() must not reach scoped pins at all
     GlobalOrder.release()
-    val base = spark.sparkContext.getPersistentRDDs.keySet
-    // distinct inputs per caller: Spark's CacheManager dedups persist()
+    def persistent() = spark.sparkContext.getPersistentRDDs.keySet
+    val base = persistent()
+    // distinct inputs per scope: Spark's CacheManager dedups persist()
     // by logical plan, so identical frames would share one cache entry
     // regardless of any handle discipline
     def ranked(n: Long) = {
@@ -92,25 +93,27 @@ class GlobalOrderSpec extends SparkSpec {
       GlobalOrder.withGlobalRowNumber(
         df, Seq(col("v").asc, col("id").asc), "pos")
     }
-    val (outA, hA) = GlobalOrder.scoped { val r = ranked(3000); r.count(); r }
-    val afterA = spark.sparkContext.getPersistentRDDs.keySet -- base
-    val (outB, hB) = GlobalOrder.scoped { val r = ranked(4000); r.count(); r }
-    val bOnly = spark.sparkContext.getPersistentRDDs.keySet -- base -- afterA
-    assert(afterA.nonEmpty && bOnly.nonEmpty,
-      "expected each scope to pin its own projection")
-    // the global release must not touch either scope's pins
-    GlobalOrder.release(blocking = true)
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- base)
-      == afterA ++ bOnly)
-    hA.release(blocking = true)
-    val left = spark.sparkContext.getPersistentRDDs.keySet -- base
-    assert((left & afterA).isEmpty, "caller A's pins survived its release")
-    assert(bOnly.subsetOf(left),
-      "caller A's release unpersisted caller B's projection")
-    assert(outB.count() == 4000) // B's frame still valid, no recompute race
-    hB.release(blocking = true)
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- base).isEmpty)
-    hA.release(); hB.release() // idempotent
+    val outA = Loop.scoped {
+      val outA = ranked(3000); outA.count()
+      val afterA = persistent() -- base
+      val bOnly = Loop.scoped {
+        val outB = ranked(4000); outB.count()
+        val bOnly = persistent() -- base -- afterA
+        assert(afterA.nonEmpty && bOnly.nonEmpty,
+          "expected each scope to pin its own projection")
+        // the default-handle release must not touch either scope's pins
+        GlobalOrder.release(blocking = true)
+        assert((persistent() -- base) == afterA ++ bOnly)
+        bOnly
+      }
+      val left = persistent() -- base
+      assert((left & bOnly).isEmpty, "the inner scope's pins survived its release")
+      assert(afterA.subsetOf(left),
+        "the inner scope's release unpersisted the outer scope's projection")
+      assert(outA.count() == 3000) // A's frame still valid, no recompute race
+      outA
+    }
+    assert((persistent() -- base).isEmpty, "the outer scope's pins survived its release")
     assert(outA.count() == 3000) // released frames re-derive correctly
   }
 
@@ -142,7 +145,6 @@ class GlobalOrderSpec extends SparkSpec {
       ntile(4).over(Window.orderBy(col("b").desc, col("id").asc)).as("qb"),
       ntile(4).over(Window.orderBy(col("c").asc, col("id").asc)).as("qc"))
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
-    GlobalOrder.release(blocking = true)
   }
 
   test("withGlobalNtiles handles n < k (one-row-per-tile edge case)") {
@@ -153,7 +155,6 @@ class GlobalOrderSpec extends SparkSpec {
     val want = df.select(col("id"),
       ntile(4).over(Window.orderBy(col("v").asc, col("id").asc)).as("q"))
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
-    GlobalOrder.release(blocking = true)
   }
 
   test("withGlobalNtiles fails loudly on a null sort key instead of mis-tiling") {
@@ -169,6 +170,5 @@ class GlobalOrderSpec extends SparkSpec {
       .map(x => Option(x.getMessage).getOrElse("")).mkString("\n")
     assert(msgs.contains("non-null"),
       s"null-key failure does not explain the contract:\n$msgs")
-    GlobalOrder.release(blocking = true)
   }
 }

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *  3. determinism: two independent builds return identical edges
   *     (hash-derived hyperplanes, rounded sims, total tie-breaks).
   */
-class KnnAdaptiveSpec extends SparkSpec {
+class KnnAdaptiveSpec extends ReleasesPins {
 
   private def recallAt3(approx: DataFrame): Double = {
     val emb = Tables.embeddings(spark, sf)

@@ -15,8 +15,9 @@ import scala.jdk.CollectionConverters._
 /** The loop-state module's guarantees: a cut's metrics come from the
   * cut's own eager job (no probe job), empty frames yield zero metrics
   * without hanging, two cuts in flight at once read their own metrics,
-  * both connected-components loops accept an empty pair list, and no
-  * source file cuts lineage on its own. */
+  * both connected-components loops accept an empty pair list, a scope
+  * releases its pins even when it throws, and no source file cuts
+  * lineage or pins a frame on its own. */
 class LoopSpec extends SparkSpec {
   import spark.implicits._
 
@@ -86,18 +87,55 @@ class LoopSpec extends SparkSpec {
     assert(bounded(DedupOps.connectedComponentsStar(none, maxIter = 3)).isEmpty)
   }
 
-  test("no source file outside Loop and ScaleProbe checkpoints or sets a checkpoint dir") {
+  test("a scope that throws still releases its pins: no cache entry, no persistent RDD") {
+    val base = spark.sparkContext.getPersistentRDDs.keySet
+    val df = spark.range(0, 1234, 1, 4).select((col("id") * 7).as("x"))
+    val e = intercept[IllegalStateException] {
+      Loop.scoped {
+        assert(Loop.pinnedPersist(df).count() == 1234)
+        assert(df.storageLevel.isValid, "the pin should be cached before the throw")
+        throw new IllegalStateException("boom inside the scope")
+      }
+    }
+    assert(e.getMessage == "boom inside the scope")
+    assert(!df.storageLevel.isValid, "the throwing scope left its cache entry")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- base).isEmpty,
+      "the throwing scope left a persistent RDD")
+  }
+
+  /** `file:line: call` for every line of `src/main/scala` outside the
+    * `exempt` files that contains a `banned` call; with `codeOnly`,
+    * whole-line comments are skipped. A line of a file `allowed` names
+    * passes if it holds that file's fragment. */
+  private def sourceCalls(banned: Seq[String], exempt: Set[String],
+      codeOnly: Boolean = false, allowed: Map[String, String] = Map.empty): Seq[String] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val banned = Seq(".localCheckpoint(", ".checkpoint(", "setCheckpointDir")
-    val offenders = for {
-      f <- files(root) if f.getName.endsWith(".scala")
-      if !Set("Loop.scala", "ScaleProbe.scala").contains(f.getName)
+    def comment(line: String): Boolean =
+      Seq("//", "/*", "*").exists(line.trim.startsWith)
+    for {
+      f <- files(root) if f.getName.endsWith(".scala") && !exempt.contains(f.getName)
       (line, no) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
+      if !(codeOnly && comment(line)) && !allowed.get(f.getName).exists(line.contains)
       b <- banned if line.contains(b)
     } yield s"${f.getPath}:${no + 1}: $b"
+  }
+
+  test("no source file outside Loop and ScaleProbe checkpoints or sets a checkpoint dir") {
+    val offenders = sourceCalls(Seq(".localCheckpoint(", ".checkpoint(", "setCheckpointDir"),
+      Set("Loop.scala", "ScaleProbe.scala"))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("no source file outside Loop persists, caches or unpersists a frame") {
+    // every pin goes through Loop.pinnedPersist and is released by its
+    // scope or the default-handle drain. The one exception: the
+    // dashboard's base view lives for the dashboard session, and its
+    // caller owns it and unpersists it at refresh.
+    val offenders = sourceCalls(Seq(".persist(", ".cache()", ".unpersist("),
+      Set("Loop.scala"), codeOnly = true, allowed = Map("Dashboard.scala" -> "view.cache()"))
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

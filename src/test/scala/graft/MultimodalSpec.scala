@@ -3,7 +3,7 @@ package graft
 import graft.operators.Multimodal
 import org.apache.spark.sql.functions._
 
-class MultimodalSpec extends SparkSpec {
+class MultimodalSpec extends ReleasesPins {
 
   test("mapPartitions feature extraction agrees with the declarative plan") {
     val docs = Tables.documents(spark, sf)

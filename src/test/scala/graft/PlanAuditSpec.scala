@@ -108,10 +108,11 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_incremental_dedup: index probe is a semi-join, drops are anti-joins") {
-    // the registry form caches its twice-consumed stages, which hides
-    // the inner joins behind InMemoryTableScans in the final plan — so
-    // the full shape is audited on the uncached form, and the registry
-    // plan is only required to keep the final anti-join drop
+    // the dedup pins its twice-consumed stages, which hides the inner
+    // joins behind InMemoryTableScans in the final plan — so the full
+    // shape is read from the pinned stages' own cached plans, and the
+    // registry plan is only required to keep the final anti-join drop
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
     import org.apache.spark.sql.functions._
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
     val base = docs.where(col("doc_id") % 5 =!= 0)
@@ -119,11 +120,13 @@ class PlanAuditSpec extends SparkSpec {
     val index = operators.DedupOps.lshBuckets(
       operators.DedupOps.minhashSignature(base, "doc_id", "text", 4, shingleN = 3),
       "doc_id", 4, 2)
-    val uncached = released(operators.DedupOps
-      .dedupAgainstIndex(batch, index, "doc_id", 4, 2, materialize = false)
-      .queryExecution.executedPlan.toString)
-    assert(uncached.contains("LeftSemi"), s"index probe not a semi-join:\n$uncached")
-    assert(uncached.contains("LeftAnti"), s"dup drop not an anti-join:\n$uncached")
+    val cached = released(operators.DedupOps
+      .dedupAgainstIndex(batch, index, "doc_id", 4, 2)
+      .queryExecution.optimizedPlan
+      .collect { case r: InMemoryRelation => r.cachedPlan.toString })
+    val shown = cached.mkString("\n")
+    assert(cached.exists(_.contains("LeftSemi")), s"index probe not a semi-join:\n$shown")
+    assert(cached.exists(_.contains("LeftAnti")), s"dup drop not an anti-join:\n$shown")
     assert(planOf("q_incremental_dedup").contains("LeftAnti"))
   }
 

@@ -14,9 +14,9 @@ class RegistrySpec extends SparkSpec {
   }
 
   test("every declared query runs, returns rows, and leaks no cache after release (pin contract)") {
-    // the pin-release CONTRACT, enforced (r14 verdict item 3): every
-    // persist a query takes must ride GlobalOrder's pin registry so the
-    // harness's per-query release drains it. RegistrySweep runs each
+    // the pin contract, enforced (r14 verdict item 3): every persist a
+    // query takes must go through Loop.pinnedPersist so the scope of
+    // Harness.run releases it. RegistrySweep runs each
     // query once through Harness.run with the count sink — Bench's and
     // Verify's own run-and-release path. A query that calls
     // .persist/.cache directly leaves MEMORY_AND_DISK blocks pinned for

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-class RelationalSpec extends SparkSpec {
+class RelationalSpec extends ReleasesPins {
 
   test("approx_count_distinct is within 10% of the exact count") {
     val exact = SparkEntry.queries("q_distinct_agg")(spark, sf)

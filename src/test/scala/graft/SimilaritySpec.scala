@@ -3,7 +3,7 @@ package graft
 import graft.functions.Similarity
 import org.apache.spark.sql.functions._
 
-class SimilaritySpec extends SparkSpec {
+class SimilaritySpec extends ReleasesPins {
   import spark.implicits._
 
   test("dot and cosine on known vectors") {

@@ -19,9 +19,9 @@ trait SparkSpec extends AnyFunSuite {
   def tempDir(prefix: String): String = Artifacts.tempDir(prefix)
 }
 
-/** For suites that build registry queries outside [[Harness.run]]: every
-  * GlobalOrder or `Loop` pin a test took is released, blocking, in a
-  * `finally` when the test ends, pass or fail. */
+/** For suites that build pinning queries outside [[Harness.run]]'s
+  * scope: every pin a test took on the default handle is released,
+  * blocking, in a `finally` when the test ends, pass or fail. */
 trait ReleasesPins extends SparkSpec {
   override def withFixture(test: NoArgTest): Outcome =
     try super.withFixture(test) finally GlobalOrder.release(blocking = true)

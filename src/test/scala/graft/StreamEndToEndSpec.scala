@@ -125,13 +125,15 @@ class StreamEndToEndSpec extends SparkSpec {
         .withColumn("status",
           CoreQueries.statusOf(col("start_ts"), col("end_ts"), nowTs))
         .where(col("status").isNotNull),
-      sinceLit = None, cache = false)
-    val (ongoing, upcoming, total) = Dashboard.kpis(view)
-    assert((ongoing, upcoming, total) == ((2L, 1L, 3L)),
-      s"KPIs: ongoing=$ongoing upcoming=$upcoming total=$total")
-    val counties = Dashboard.countyCounts(view).collect()
-    assert(counties.length == 1 &&
-      counties(0).getString(0) == "Stockholms län" && counties(0).getLong(1) == 3)
+      sinceLit = None)
+    try {
+      val (ongoing, upcoming, total) = Dashboard.kpis(view)
+      assert((ongoing, upcoming, total) == ((2L, 1L, 3L)),
+        s"KPIs: ongoing=$ongoing upcoming=$upcoming total=$total")
+      val counties = Dashboard.countyCounts(view).collect()
+      assert(counties.length == 1 &&
+        counties(0).getString(0) == "Stockholms län" && counties(0).getLong(1) == 3)
+    } finally view.unpersist(blocking = true) // the view's owner drops it
   }
 
   /** Crash-recovery law behind T3's "exactly-once-ish": a run killed

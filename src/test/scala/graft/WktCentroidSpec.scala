@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.WktCentroid
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, expr}
 
 class WktCentroidSpec extends SparkSpec {
   import spark.implicits._
@@ -44,21 +44,24 @@ class WktCentroidSpec extends SparkSpec {
   }
 
   test("registered SQL function evaluates over a DataFrame, NULL-safe") {
-    WktCentroid.register(spark)
+    GraftFunctions.registerAll(spark)
     val df = Seq(Some("POINT (10 20)"), Some("nope"), None).toDF("wkt")
-    val got = df.select(WktCentroid.column(col("wkt")).as("c"))
-      .selectExpr("c.lat", "c.lon").collect()
-    assert(got(0).getDouble(0) == 20.0 && got(0).getDouble(1) == 10.0)
-    assert(got(1).isNullAt(0) && got(2).isNullAt(0))
+    // the Column API builds the expression itself; SQL resolves the
+    // registered name to the same expression
+    for (c <- Seq(WktCentroid.column(col("wkt")), expr("wkt_centroid(wkt)"))) {
+      val got = df.select(c.as("c")).selectExpr("c.lat", "c.lon").collect()
+      assert(got(0).getDouble(0) == 20.0 && got(0).getDouble(1) == 10.0)
+      assert(got(1).isNullAt(0) && got(2).isNullAt(0))
+    }
   }
 
-  test("register keeps a session's existing wkt_centroid instead of replacing it") {
+  test("registerAll keeps a session's existing wkt_centroid instead of replacing it") {
     val id = org.apache.spark.sql.catalyst.FunctionIdentifier("wkt_centroid")
     val registry = spark.sessionState.functionRegistry
-    WktCentroid.register(spark)
+    GraftFunctions.registerAll(spark)
     // a replacing registration stores a fresh ExpressionInfo
     val before = registry.lookupFunction(id)
-    WktCentroid.register(spark)
+    GraftFunctions.registerAll(spark)
     assert(before.isDefined && registry.lookupFunction(id).exists(_ eq before.get))
   }
 }
