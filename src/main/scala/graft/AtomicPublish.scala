@@ -7,7 +7,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Crash-safe table publication. A plain `mode("overwrite")` onto the
@@ -67,14 +67,16 @@ object AtomicPublish {
   }
 
   /** Latest-wins upsert of `updates` on `keys` into the table at
-    * `targetDir` ([[graft.operators.CoreQueries.upsert]]), published by
-    * [[overwrite]]; with no table yet, `updates` is the table. The target
-    * is read through `updates`' schema ([[readIfExists]]): no inference
-    * job, and a target column `updates` lacks fails the merge. Returns
-    * the published schema. */
-  def upsert(updates: DataFrame, targetDir: String, keys: Seq[String]): StructType = {
-    val merged = readIfExists(updates.sparkSession, targetDir, Some(updates.schema))
-      .fold(updates)(CoreQueries.upsert(_, updates, keys))
+    * `targetDir` ([[graft.operators.CoreQueries.upsertInto]]), published
+    * by [[overwrite]]. A non-empty `order` dedups `updates` by key inside
+    * the merge window; with no table yet, `updates` so deduped is the
+    * table. The target is read through `updates`' schema
+    * ([[readIfExists]]): no inference job, and a target column `updates`
+    * lacks fails the merge. Returns the published schema. */
+  def upsert(updates: DataFrame, targetDir: String, keys: Seq[String],
+      order: Seq[Column] = Nil): StructType = {
+    val merged = CoreQueries.upsertInto(
+      readIfExists(updates.sparkSession, targetDir, Some(updates.schema)), updates, keys, order)
     overwrite(merged, targetDir)
     merged.schema
   }

@@ -10,14 +10,18 @@ import org.apache.spark.sql.functions._
   *
   *   paged source → synth key (P7) → timestamp normalize (P2) → status
   *   derive + expired drop (P3/F8) → WKT → lat/lon (P4) → county map
-  *   lookup (P5) → composite dedup (D1) → latest-wins dedup (D2) →
-  *   status rank column → keyed upsert (S6)
+  *   lookup (P5) → status rank column → composite dedup (D1) →
+  *   latest-wins dedup (D2) + keyed upsert (S6)
   *
   * Everything is a single logical plan per stage — Catalyst fuses the
   * scalar stages into one WholeStageCodegen pass over the scan, and only
-  * the two dedups shuffle. No stage sorts: the upsert re-shuffles by key,
-  * so a global order here would be thrown away; the ranked sort (O1) is
-  * the dashboard's table view and `q_ranked_sort`'s.
+  * the merge shuffles: [[runIngest]] reads the day's pages as one
+  * partition, so D1 sorts in place, and D2 and the upsert share one
+  * window on the key ([[graft.operators.CoreQueries.upsert]] with an
+  * order), so a daily ingest into an existing table runs two jobs. No
+  * stage orders the rows globally: the merge re-shuffles by key, so a
+  * global order here would be thrown away; the ranked sort (O1) is the
+  * dashboard's table view and `q_ranked_sort`'s.
   */
 object Pipeline {
 
@@ -38,48 +42,58 @@ object Pipeline {
   def normalizeTs(c: Column): Column =
     try_to_timestamp(regexp_replace(c, "Z$", "")).cast("timestamp_ntz")
 
-  /** Normalize flattened incident rows (reference
-    * src/trv/transform.py:49-137). `nowLit` must be pinned by the caller
-    * for deterministic status derivation. */
-  def normalizeIncidents(spark: SparkSession, raw: DataFrame, nowLit: Column): DataFrame = {
-    val keyed = raw
-      // P7 synthetic key
-      .withColumn("incident_id",
-        coalesce(col("deviation_id"),
-          concat_ws(":", col("situation_id"), col("start_time"))))
-      // P2/P8 normalize
-      .withColumn("start_ts", normalizeTs(col("start_time")))
-      .withColumn("end_ts", normalizeTs(col("end_time")))
-      .withColumn("modified_ts", normalizeTs(col("modified_time")))
-      // P3 status + F8 expired drop
-      .withColumn("status", CoreQueries.statusOf(col("start_ts"), col("end_ts"), nowLit))
-      .where(col("status").isNotNull)
-      // F1 non-empty message guard
-      .where(length(trim(coalesce(col("message"), lit("")))) > 0)
-      // P4 geometry → centroid (full WKT incl. lines/polygons)
-      .withColumn("geo", WktCentroid.column(col("wkt")))
-      .withColumn("latitude", col("geo.lat"))
-      .withColumn("longitude", col("geo.lon"))
-      .drop("geo")
+  /** D2's key and order: one row per incident, the latest modification. */
+  private val incidentKey = Seq("incident_id")
+  private val latestFirst = Seq(col("modified_ts").desc)
+
+  /** Normalized incident rows before the latest-wins dedup (reference
+    * src/trv/transform.py:49-115): the scalar stages, the county lookup,
+    * the status rank and D1. The derived columns are built in one
+    * projection over the source (a chain of `withColumn`s analyses the
+    * plan once per column); a second one only unpacks the centroid.
+    * `nowLit` must be pinned by the caller for deterministic status
+    * derivation. Published order: county_no, the other source columns,
+    * the derived columns. */
+  def normalizedRows(raw: DataFrame, nowLit: Column): DataFrame = {
+    // P2/P8 normalize, P3 status
+    val startTs = normalizeTs(col("start_time"))
+    val endTs = normalizeTs(col("end_time"))
+    val status = CoreQueries.statusOf(startTs, endTs, nowLit)
     // P5 county lookup with display fallback: a literal map, so a
-    // 21-entry table costs no join (a missing or NULL key gives NULL).
-    // Published order: county_no first, the names after longitude.
-    val withCounty = keyed
-      .select(col("county_no") +: keyed.columns.toSeq.filter(_ != "county_no").map(col) :+
-        element_at(typedLit(countyNames), col("county_no")).as("county_name"): _*)
-      .withColumn("county_display",
-        coalesce(col("county_name"), lit("Okänt län")))
-    // D1 composite dedup (order pinned), then D2 latest-wins by key
-    val d1 = CoreQueries.latestWins(withCounty,
+    // 21-entry table costs no join (a missing or NULL key gives NULL)
+    val county = element_at(typedLit(countyNames), col("county_no"))
+    val derived = Seq(
+      // P7 synthetic key
+      coalesce(col("deviation_id"),
+        concat_ws(":", col("situation_id"), col("start_time"))).as("incident_id"),
+      startTs.as("start_ts"), endTs.as("end_ts"),
+      normalizeTs(col("modified_time")).as("modified_ts"), status.as("status"),
+      // P4 geometry → centroid (full WKT incl. lines/polygons)
+      WktCentroid.column(col("wkt")).as("geo"),
+      county.as("county_name"), coalesce(county, lit("Okänt län")).as("county_display"),
+      // O1's rank key, part of the published schema
+      when(status === "PÅGÅR", 0).when(status === "KOMMANDE", 1).otherwise(9).as("status_rank"))
+    val source = col("county_no") +: raw.columns.toSeq.filter(_ != "county_no").map(col)
+    // F8 expired drop, F1 non-empty message guard
+    val live = raw.select(source ++ derived: _*)
+      .where(col("status").isNotNull && length(trim(coalesce(col("message"), lit("")))) > 0)
+    // the centroid is computed once per row, then split into its fields
+    val rows = live.select(live.columns.toSeq.flatMap {
+      case "geo" => Seq(col("geo.lat").as("latitude"), col("geo.lon").as("longitude"))
+      case c => Seq(col(c))
+    }: _*)
+    // D1 composite dedup (order pinned)
+    CoreQueries.latestWins(rows,
       Seq("message", "location_descriptor", "start_time", "end_time"),
       Seq(col("modified_ts").asc, col("incident_id").asc))
-    val d2 = CoreQueries.latestWins(d1,
-      Seq("incident_id"), Seq(col("modified_ts").desc))
-    // O1's rank key, part of the published schema
-    d2.withColumn("status_rank",
-      when(col("status") === "PÅGÅR", 0)
-        .when(col("status") === "KOMMANDE", 1).otherwise(9))
   }
+
+  /** Normalize flattened incident rows (reference
+    * src/trv/transform.py:49-137): [[normalizedRows]], then D2 latest-wins
+    * by key. `nowLit` must be pinned by the caller for deterministic
+    * status derivation. */
+  def normalizeIncidents(spark: SparkSession, raw: DataFrame, nowLit: Column): DataFrame =
+    CoreQueries.latestWins(normalizedRows(raw, nowLit), incidentKey, latestFirst)
 
   /** Full ingest: paged XML source → normalize → latest-wins upsert into a
     * parquet target (reference §3.1 extract/transform/load). Idempotent:
@@ -93,8 +107,13 @@ object Pipeline {
     val raw = spark.read.format("graft.sources.PagedXmlSource")
       .option("path", xmlPath).option("pageSize", pageSize.toString)
       .option("maxPages", maxPages.toString).load()
+    // The day's pages read as one partition, so D1 sorts in place and
+    // needs no exchange: the source's planner already parses the whole
+    // feed in one JVM to count its pages, so a feed is bounded by one
+    // JVM's memory either way. D2 rides the merge window, so the merge,
+    // over the table-sized data, is the op's one shuffle.
     val published = AtomicPublish.upsert(
-      normalizeIncidents(spark, raw, nowLit), targetDir, Seq("incident_id"))
+      normalizedRows(raw.coalesce(1), nowLit), targetDir, incidentKey, latestFirst)
     // read back through the published schema: no inference job
     spark.read.schema(published).parquet(targetDir)
   }

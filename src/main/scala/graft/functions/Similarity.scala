@@ -3055,7 +3055,7 @@ object Similarity {
       val docs = hit.select(col("thr_milli"), col("id1").as("id"))
         .unionAll(hit.select(col("thr_milli"), col("id2").as("id")))
         .groupBy("thr_milli").agg(countDistinct("id").as("docs_affected"))
-      broadcast(grid).join(pairs, Seq("thr_milli"), "left")
+      grid.join(pairs, Seq("thr_milli"), "left")
         .join(docs, Seq("thr_milli"), "left")
         .select(col("thr_milli"),
           coalesce(col("dup_pairs"), lit(0L)).as("dup_pairs"),

@@ -54,12 +54,26 @@ object CoreQueries {
   /** Keyed upsert as a deterministic merge (reference
     * src/trv/load_sqlite.py:43-62 ON CONFLICT DO UPDATE): union target and
     * updates, then latest-wins by key preferring the update side.
+    *
+    * A non-empty `order` also dedups the batch in the same window: among
+    * the update rows of one key the max by `order` wins, so
+    * `upsert(t, u, k, order)` ≡ `upsert(t, latestWins(u, k, order), k)`
+    * with one shuffle on the key instead of two. `order` refers to
+    * columns by name (it is resolved against the union).
     */
-  def upsert(target: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame = {
+  def upsert(target: DataFrame, updates: DataFrame, keys: Seq[String],
+      order: Seq[Column] = Nil): DataFrame = {
     val merged = target.withColumn("__src", lit(0))
       .unionByName(updates.withColumn("__src", lit(1)))
-    latestWins(merged, keys, Seq(col("__src").desc)).drop("__src")
+    latestWins(merged, keys, col("__src").desc +: order).drop("__src")
   }
+
+  /** [[upsert]] into a table that may not exist yet: with no `target`,
+    * `updates` deduped by `order` (or as given, when `order` is empty). */
+  def upsertInto(target: Option[DataFrame], updates: DataFrame, keys: Seq[String],
+      order: Seq[Column]): DataFrame =
+    target.fold(if (order.isEmpty) updates else latestWins(updates, keys, order))(
+      upsert(_, updates, keys, order))
 
   /** Multi-column case-insensitive free-text OR-search with pandas
     * `na=False` semantics (reference src/app/streamlit_app.py:238-248):

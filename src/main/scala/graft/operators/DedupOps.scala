@@ -286,10 +286,12 @@ object DedupOps {
     // eager cut (not cache) at every step ([[Loop.cutLineage]]): an
     // iterative DataFrame loop otherwise grows its logical plan each
     // round, and the accumulating lineage blows up analysis time and
-    // driver heap. Cut pre-partitioned on the per-round join key: every
-    // propagation round joins edges on id2, so paying one extra exchange
-    // here removes the edges-side shuffle from every iteration
-    // (both checkpoint kinds preserve partitioning)
+    // JVM heap. The cut is pre-partitioned on the per-round join key
+    // (id2), but under AQE (the default) a cut frame reports
+    // UnknownPartitioning(0) — with AQE off it reports
+    // hashpartitioning(id2, n) — so every round still plans an exchange
+    // of the edges by id2 (`graft.Probe plans q_dup_clusters`); the
+    // layout pays only with AQE off
     val edges = Loop.cutLineage(pairs.select(col("id1"), col("id2"))
       .unionByName(pairs.select(col("id2").as("id1"), col("id1").as("id2")))
       .distinct().repartition(col("id2")))

@@ -76,17 +76,16 @@ object Loop {
     * frame every round joins on a SINGLE fixed key — the data-sized edge
     * frame is the motivating case and the naming case, but a node-sized
     * base frame read k times on the same key (q_ppr's restart frame,
-    * nine consumers on `id`) earns the same treatment: the partitioned
-    * layout kills the per-round exchange wherever the OTHER side stops
-    * broadcasting, and the build-time sort below hands sort-merge both
-    * requirements whichever side of the join the cache lands on.
+    * nine consumers on `id`) earns the same treatment.
     *
     * Hash-partition the static frame by the loop's join key ONCE and
-    * persist MEMORY_AND_DISK. Every round's join then reuses the cached
-    * layout and shuffles only the skinny evolving side (rank / frontier
-    * / survivor set) — the GraphX contract. Without this, each round
-    * re-scans AND re-exchanges the data-sized static frame: k rounds =
-    * k full shuffles of the one input that grows with the corpus.
+    * persist MEMORY_AND_DISK. Without this, each round re-scans and
+    * re-decodes the data-sized static frame. The layout itself is reused
+    * only where the round broadcasts the evolving side (no exchange on
+    * either side): under AQE (the default) a persisted frame reports
+    * UnknownPartitioning(0), not hashpartitioning(key, n), so a round
+    * that shuffles the evolving side re-exchanges the cache too; with
+    * AQE off it keeps the layout and only the skinny side shuffles.
     * Measured (round 13, 100× probes): q_ppr 131 → 56.6 s,
     * q_weighted_pagerank 70.3 → 40.7 s. A `bucketBy(key).saveAsTable`
     * layout is NOT a substitute — it avoids the exchange but not the
@@ -115,10 +114,11 @@ object Loop {
         // sorted ONCE at cache build: at bench scale the evolving side
         // broadcasts and the ordering is irrelevant, but at the scale
         // where it stops broadcasting the per-round join plans as
-        // sort-merge — InMemoryRelation preserves outputOrdering, so a
-        // pre-sorted cache hands SMJ both the partitioning AND the
-        // order and only the skinny evolving side sorts per round,
-        // instead of the data-sized edge frame re-sorting k times
+        // sort-merge — with AQE off, InMemoryRelation preserves
+        // outputOrdering, so a pre-sorted cache hands SMJ both the
+        // partitioning AND the order and only the skinny evolving side
+        // sorts per round, instead of the data-sized edge frame
+        // re-sorting k times (under AQE the cache is re-exchanged, above)
         .sortWithinPartitions(key))
   }
 

@@ -14,9 +14,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Spark mapping: Structured Streaming micro-batches with an event-time
   * watermark bounding dedup state, `dropDuplicates` on the key within the
   * stream, and a `foreachBatch` latest-wins merge into the target table.
-  * The merge itself is the batch `CoreQueries.upsert` — identical
-  * semantics batch and streaming, so the batch oracle covers the merge
-  * logic and the streaming test covers the plumbing.
+  * The merge itself is the batch `CoreQueries.upsert`, with the
+  * micro-batch's own latest-wins dedup folded into its one window (one
+  * shuffle on the key) — identical semantics batch and streaming, so the
+  * batch oracle covers the merge logic and the streaming test covers the
+  * plumbing.
   */
 object IncrementalUpsert {
 
@@ -27,8 +29,7 @@ object IncrementalUpsert {
     */
   def mergeBatch(batch: DataFrame, targetDir: String, keys: Seq[String],
       versionCol: String): Unit =
-    graft.AtomicPublish.upsert(
-      CoreQueries.latestWins(batch, keys, Seq(col(versionCol).desc)), targetDir, keys)
+    graft.AtomicPublish.upsert(batch, targetDir, keys, Seq(col(versionCol).desc))
 
   /** Wire a streaming DataFrame into the watermark → dropDuplicates →
     * foreachBatch-merge pipeline. `eventTimeCol` bounds the dedup state
@@ -56,14 +57,10 @@ object IncrementalUpsert {
     * version are unaffected, `readLatest` sees the same rows. */
   def mergeBatchVersioned(spark: SparkSession, batch: DataFrame, root: String,
       keys: Seq[String], versionCol: String): Long = {
-    val deduped = CoreQueries.latestWins(
-      batch, keys, Seq(col(versionCol).desc))
-    val merged = graft.Snapshots.latestVersion(spark, root) match {
-      case Some(v) => CoreQueries.upsert(
-        graft.Snapshots.readVersion(spark, root, v), deduped, keys)
-      case None => deduped
-    }
-    graft.Snapshots.publish(merged, root)
+    val target = graft.Snapshots.latestVersion(spark, root)
+      .map(graft.Snapshots.readVersion(spark, root, _))
+    graft.Snapshots.publish(
+      CoreQueries.upsertInto(target, batch, keys, Seq(col(versionCol).desc)), root)
   }
 
   /** [[run]] with versioned publication: every micro-batch becomes a

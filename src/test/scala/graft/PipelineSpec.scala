@@ -115,11 +115,44 @@ class PipelineSpec extends SparkSpec {
     assert(byId("d1").getString(3) == "Okänt län")
     assert(byId("d2").isNullAt(1) && byId("d2").isNullAt(2))
     assert(byId("d2").getString(3) == "Okänt län")
-    // published order: county_no first, the two names right after longitude
-    val cols = out.columns.toSeq
-    assert(cols.head == "county_no")
-    assert(cols.slice(cols.indexOf("longitude"), cols.indexOf("longitude") + 3) ==
-      Seq("longitude", "county_name", "county_display"))
+  }
+
+  /** The published table's columns, in order, with their types. */
+  private val publishedSchema = Seq(
+    "county_no" -> "int", "situation_id" -> "string", "deviation_id" -> "string",
+    "message" -> "string", "message_type" -> "string",
+    "location_descriptor" -> "string", "road_number" -> "string",
+    "start_time" -> "string", "end_time" -> "string", "modified_time" -> "string",
+    "publication_time" -> "string", "wkt" -> "string", "incident_id" -> "string",
+    "start_ts" -> "timestamp_ntz", "end_ts" -> "timestamp_ntz",
+    "modified_ts" -> "timestamp_ntz", "status" -> "string", "latitude" -> "double",
+    "longitude" -> "double", "county_name" -> "string", "county_display" -> "string",
+    "status_rank" -> "int")
+
+  private def namesAndTypes(df: DataFrame): Seq[(String, String)] =
+    df.schema.fields.toSeq.map(f => f.name -> f.dataType.simpleString)
+
+  test("the published schema: every name, type and position") {
+    val dir = tempDir("graft-pipe-schema") + "/tgt"
+    Pipeline.runIngest(spark, xmlPath, dir, now)
+    val out = Pipeline.runIngest(spark, xmlPath, dir, now)
+    assert(namesAndTypes(out) == publishedSchema)
+    assert(namesAndTypes(spark.read.parquet(dir)) == publishedSchema)
+    val county = when(col("id") === 0, 1)
+    assert(namesAndTypes(Pipeline.normalizeIncidents(spark, rawRows(2, county), now)) ==
+      publishedSchema)
+  }
+
+  test("an ingest into an existing table shuffles once: D1 sorts in place, D2 rides the merge") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Plans extends AdaptiveSparkPlanHelper
+    val dir = tempDir("graft-pipe-shuffles") + "/tgt"
+    Pipeline.runIngest(spark, xmlPath, dir, now)
+    val (_, executed) = PlanText.captured(spark)(Pipeline.runIngest(spark, xmlPath, dir, now))
+    val plans = executed.map(_._2.executedPlan)
+    val shuffles = plans.flatMap(Plans.collect(_) { case e: ShuffleExchangeExec => e })
+    assert(shuffles.size == 1, plans.mkString("\n"))
   }
 
   test("published parts: near-unique columns are plain, categorical ones keep dictionaries") {

@@ -57,6 +57,27 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("one-window merge: an ordered upsert equals the upsert of the deduped batch") {
+    val keys = Seq("k")
+    val order = Seq(col("v").desc, col("tag").desc)
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.orderBy("k", "v", "tag").collect().toSeq
+    for (((t, u), i) <- samples(Gen.zip(rowsGen, rowsGen), 5).zipWithIndex) {
+      // 30 rows over 6 keys: every batch holds several versions of a key
+      assert(u.groupBy(_._1).values.exists(_.size > 1))
+      val target = CoreQueries.latestWins(t.toDF("k", "v", "tag"), keys, order)
+      val updates = u.toDF("k", "v", "tag")
+      val deduped = CoreQueries.latestWins(updates, keys, order)
+      assert(sorted(CoreQueries.upsert(target, updates, keys, order)) ==
+        sorted(CoreQueries.upsert(target, deduped, keys)), s"sample $i")
+      // no target: the batch deduped by the same order
+      assert(sorted(CoreQueries.upsertInto(None, updates, keys, order)) == sorted(deduped),
+        s"sample $i")
+      val dir = tempDir("graft-prop-upsert") + "/tgt"
+      AtomicPublish.upsert(updates, dir, keys, order)
+      assert(sorted(spark.read.parquet(dir)) == sorted(deduped), s"sample $i")
+    }
+  }
+
   test("status trichotomy: every (start, end) maps to exactly one disposition") {
     val pairGen = Gen.listOfN(20, Gen.zip(Gen.choose(0L, 100L), Gen.option(Gen.choose(0L, 100L))))
     for (pairs <- samples(pairGen, 5) if pairs.nonEmpty) {
